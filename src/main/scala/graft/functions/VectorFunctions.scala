@@ -812,7 +812,7 @@ case class PointInConvexPoly(first: Expression, second: Expression, third: Expre
     val n = verts.numElements()
     var i = 0
     while (i < n) {
-      if (verts.isNullAt(i)) return null
+      if (verts.isNullAt(i) || verts.isNullAt((i + 1) % n)) return null
       val vi = verts.getStruct(i, 2)
       val vj = verts.getStruct((i + 1) % n, 2)
       if (vi.isNullAt(0) || vi.isNullAt(1) || vj.isNullAt(0) || vj.isNullAt(1))

@@ -76,6 +76,27 @@ private[graft] object Checkpoints {
         (ck, s)
     }
 
+  /** [[sizedLoop]]'s partition rule, for callers that pass the count to
+    * their own plan instead of the session:
+    * min(session partitions, max(4, ⌈estimate / graft.loop.partitionBytes⌉)),
+    * the estimate taken from `input`'s optimized-plan statistics (no job).
+    */
+  def sizedPartitions(input: DataFrame): Int = {
+    val spark = input.sparkSession
+    val est: BigInt = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    // 1 MB of PLAN-estimated bytes per partition: plan estimates are
+    // compressed-file-sized for scans, so 1 MB estimated ≈ 4–10 MB of
+    // in-flight rows — small uniform tasks, but an order of magnitude
+    // fewer of them than the session default on loop-sized state.
+    // (Measured on q260's 1.2M-edge label propagation: 32 MB/partition
+    // gave p=4 and under-parallelized the real per-round aggregates —
+    // a wash against baseline; 1 MB keeps those rounds at p≈11.)
+    val perPart = spark.conf.get(
+      "graft.loop.partitionBytes", (1L * 1024 * 1024).toString).toLong
+    val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    ((est + perPart - 1) / perPart).max(BigInt(4)).min(BigInt(defaultP)).toInt
+  }
+
   /** Run an ITERATIVE operator's loop under SIZE-DERIVED parallelism
     * (r19, guide §2.2 "fewer, larger partitions" + the task rule
     * "derive partitioning from input size, not a constant"): the
@@ -101,22 +122,16 @@ private[graft] object Checkpoints {
     * plans estimate Long.MaxValue and never gate). Session confs are
     * restored in finally; loops run sequentially in bench/verify
     * (documented non-reentrancy caveat of the scratch dirs applies
-    * here too).
+    * here too). Callers: the loops above, the ANN/selection batch
+    * actions and `TxTable.deleteKeys`. `TxTable.mergeLatest` does NOT
+    * run under it: a streaming sink commits while other queries share
+    * the session, so it passes [[sizedPartitions]] to its own plan and
+    * never touches session config.
     */
   def sizedLoop[T](input: DataFrame)(body: => T): T = {
     val spark = input.sparkSession
-    val est: BigInt = input.queryExecution.optimizedPlan.stats.sizeInBytes
-    // 1 MB of PLAN-estimated bytes per partition: plan estimates are
-    // compressed-file-sized for scans, so 1 MB estimated ≈ 4–10 MB of
-    // in-flight rows — small uniform tasks, but an order of magnitude
-    // fewer of them than the session default on loop-sized state.
-    // (Measured on q260's 1.2M-edge label propagation: 32 MB/partition
-    // gave p=4 and under-parallelized the real per-round aggregates —
-    // a wash against baseline; 1 MB keeps those rounds at p≈11.)
-    val perPart = spark.conf.get(
-      "graft.loop.partitionBytes", (1L * 1024 * 1024).toString).toLong
     val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val p = math.max(4, ((est + perPart - 1) / perPart).min(BigInt(defaultP)).toInt)
+    val p = sizedPartitions(input)
     if (p >= defaultP) body // big state: session partitioning + AQE untouched
     else {
       // AQE off only in the TINY zone (p ≤ graft.loop.aqeOffMaxPartitions,

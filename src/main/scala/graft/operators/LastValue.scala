@@ -1,7 +1,16 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  MapType, StructType}
+import org.apache.spark.sql.graftshim.StreamingShim
 
 /** Last-value-per-key — the reference's core materialization semantic.
   *
@@ -25,6 +34,72 @@ object LastValue {
     df.groupBy(keyCols.map(col): _*)
       .agg(max_by(payload, ord).as("__latest"))
       .select(col("__latest.*"))
+  }
+
+  /** Hash twin of [[latestPerKey]] for one-shot callers (the TxTable
+    * commit): ONE hash exchange on `keyCols` into exactly
+    * `numPartitions` partitions (`repartition(n, keys)`, which AQE does
+    * not coalesce), then each task keeps the greatest-`orderCols` row
+    * per key in a hash map. No sort and no aggregate operator: max_by
+    * over a struct plans as Sort → SortAggregate on both sides of its
+    * shuffle.
+    *
+    * Same winners as [[latestPerKey]]: keys compare the way `groupBy`
+    * groups them (NULLs form one group; for float and double keys −0.0
+    * equals 0.0 and all NaNs are equal — Spark's hash partitioning
+    * already routes those together, and the map key is normalised the
+    * same way; a key with floats nested in a struct, array or map is
+    * refused), order columns compare ascending with NULLs first, and a
+    * strict `>` keeps the first row seen on a tie, as max_by does.
+    *
+    * Not lazy: the result is a frame over the computed RDD, so under AQE
+    * the exchange runs when this is called, and the caller's action is
+    * one more job. The frame's size estimate is the session default. A
+    * task holds one row per key it owns, so `numPartitions` must be
+    * sized to the input ([[Checkpoints.sizedPartitions]]).
+    */
+  def latestPerKeyHashed(
+      df: DataFrame,
+      keyCols: Seq[String],
+      orderCols: Seq[String],
+      numPartitions: Int): DataFrame = {
+    val schema = df.schema
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def ref(c: String): BoundReference = {
+      val i = schema.fieldNames.indexWhere(resolver(_, c))
+      require(i >= 0, s"latestPerKeyHashed: no column $c in ${schema.simpleString}")
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    def nestedFloat(dt: DataType): Boolean = dt match {
+      case FloatType | DoubleType => true
+      case s: StructType => s.fields.exists(f => nestedFloat(f.dataType))
+      case a: ArrayType => nestedFloat(a.elementType)
+      case m: MapType => nestedFloat(m.keyType) || nestedFloat(m.valueType)
+      case _ => false
+    }
+    val keyExprs = keyCols.map(ref).map { r =>
+      r.dataType match {
+        case FloatType | DoubleType => NormalizeNaNAndZero(r)
+        case dt =>
+          require(!nestedFloat(dt),
+            s"latestPerKeyHashed: key ${schema(r.ordinal).name} nests float values")
+          r
+      }
+    }
+    val orderExprs = orderCols.map(c => SortOrder(ref(c), Ascending))
+    val rows = df.repartition(numPartitions, keyCols.map(col): _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val keyOf = UnsafeProjection.create(keyExprs)
+        val ordering = new InterpretedOrdering(orderExprs)
+        val best = new java.util.HashMap[UnsafeRow, InternalRow]()
+        it.foreach { row =>
+          val k = keyOf(row)
+          val cur = best.get(k)
+          if (cur == null || ordering.gt(row, cur)) best.put(k.copy(), row.copy())
+        }
+        best.values.iterator.asScala
+      }
+    StreamingShim.ofInternalRows(df.sparkSession, rows, schema)
   }
 
   /** Skew-safe variant: pre-reduce each key within `saltBuckets` salted

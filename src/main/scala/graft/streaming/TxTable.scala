@@ -272,7 +272,8 @@ object TxTable {
 
   /** One partition's data dir for a commit's add list: write it in ONE
     * Spark job and drop it again if the slice came out EMPTY (the row
-    * count rides the write's Observation). Replaces the
+    * count rides the write's Observation and is returned with the
+    * stats). Replaces the
     * `if (part.isEmpty) None else write` pattern, which cost an extra
     * job per (partition × commit) on every merge/delete — measured as
     * the dominant fixture cost of the q251 IVM capstone (VERDICT r16
@@ -280,9 +281,9 @@ object TxTable {
     * references it until the commit that would have listed it lands.
     */
   private def writePartition(part: DataFrame, absPath: String,
-      statCols: Seq[(String, Char)]): Option[String] = {
+      statCols: Seq[(String, Char)]): Option[(String, Long)] = {
     val (stats, n) = writeWithStats(part, absPath, statCols)
-    if (n > 0) Some(stats)
+    if (n > 0) Some((stats, n))
     else {
       // delete through the Hadoop FileSystem for the path's scheme
       // (ADVICE r17): a java.io.File recursive delete only works on the
@@ -312,7 +313,7 @@ object TxTable {
     * `Observation` while the expression count stays bounded; past the
     * bound they come from one read-back aggregation over the written
     * files (2 jobs total, the [[stageZOrdered]] pattern) instead of
-    * P write jobs. Returns (partition, rel, statsLine) for each
+    * P write jobs. Returns (partition, rel, statsLine, rows) for each
     * partition that produced rows — empty slices write no dir and get
     * no add line, exactly like the old empty-slice drop.
     *
@@ -326,13 +327,13 @@ object TxTable {
       partitionCol: String,
       affected: Seq[String],
       tablePath: String,
-      statCols: Seq[(String, Char)]): Seq[(String, String, String)] = {
+      statCols: Seq[(String, Char)]): Seq[(String, String, String, Long)] = {
     if (affected.isEmpty) return Nil
     if (affected.exists(_.isEmpty) || df.columns.contains("__p"))
       return affected.flatMap { p =>
         val rel = s"data/${UUID.randomUUID()}"
         writePartition(df.filter(col(partitionCol) === p),
-          s"$tablePath/$rel", statCols).map(st => (p, rel, st))
+          s"$tablePath/$rel", statCols).map { case (st, n) => (p, rel, st, n) }
       }
     val rel = s"data/${UUID.randomUUID()}"
     val abs = s"$tablePath/$rel"
@@ -403,8 +404,8 @@ object TxTable {
     // only partitions that produced rows have dirs (partitionBy writes
     // nothing for an empty group) — and only they get add lines
     escaped.flatMap { case (p, esc) =>
-      stats.get(p).filter(_._1 > 0).map { case (_, st) =>
-        (p, s"$rel/__p=$esc", st)
+      stats.get(p).filter(_._1 > 0).map { case (n, st) =>
+        (p, s"$rel/__p=$esc", st, n)
       }
     }
   }
@@ -1385,6 +1386,20 @@ object TxTable {
     * be one of `keys`' prefixes in spirit — here it is the physical
     * pruning unit (the reference's collection-per-server).
     *
+    * One commit is three Spark jobs and no sort:
+    *   1. the affected partitions, from one narrow per-task distinct
+    *      over the persisted batch (this job also fills the cache);
+    *   2. the exchange of `current ∪ batch` on `keys`
+    *      ([[LastValue.latestPerKeyHashed]]), into
+    *      [[graft.operators.Checkpoints.sizedPartitions]] partitions of
+    *      that plan — a count passed to the plan, never set on the
+    *      session, so concurrent queries on the session are unaffected;
+    *   3. the write: one partition goes to a single directory with no
+    *      `partitionBy` (no sort before the writer), several fan out
+    *      through one `partitionBy` write.
+    * The commit's `op` line records the attempt number, the rows written
+    * and the attempt's wall time in ms ([[history]] `detail`).
+    *
     * Returns the committed version.
     */
   def mergeLatest(
@@ -1402,23 +1417,21 @@ object TxTable {
     // rather than NPE the micro-batch, which would wedge a restarting
     // stream on the same checkpointed batch forever.
     //
-    // NO batch pre-aggregation (r18): the old shape ran
-    // latestPerKey(batch) first and merged latestPerKey(current ∪ that) —
-    // a whole extra hash aggregation (two AQE stage jobs) per commit.
-    // latestPerKey is max_by over a total per-key order, so
-    // latestPerKey(current ∪ batch) picks the identical winner in ONE
-    // aggregation (winner of the union = winner among winners; with
+    // NO batch pre-aggregation (r18): the last-value winner of
+    // current ∪ batch equals the winner among the batch's winners and
+    // the table's row, so one reduction over the union suffices (with
     // order ties the contract is already "caller supplies tie-break
-    // columns", unchanged). Shuffle volume is unchanged at scale:
-    // max_by partial aggregation still reduces map-side to at most one
-    // row per key per input partition. Persisted because foreachBatch
-    // sinks pass micro-batch frames that are consumed here by the
-    // affected-partition collect and the merge write — one evaluation,
-    // as before.
+    // columns"). Persisted because foreachBatch sinks pass micro-batch
+    // frames that are consumed here by the affected-partition pass and
+    // the merge — one evaluation of the batch.
     val batch0 = batch.filter(col(partitionCol).isNotNull).persist()
     try {
-      val affected = batch0.select(partitionCol).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+      val affected = batch0.select(partitionCol).queryExecution.toRdd
+        .mapPartitions { it =>
+          val seen = scala.collection.mutable.HashSet[String]()
+          it.foreach(r => seen += r.getString(0))
+          seen.iterator
+        }.collect().distinct.sorted.toSeq
       var attempt = 0
       // constraints come from each attempt's snapshot: a concurrently
       // added CHECK must gate the retry, not be bypassed by a pre-loop
@@ -1430,6 +1443,7 @@ object TxTable {
       // every commit.
       var enforcedFor: Map[String, String] = null
       while (true) {
+        val t0 = System.nanoTime()
         val snap = snapshot(tablePath)
         if (affected.nonEmpty && snap.constraints != enforcedFor) {
           enforceConstraints(LastValue.latestPerKey(batch0, keys, order),
@@ -1450,25 +1464,23 @@ object TxTable {
             s"mergeLatest batch has columns ${unknown.mkString(",")} unknown to " +
               "the table — evolve the schema via mergeInto(mergeSchema = true) first")
         }
-        val merged = LastValue.latestPerKey(
-          current.fold(batch0: DataFrame)(
-            _.unionByName(batch0, allowMissingColumns = true)), keys, order)
-        // one data directory per affected partition, written before the
-        // commit references it in ONE fanned write job (unique names
-        // make the dirs invisible until, and unless, the commit lands).
-        // No persist: the single write is merged's only consumer.
-        // SIZE-DERIVED parallelism for the commit's write action (r19):
-        // the merged plan's estimate covers current files + batch, so a
-        // fixture-scale commit runs its aggregation+write as one small
-        // no-AQE job instead of several 32-task stage jobs, while a
-        // production-scale merge falls through untouched
-        // ([[graft.operators.Checkpoints.sizedLoop]] — measured A/B in
-        // its scaladoc). latestPerKey is max_by over a caller-supplied
-        // total order, so the winner set is partitioning-independent.
-        val statCols = eligibleStats(merged, statsCols)
-        val adds = graft.operators.Checkpoints.sizedLoop(merged) {
-          writePartitions(merged, partitionCol, affected,
-            tablePath, statCols)
+        val union = current.fold(batch0: DataFrame)(
+          _.unionByName(batch0, allowMissingColumns = true))
+        // the kernel is eager (its exchange runs under AQE when called),
+        // so an empty batch skips it and commits no data, as before
+        def merged = LastValue.latestPerKeyHashed(union, keys, order,
+          graft.operators.Checkpoints.sizedPartitions(union))
+        // data dirs are written before the commit references them
+        // (unique names keep them invisible until, and unless, the
+        // commit lands)
+        val statCols = eligibleStats(union, statsCols)
+        val adds = affected match {
+          case Seq() => Nil
+          case Seq(p) =>
+            val rel = s"data/${UUID.randomUUID()}"
+            writePartition(merged, s"$tablePath/$rel", statCols).toSeq
+              .map { case (st, n) => (p, rel, st, n) }
+          case _ => writePartitions(merged, partitionCol, affected, tablePath, statCols)
         }
         // declare the table schema on the first commit that finds none
         // (r18): an undeclared table pays an eager parquet footer-
@@ -1483,11 +1495,13 @@ object TxTable {
           if (snap.schemaJson.nonEmpty) Nil
           else {
             val nullable = org.apache.spark.sql.types.StructType(
-              merged.schema.fields.map(_.copy(nullable = true)))
+              union.schema.fields.map(_.copy(nullable = true)))
             Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
           }
-        val lines = Seq(s"op\tmergeLatest\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st) => addLine(p, rel, st) } ++
+        val ms = (System.nanoTime() - t0) / 1000000
+        val lines = Seq(s"op\tmergeLatest\tattempt\t$attempt" +
+            s"\trows\t${adds.map(_._4).sum}\tms\t$ms") ++
+          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
           removedFiles.map(f => s"remove\t$f") ++ schemaLine
         try {
           publishCommit(tablePath, snap.version + 1, lines)
@@ -1558,13 +1572,14 @@ object TxTable {
         if (current.join(del, keys, "left_semi").isEmpty) return snap.version
         val kept = current.join(del, keys, "left_anti")
         val statCols = eligibleStats(kept, statsCols)
-        // size-derived parallelism for the rewrite (r19) — see mergeLatest
+        // size-derived parallelism for the rewrite (r19) — measured A/B
+        // in [[graft.operators.Checkpoints.sizedLoop]]'s scaladoc
         val adds = graft.operators.Checkpoints.sizedLoop(kept) {
           writePartitions(kept, partitionCol, affected,
             tablePath, statCols)
         }
         val lines = Seq(s"op\tdeleteKeys\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st) => addLine(p, rel, st) } ++
+          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
           removedFiles.map(f => s"remove\t$f")
         try {
           publishCommit(tablePath, snap.version + 1, lines)
@@ -1736,7 +1751,7 @@ object TxTable {
             Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
           }
         val lines = Seq(s"op\tmergeInto\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st) => addLine(p, rel, st) } ++
+          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
           removedFiles.map(f => s"remove\t$f") ++ schemaLine
         try {
           publishCommit(tablePath, snap.version + 1, lines)
@@ -2371,7 +2386,7 @@ object TxTable {
           enforcedFor = snap.constraints
         }
         val lines = Seq(s"op\tupsertDelta\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st) => addLine(p, rel, st) }
+          adds.map { case (p, rel, st, _) => addLine(p, rel, st) }
         try {
           publishCommit(tablePath, snap.version + 1, lines)
           maybeCheckpoint(tablePath, snap.version + 1)

@@ -40,6 +40,12 @@ import org.apache.spark.sql.streaming.OutputMode
   * merge already pays. (An LSM-delta sink variant would switch to
   * key-only stats; that path stays on
   * [[StreamingPipeline.currentValueSinkTxDelta]].)
+  *
+  * Cost per micro-batch: [[TxTable.mergeLatest]]'s three jobs, no sort,
+  * and no session-config change — the commit passes its partition count
+  * to its own plan, so other queries sharing the session keep their
+  * settings while a batch commits. Each commit's `op` line carries the
+  * rows written and the commit attempt's ms ([[TxTable.history]]).
   */
 class TxTableSinkProvider extends StreamSinkProvider with DataSourceRegister {
   override def shortName(): String = "txtable"

@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one `private[sql]` door the v1 streaming-source API requires.
   *
@@ -14,9 +17,12 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
   * implement v1 sources against arbitrary batch plans (Delta's
   * `DeltaSource` is the canonical example) all route through this same
   * API; a package-qualified shim is the standard way for an external
-  * build to reach it. This object is the ONLY code in the repo outside
-  * the `graft` namespace, and it must stay a single pure function —
-  * anything more belongs in `graft.*`.
+  * build to reach it. The same door serves batch operators that compute
+  * their partitions on catalyst rows and hand the result back to the
+  * planner ([[ofInternalRows]]). This object is the ONLY code in the
+  * repo outside the `graft` namespace, and it must stay a few pure
+  * wrappers of that one constructor — anything more belongs in
+  * `graft.*`.
   */
 object StreamingShim {
 
@@ -41,9 +47,14 @@ object StreamingShim {
     * the batch usable as an ordinary DataFrame. One execution: the
     * wrapped RDD IS the micro-batch's planned RDD.
     */
-  def asBatchDataFrame(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[ClassicSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
+  def asBatchDataFrame(df: DataFrame): DataFrame =
+    ofInternalRows(df.sparkSession, df.queryExecution.toRdd, df.schema)
+
+  /** A batch frame whose leaf is `rows`, read as `schema`. Building it
+    * runs nothing; the RDD runs when a plan over the frame executes.
+    */
+  def ofInternalRows(
+      spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[ClassicSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
 }

@@ -442,4 +442,33 @@ class ExpressionsSpec extends SparkSpec {
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
+
+  test("point_in_convex_poly: a NULL vertex or coordinate gives NULL, interpreted and codegen") {
+    def v(x: Long, y: Long): Option[(Option[Long], Option[Long])] = Some((Some(x), Some(y)))
+    val sq = Seq(v(0, 0), v(10, 0), v(10, 10), v(0, 10))
+    val df = Seq(
+      (1L, sq, 5L, 5L),                               // inside
+      (2L, sq, 20L, 5L),                              // outside
+      (3L, sq.updated(2, None), 5L, 5L),              // NULL vertex mid-ring
+      (4L, sq.updated(0, None), 5L, 5L),              // NULL first vertex
+      (5L, sq.updated(3, None), 5L, 5L),              // NULL last vertex
+      (6L, sq.updated(1, Some((Some(10L), None))), 5L, 5L)) // NULL coordinate
+      .toDF("id", "verts", "x", "y")
+      // not a LocalRelation, so the optimizer cannot fold the call
+      .repartition(1)
+    val expr = GraftFunctions.pointInConvexPoly(col("verts"), col("x"), col("y"))
+    def run() = df.select(col("id"), expr).as[(Long, Option[Boolean])]
+      .collect().toMap
+    val want = Map(1L -> Some(true), 2L -> Some(false), 3L -> None,
+      4L -> None, 5L -> None, 6L -> None)
+    assert(run() == want)
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try assert(run() == want)
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", prev)
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
 }

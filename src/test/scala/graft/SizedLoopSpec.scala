@@ -86,4 +86,23 @@ class SizedLoopSpec extends SparkSpec {
       assert(confs() === before)
     }
   }
+
+  test("sizedPartitions: floor 4, 1 MB per partition, capped at the session default") {
+    val tiny = Seq((1L, 2L)).toDF("a", "b")
+    assert(Checkpoints.sizedPartitions(tiny) === 2) // session default 2 < floor
+    at32 {
+      val before = confs()
+      assert(Checkpoints.sizedPartitions(tiny) === 4)
+      spark.conf.set("graft.loop.partitionBytes", "1")
+      try {
+        // one partition per estimated byte, between the floor and the cap
+        val est = tiny.queryExecution.optimizedPlan.stats.sizeInBytes.toInt
+        assert(est > 4 && est < 32)
+        assert(Checkpoints.sizedPartitions(tiny) === est)
+        val big = (1L to 100L).map(i => (i, i)).toDF("a", "b")
+        assert(Checkpoints.sizedPartitions(big) === 32)
+      } finally spark.conf.unset("graft.loop.partitionBytes")
+      assert(confs() === before)
+    }
+  }
 }
