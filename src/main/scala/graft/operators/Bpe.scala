@@ -119,21 +119,39 @@ object Bpe {
   /** Bounded per-task memo for a pure per-word function — tokenization
     * is a function of the word alone and corpora are Zipfian, so the
     * distinct-word set a task sees is far smaller than its row count.
-    * The cap bounds task memory on adversarial (all-distinct) inputs;
-    * past it the function just runs uncached. One instance per task
-    * (created inside mapPartitions), never shared across threads.
+    * The budget is approximate bytes ([[approxBytes]] of key plus
+    * value, per entry), not an entry count: long words and long token
+    * lists cost in proportion, so adversarial (all-distinct, long-word)
+    * inputs stay inside it. Once it is reached (overshot by at most
+    * one entry) the memo stops growing and misses just run uncached.
+    * One instance per task (created inside mapPartitions), never shared
+    * across threads.
     */
-  private[graft] def memoized[T](maxEntries: Int = 1 << 20)(f: String => T): String => T = {
+  private[graft] def memoized[T](maxBytes: Long = 32L << 20)(f: String => T): String => T = {
     val cache = new java.util.HashMap[String, T]()
+    var bytes = 0L
     w => {
       val hit = cache.get(w)
       if (hit != null) hit
       else {
         val v = f(w)
-        if (cache.size < maxEntries) cache.put(w, v)
+        if (bytes < maxBytes) {
+          cache.put(w, v)
+          bytes += approxBytes(w) + approxBytes(v)
+        }
         v
       }
     }
+  }
+
+  /** Rough JVM footprint of a memo key or value: a String's header and
+    * UTF-16 array, a collection's header plus its elements, 16 bytes
+    * for anything else (a boxed number).
+    */
+  private[graft] def approxBytes(v: Any): Long = v match {
+    case s: String       => 40L + 2L * s.length
+    case xs: Iterable[_] => 32L + xs.iterator.map(approxBytes).sum
+    case _               => 16L
   }
 
   /** One learned merge: fuse (left, right); `cnt` is the weighted pair

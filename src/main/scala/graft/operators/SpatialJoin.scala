@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Grid-bucketed spatial join: points × axis-aligned rectangles with
   * INCLUSIVE bounds — the 2-D sibling of [[RangeJoin]] (1-D intervals).
@@ -152,10 +153,20 @@ object SpatialJoin {
     polyCells
   }
 
-  /** The point-side probe against [[stagePolyCells]] output. */
+  /** The point-side probe against [[stagePolyCells]] output. The exact
+    * test is integer-only, like the vertices: a fractional `px`/`py`
+    * column is refused by name rather than truncated into a wrong
+    * containment answer.
+    */
   private[graft] def probePolyCells(
       points: DataFrame, px: String, py: String,
       cells: DataFrame, vertsCol: String, cellSize: Long): DataFrame = {
+    for (c <- Seq(px, py)) points.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case d: DecimalType if d.scale == 0 =>
+      case other => throw new IllegalArgumentException(
+        s"point column `$c` is $other; pointInConvexPoly needs integer coordinates")
+    }
     def cellOf(c: Column): Column = floor(c / lit(cellSize.toDouble)).cast("long")
     val verts = col(vertsCol)
     val pts = points

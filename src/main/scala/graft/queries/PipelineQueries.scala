@@ -3590,9 +3590,12 @@ object PipelineQueries {
       // per-token counts determine all three — the sketch cell is the
       // sum of its tokens' exact counts (countMinSketch's weighted
       // form), the key set is the counted table's keys, and the exact
-      // column is carried through. persist() shares the counted table
-      // across the plan's three consumers within the one execution.
-      val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact")).persist()
+      // column is carried through. Not persisted: a persist() here
+      // would outlive the query in the session's cache. The sketch and
+      // key consumers share one shuffle through exchange reuse; the
+      // join side (an inferred not-null filter pushed below the count)
+      // recounts, measured no slower than persisting (NOTES.md).
+      val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact"))
       val sk = Sketches.countMinSketch(exact, "tok", depth = 4, width = 512,
         weightCol = Some("exact"))
       Sketches.countMinEstimate(sk, exact.select("tok"), "tok",

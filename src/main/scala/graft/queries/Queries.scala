@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One verifiable query: a Spark implementation plus (when SQL-expressible)
   * an equivalent ANSI SQL string the driver runs in DuckDB over the same
@@ -114,12 +115,74 @@ object Q {
     * encoding breaks every events query the day the data is regenerated,
     * so the reader branches on the type that actually comes back; see
     * [[normalizeEventsTs]].
+    *
+    * A path-based parquet read infers its schema with a Spark job over
+    * the file footers, every time. `t` infers it once per unchanged
+    * table instead: [[schemaMemo]] maps the table path to the schema
+    * Spark inferred, keyed by a fingerprint of every leaf file's (path,
+    * length, modification time) plus the session's parquet-reading
+    * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+    * `spark.sql.caseSensitive`), taken after the `events` branch sets
+    * `nanosAsLong`. A hit reads with that schema declared, so the read
+    * launches no job; the schema is exactly what inference returned for
+    * the same files under the same confs, so plans and results are
+    * unchanged. A changed fingerprint replaces the path's one entry.
+    * The memo goes stale only if a file is rewritten with a different
+    * footer but the same length and the same modification time (a
+    * rewrite within the file system's mtime granularity, one
+    * millisecond locally).
     */
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventsTs(s.read.parquet(s"$dir/$name.parquet"))
-    } else s.read.parquet(s"$dir/$name.parquet")
+      normalizeEventsTs(readMemoized(s, path))
+    } else readMemoized(s, path)
+  }
+
+  /** Every leaf file's (path, length, mtime) and the parquet confs. */
+  private type Fingerprint = (Vector[(String, Long, Long)], Vector[(String, String)])
+
+  /** Table path → (fingerprint, inferred schema); see [[t]]. One entry
+    * per path, JVM-wide, holding no session.
+    */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  private def readMemoized(s: SparkSession, path: String): DataFrame = {
+    val key = tableFingerprint(s, path)
+    Option(schemaMemo.get(path)).filter(e => key.contains(e._1)) match {
+      case Some((_, schema)) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        key.foreach(k => schemaMemo.put(path, (k, df.schema)))
+        df
+    }
+  }
+
+  /** Listed through the path's Hadoop `FileSystem` on the driver, no
+    * job. None when the listing fails (say, a missing path): the read
+    * then goes through unmemoized and reports the error itself.
+    * `listStatus`, not `listFiles`: a `LocatedFileStatus` reads the
+    * file's permissions, which the local file system gets by starting
+    * an `ls` process per file (about 3 ms).
+    */
+  private def tableFingerprint(s: SparkSession, path: String): Option[Fingerprint] =
+    scala.util.Try {
+      import org.apache.hadoop.fs.{FileSystem, Path}
+      def leaves(fs: FileSystem, p: Path): Vector[(String, Long, Long)] =
+        fs.listStatus(p).toVector.flatMap { f =>
+          if (f.isDirectory) leaves(fs, f.getPath)
+          else Vector((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+      val p = new Path(path)
+      val files = leaves(p.getFileSystem(s.sessionState.newHadoopConf()), p)
+      val confs = s.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }.toVector
+      (files.sorted, confs.sorted)
+    }.toOption
 
   /** Normalize whatever physical encoding `events.ts` arrived in to the
     * session-timezone `TimestampType` every downstream query expects.

@@ -69,12 +69,36 @@ class BpeSpec extends SparkSpec {
 
   test("memoized returns the function's values and stops inserting at the cap") {
     var calls = 0
-    val f = Bpe.memoized[Int](maxEntries = 2) { w => calls += 1; w.length }
+    // "aa" -> 2 costs 44 + 16 bytes, so 100 holds "aa" and, overshooting
+    // by one entry, "bbb"; nothing after
+    assert(Bpe.approxBytes("aa") + Bpe.approxBytes(2) === 60L)
+    val f = Bpe.memoized[Int](maxBytes = 100L) { w => calls += 1; w.length }
     assert(f("aa") === 2 && f("bbb") === 3 && f("aa") === 2 && calls === 2)
     // cap reached: new keys still computed (every call), never cached
     assert(f("cccc") === 4 && f("cccc") === 4 && calls === 4)
     // cached keys keep hitting
     assert(f("bbb") === 3 && calls === 4)
+  }
+
+  test("memoized: a tiny byte budget keeps tokenization identical and stops the memo growing") {
+    val docs = Seq(
+      (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+        Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" "))
+      .toDF("text")
+    val merges = Bpe.train(docs, "text", numMerges = 4)
+    val words = Seq("lower", "newest", "lower", "newest", "low", "widest", "low")
+    def run(maxBytes: Long): (Seq[Seq[String]], Int) = {
+      var calls = 0
+      val tok = Bpe.memoized(maxBytes) { w => calls += 1; Bpe.applyMerges(w, merges) }
+      (words.map(tok), calls)
+    }
+    val direct = words.map(Bpe.applyMerges(_, merges))
+    val (roomy, roomyCalls) = run(32L << 20)
+    val (tiny, tinyCalls) = run(1L)
+    assert(roomy === direct && tiny === direct)
+    assert(roomyCalls === 4) // one call per distinct word
+    // only the first word ("lower") fits; every other lookup recomputes
+    assert(tinyCalls === 6)
   }
 
   test("training is deterministic and stops below minCount") {

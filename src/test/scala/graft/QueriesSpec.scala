@@ -32,6 +32,14 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("q269 leaves nothing cached or persisted in the session") {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assert(SparkEntry.queries("q269_count_min")(spark, sf).count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "q269 left a cached relation")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "q269 left a persisted RDD")
+  }
+
   test("q26 approx_count_distinct within 10% of exact counts") {
     val approx = SparkEntry.queries("q26_approx_distinct")(spark, sf)
       .as[(Long, Long)].collect().head

@@ -41,4 +41,20 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"raw control bytes found (write them as \\uXXXX escapes):\n" +
         offenders.mkString("\n"))
   }
+
+  test("queries read base tables only through Q.t") {
+    // Q.t declares each table's remembered schema; any other read of
+    // `$d/<name>.parquet` brings back a schema-inference job per read
+    val baseTable = """\$\{?(d|dir)\}?/\$?\{?\w+\}?\.parquet""".r
+    val offenders = scalaFiles("src/main/scala/graft/queries").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if baseTable.findFirstIn(line).isDefined &&
+            !(f.getFileName.toString == "Queries.scala" &&
+              line.trim == "val path = s\"$dir/$name.parquet\"") =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"base-table reads outside Q.t (use Q.t(s, d, name)):\n" + offenders.mkString("\n"))
+  }
 }

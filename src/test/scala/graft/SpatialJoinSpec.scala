@@ -108,6 +108,24 @@ class SpatialJoinSpec extends SparkSpec {
       .contains("fewer than 3"))
   }
 
+  test("pointInConvexPoly: fractional point coordinates are refused by column name") {
+    val tri = Seq((1L, Seq(V(0L, 0L), V(10L, 0L), V(0L, 10L)))).toDF("rid", "verts")
+    // (5, 5.5) lies outside; truncated to (5, 5) it would sit on the
+    // hypotenuse and match. A whole 2.0 is refused by type all the same.
+    val frac = Seq((1L, 5L, 5.5), (2L, 1L, 2.0)).toDF("pid", "px", "qy")
+    val e = intercept[IllegalArgumentException](
+      SpatialJoin.pointInConvexPoly(frac, "px", "qy", tri, "verts", 8L))
+    assert(e.getMessage.contains("`qy`") && e.getMessage.contains("DoubleType"), e.getMessage)
+    val dec = Seq((1L, BigDecimal("4.5"), 4L)).toDF("pid", "dx", "py")
+    val e2 = intercept[IllegalArgumentException](
+      SpatialJoin.pointInConvexPoly(dec, "dx", "py", tri, "verts", 8L))
+    assert(e2.getMessage.contains("`dx`"), e2.getMessage)
+    // int (not only long) coordinates still join
+    val ints = Seq((1, 2, 2), (2, 20, 20)).toDF("pid", "px", "py")
+    assert(SpatialJoin.pointInConvexPoly(ints, "px", "py", tri, "verts", 8L)
+      .select("pid").as[Int].collect().toSeq == Seq(1))
+  }
+
   test("saltBuckets: hot-cell fixture — identical results, balanced shuffle") {
     // Manhattan fixture (VERDICT r12 item 4): 90% of points in ONE grid
     // cell. Unsalted, the (cx, cy) shuffle puts all of them in one
