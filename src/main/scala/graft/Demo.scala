@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.OpcConfigParser
-import graft.streaming.StreamingPipeline
+import graft.streaming.{StreamingPipeline, TxTable}
 
 /** Runnable end-to-end demonstration of the reference topology on Spark:
   * a config in the reference's grammar (servers + typed tags) drives one
   * streaming query per server (opcsim source → normalization →
-  * current-value merge + history append), then the accumulated history
-  * feeds the batch analytics surface. This is the minimum slice SURVEY.md
+  * current-value TxTable commit + history append), then the accumulated
+  * history feeds the batch analytics surface. This is the minimum slice SURVEY.md
   * §7 describes, as one `runMain graft.Demo [outDir]`.
   */
 object Demo {
@@ -46,7 +46,9 @@ object Demo {
     println(s"parsed ${parsed.servers.size} servers: " +
       parsed.servers.map(s => s"${s.serverName}(${s.entries.size} tags)").mkString(", "))
 
-    // one streaming query per server, AvailableNow so the demo terminates
+    // one streaming query per server, AvailableNow so the demo terminates;
+    // both merge into ONE current-value TxTable (an atomic, OCC-protected
+    // commit per micro-batch), each with its own checkpoint and history
     val queries = parsed.servers.map { srv =>
       StreamingPipeline.currentValueSink(
         StreamingPipeline.normalizeStream(
@@ -54,7 +56,7 @@ object Demo {
             .option("config", config).option("server", srv.serverName)
             .option("cyclesPerTrigger", 20).option("maxCycles", 60)
             .load()),
-        s"$out/current/${srv.serverName}",
+        s"$out/current",
         s"$out/ckpt/${srv.serverName}",
         Trigger.AvailableNow(),
         historyPath = Some(s"$out/history/${srv.serverName}"))
@@ -62,30 +64,8 @@ object Demo {
     }
     queries.foreach(_.awaitTermination())
 
-    println("\n-- current-value table (one row per tag, last value wins) --")
-    parsed.servers.foreach { srv =>
-      spark.read.parquet(s"$out/current/${srv.serverName}")
-        .orderBy("tag").show(20, truncate = false)
-    }
-
-    // the same topology against the ACID transaction-log table — the
-    // multi-writer-safe sink (TxTable): both servers merge CONCURRENTLY
-    // into ONE table, which the directory-swap sink cannot do
-    println("-- TxTable (ACID log): both servers merged into one table --")
-    val txQueries = parsed.servers.map { srv =>
-      graft.streaming.TxTable.currentValueSinkTx(
-        StreamingPipeline.normalizeStream(
-          spark.readStream.format("opcsim")
-            .option("config", config).option("server", srv.serverName)
-            .option("cyclesPerTrigger", 20).option("maxCycles", 60)
-            .load()),
-        s"$out/tx-current",
-        s"$out/tx-ckpt/${srv.serverName}",
-        Trigger.AvailableNow())
-        .queryName(s"graft-tx-${srv.serverName}").start()
-    }
-    txQueries.foreach(_.awaitTermination())
-    graft.streaming.TxTable.read(spark, s"$out/tx-current").foreach {
+    println("\n-- current-value table (one row per (server, tag), last value wins) --")
+    TxTable.read(spark, s"$out/current").foreach {
       _.orderBy("serverName", "tag")
         .select("serverName", "tag", "doubleValue", "stringValue", "sourceTimestamp")
         .show(20, truncate = false)

@@ -114,7 +114,11 @@ object Q {
     * as TimestampNTZ when `isAdjustedToUTC=false`). Hard-coding either
     * encoding breaks every events query the day the data is regenerated,
     * so the reader branches on the type that actually comes back; see
-    * [[normalizeEventsTs]].
+    * [[normalizeEventsTs]]. Spark reads TIMESTAMP(NANOS) only under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which must still be set when
+    * the scan runs, so `t` sets it on the session only when the footer of
+    * an `events` file says `ts` is TIMESTAMP(NANOS) ([[tsIsNanos]], no
+    * Spark job); any other encoding leaves the session's config as it was.
     *
     * A path-based parquet read infers its schema with a Spark job over
     * the file footers, every time. `t` infers it once per unchanged
@@ -122,9 +126,9 @@ object Q {
     * Spark inferred, keyed by a fingerprint of every leaf file's (path,
     * length, modification time) plus the session's parquet-reading
     * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
-    * `spark.sql.caseSensitive`), taken after the `events` branch sets
-    * `nanosAsLong`. A hit reads with that schema declared, so the read
-    * launches no job; the schema is exactly what inference returned for
+    * `spark.sql.caseSensitive`), taken after the `events` branch has
+    * decided `nanosAsLong`. A hit reads with that schema declared, so the
+    * read launches no job; the schema is exactly what inference returned for
     * the same files under the same confs, so plans and results are
     * unchanged. A changed fingerprint replaces the path's one entry.
     * The memo goes stale only if a file is rewritten with a different
@@ -135,10 +139,42 @@ object Q {
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (tsIsNanos(s, path)) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventsTs(readMemoized(s, path))
     } else readMemoized(s, path)
   }
+
+  /** Whether `ts` is stored as parquet TIMESTAMP(NANOS), read from the
+    * footer of `path` (a file, or the first parquet file of a directory)
+    * on the driver. False when there is no such file or column; the read
+    * then reports any problem itself.
+    */
+  private def tsIsNanos(s: SparkSession, path: String): Boolean =
+    scala.util.Try {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.parquet.schema.LogicalTypeAnnotation.{
+        TimeUnit, TimestampLogicalTypeAnnotation}
+      val conf = s.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      val files = if (!st.isDirectory) Array(st)
+        else fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+      files.headOption.exists { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try {
+          val schema = reader.getFooter.getFileMetaData.getSchema
+          schema.containsField("ts") &&
+            (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+              case _ => false
+            })
+        } finally reader.close()
+      }
+    }.getOrElse(false)
 
   /** Every leaf file's (path, length, mtime) and the parquet confs. */
   private type Fingerprint = (Vector[(String, Long, Long)], Vector[(String, String)])

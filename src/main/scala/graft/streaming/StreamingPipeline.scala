@@ -2,14 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.Row
 
 import graft.functions.Normalize
 import graft.model.{OpcServer, OpcValue}
-import graft.operators.LastValue
 
 /** Structured-Streaming port of the reference's runtime topology
   * (/root/reference/OPC2MongoDB/Program.cs):
@@ -18,18 +17,18 @@ import graft.operators.LastValue
   *       → one streaming query per server, each with its own
   *         `Trigger.ProcessingTime(read_period)` (Program.cs:724's sleep);
   *   - ConcurrentQueue handoff + single Mongo writer (Program.cs:44,1146)
-  *       → checkpointed micro-batches + an idempotent `foreachBatch`
-  *         last-value merge (the ReplaceOneAsync upsert of
-  *         Program.cs:1179-1182);
+  *       → checkpointed micro-batches, each one atomic
+  *         [[TxTable.mergeLatest]] commit (the ReplaceOneAsync upsert of
+  *         Program.cs:1179-1182) — the only way this object writes the
+  *         current-value table;
   *   - arrival-order "latest" → event-order latest by
   *         (serverTimestamp, sourceTimestamp): deterministic and
   *         out-of-order safe (documented deviation, SURVEY.md §2.9).
   *
-  * 100 TB posture: the merge keys on `tag`, so each micro-batch shuffles
-  * at most one row per (tag × input partition) thanks to partial
-  * aggregation; state (current-value table) is O(distinct tags), not
-  * O(events). The stateful variant keeps the same bound via
-  * `flatMapGroupsWithState`.
+  * 100 TB posture: each commit reads and rewrites only the partitions of
+  * the servers in the batch; state (current-value table) is
+  * O(distinct tags), not O(events). The stateful variants keep the same
+  * bound with one OpcValue of state per key.
   */
 object StreamingPipeline extends Serializable {
 
@@ -39,80 +38,23 @@ object StreamingPipeline extends Serializable {
     */
   def normalizeStream(raw: DataFrame): DataFrame = Normalize.normalize(raw)
 
-  /** Current-value table merge: upsert the batch's latest row per tag into
-    * the parquet current-value table at `tablePath`. Idempotent (re-running
-    * a batch converges to the same table), which is what makes micro-batch
-    * retries exactly-once end-to-end.
+  /** Wire a normalized stream into the current-value table at
+    * `tablePath`: every micro-batch is one [[TxTable.mergeLatest]] commit
+    * (the ReplaceOneAsync upsert of Program.cs:1179-1182), partitioned by
+    * `serverName` (the reference's collection-per-server,
+    * Program.cs:1159), so a batch rewrites only the partitions of the
+    * servers it carries. The commit is atomic and OCC-protected, so
+    * several streams may share one table, and a replayed batch re-merges
+    * the same rows to the same table (exactly-once end to end). Read the
+    * table with [[TxTable.read]]: its directory also holds superseded and
+    * orphaned data files until vacuum.
     *
-    * The table is partitioned by `serverName` (the reference's
-    * collection-per-server, Program.cs:1159), and a batch only ever
-    * rewrites the partitions of servers it contains: the read side is
-    * partition-pruned to those servers, and the swap moves only their
-    * partition directories — untouched servers' files are never read nor
-    * written. With S servers and one active, a merge costs O(tags of the
-    * active server), not O(all tags): the whole-table rewrite this
-    * replaces would not survive 1000 servers × millions of tags. (A table
-    * format with ACID row-level merge — Delta/Iceberg — replaces the
-    * directory swap on a real deployment; the partition-pruned shape is
-    * the same.)
-    */
-  def mergeLatest(spark: SparkSession, batch: DataFrame, tablePath: String): Unit = {
-    val keys = Seq("serverName", "tag")
-    val order = Seq("serverTimestamp", "sourceTimestamp")
-    val batchLatest = LastValue.latestPerKey(batch, keys, order)
-    val root = new java.io.File(tablePath)
-    if (!root.exists()) {
-      batchLatest.write.mode("overwrite").partitionBy("serverName").parquet(tablePath)
-    } else {
-      val affected = batchLatest.select("serverName").distinct()
-        .collect().map(_.getString(0)).toSeq
-      // partition-pruned: only the affected servers' files are read
-      val current = spark.read.parquet(tablePath)
-        // partition-col type inference could widen a numeric-looking name
-        .withColumn("serverName", col("serverName").cast("string"))
-        .filter(col("serverName").isin(affected: _*))
-        .select(batchLatest.columns.toIndexedSeq.map(col): _*)
-      val merged = LastValue.latestPerKey(
-        current.unionByName(batchLatest), keys, order)
-      // two-phase write: parquet can't overwrite the path it is reading;
-      // stage the affected partitions, then swap their directories only
-      val staged = tablePath + ".staged"
-      deleteRec(new java.io.File(staged))
-      merged.write.mode("overwrite").partitionBy("serverName").parquet(staged)
-      val stagedParts = Option(new java.io.File(staged).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("serverName="))
-      stagedParts.foreach { src =>
-        val dst = new java.io.File(root, src.getName)
-        val old = new java.io.File(root, src.getName + ".old")
-        deleteRec(old)
-        if (dst.exists()) moveDir(dst, old)
-        moveDir(src, dst)
-        deleteRec(old)
-      }
-      deleteRec(new java.io.File(staged))
-    }
-  }
-
-  /** Directory swap step that THROWS on failure (unlike File.renameTo's
-    * silent boolean): a failed rename must fail the micro-batch so Spark
-    * retries it — the merge is idempotent — instead of silently dropping
-    * or duplicating a server partition.
-    */
-  private def moveDir(src: java.io.File, dst: java.io.File): Unit =
-    java.nio.file.Files.move(src.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    if (f.exists()) f.delete()
-  }
-
-  /** Wire a normalized stream into the current-value sink, optionally also
-    * appending every reading to a history table — the reference's
-    * commented-out InsertOneAsync path (Program.cs:1174-1176), enabled here
-    * because at scale the history table IS the analytics input. History is
-    * partitioned by serverName (the reference's collection-per-server,
-    * Program.cs:1159): queries for one server prune to its partition.
+    * `historyPath` optionally also appends every reading to a history
+    * table — the reference's commented-out InsertOneAsync path
+    * (Program.cs:1174-1176), enabled here because at scale the history
+    * table IS the analytics input. History is a plain parquet append
+    * partitioned by serverName: queries for one server prune to its
+    * partition.
     */
   def currentValueSink(
       normalized: DataFrame,
@@ -131,62 +73,17 @@ object StreamingPipeline extends Serializable {
         historyPath.foreach { h =>
           batch.write.mode("append").partitionBy("serverName").parquet(h)
         }
-        mergeLatest(batch.sparkSession, batch, tablePath)
+        TxTable.mergeLatest(batch.sparkSession, batch, tablePath)
         if (historyPath.isDefined) batch.unpersist()
         ()
       }
 
-  /** Compact the history table's small files, per server partition. Every
-    * micro-batch appends at least one file per touched partition — at a
-    * 10 s cadence that is 8,640 files/server/day, and file-count, not
-    * data volume, is what kills scans and listings at scale (the classic
-    * streaming-sink small-files problem). Partitions with more than
-    * `maxFiles` parquet files are rewritten into
-    * ceil(rows / recordsPerFile) files and swapped in with the same
-    * stage-then-rename used by [[mergeLatest]]; partitions at or under
-    * the threshold are untouched (never read, never written). Run it as a
-    * maintenance job between batches; on a table format (Delta/Iceberg)
-    * OPTIMIZE/rewrite-data-files replaces this.
-    *
-    * @return (partition, filesBefore, filesAfter) for each rewritten one
-    */
-  def compactHistory(
-      spark: SparkSession,
-      historyPath: String,
-      maxFiles: Int = 8,
-      recordsPerFile: Long = 4L * 1024 * 1024): Seq[(String, Int, Int)] = {
-    val root = new java.io.File(historyPath)
-    val parts = Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("serverName="))
-    parts.flatMap { dir =>
-      def parquetFiles = Option(dir.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val before = parquetFiles.size
-      if (before <= maxFiles) None
-      else {
-        val df = spark.read.parquet(dir.getPath)
-        val n = df.count()
-        val target = math.max(1, math.ceil(n.toDouble / recordsPerFile).toInt)
-        // "." prefix: FileIndex ignores dot-dirs, so the staging dir is
-        // invisible to concurrent readers of the table root
-        val staged = new java.io.File(root, "." + dir.getName + ".compact")
-        deleteRec(staged)
-        df.repartition(target).write.mode("overwrite").parquet(staged.getPath)
-        val old = new java.io.File(root, "." + dir.getName + ".old")
-        deleteRec(old)
-        moveDir(dir, old)
-        moveDir(staged, dir)
-        deleteRec(old)
-        Some((dir.getName, before, parquetFiles.size))
-      }
-    }
-  }
-
   /** Per-server query fan-out: one `currentValueSink` query per configured
-    * server, each at its own poll cadence — the Spark analog of the
-    * reference's thread-per-server Main (Program.cs:1300-1312). The caller
-    * provides a source stream per server (real OPC connector or test
-    * MemoryStream).
+    * server, each at its own poll cadence and into its own table at
+    * `outDir/<serverName>` — the Spark analog of the reference's
+    * thread-per-server Main (Program.cs:1300-1312) and its
+    * collection-per-server. The caller provides a source stream per
+    * server (real OPC connector, `opcsim` or test MemoryStream).
     */
   def startServerQueries(
       servers: Seq[OpcServer],
@@ -203,11 +100,6 @@ object StreamingPipeline extends Serializable {
         .start()
     }
 
-  /** Stateful last-value keeper: emits, for every micro-batch, the keys
-    * whose current value changed. State per key is exactly one OpcValue —
-    * the `flatMapGroupsWithState` twin of the foreachBatch merge, for
-    * consumers that want a changelog stream instead of a table.
-    */
   /** Event-order "newer" for OpcValue rows: (serverTimestamp,
     * sourceTimestamp) lexicographic — shared by both stateful variants.
     */
@@ -223,6 +115,11 @@ object StreamingPipeline extends Serializable {
     else cmpTs(a.sourceTimestamp, b.sourceTimestamp) > 0
   }
 
+  /** Stateful last-value keeper: emits, for every micro-batch, the keys
+    * whose current value changed. State per key is exactly one OpcValue —
+    * the `flatMapGroupsWithState` twin of [[currentValueSink]], for
+    * consumers that want a changelog stream instead of a table.
+    */
   def latestPerTagStateful(normalized: DataFrame): DataFrame = {
     import normalized.sparkSession.implicits._
     def newer(a: OpcValue, b: OpcValue): Boolean = newerValue(a, b)

@@ -14,10 +14,10 @@ import graft.operators.LastValue
 /** Minimal ACID table format with row-level merge — the multi-writer sink
   * the reference's Mongo upsert (ReplaceOneAsync,
   * /root/reference/OPC2MongoDB/Program.cs:1179-1182) maps to when the
-  * store is parquet. The directory-swap sink ([[StreamingPipeline
-  * .mergeLatest]]) is atomic per partition for ONE writer; this one is
-  * correct under CONCURRENT writers, with the same design shape as
-  * Delta/Iceberg scaled down to zero dependencies:
+  * store is parquet, and the only way the streaming sinks
+  * ([[StreamingPipeline.currentValueSink]], [[TxTableSink]]) write the
+  * current-value table. It is correct under CONCURRENT writers, with the
+  * same design shape as Delta/Iceberg scaled down to zero dependencies:
   *
   *   - Data files are immutable, uniquely named, and written BEFORE the
   *     commit that references them — a reader can never observe a
@@ -2720,31 +2720,15 @@ object TxTable {
     * stats on each folded directory, so the steady-state table regains
     * value-column skipping for raw [[read]]s at zero per-trigger cost.
     *
-    * [[currentValueSinkTx]] (merge-on-WRITE) deliberately keeps
-    * AutoStats instead: its tables hold one collapsed dir per partition
+    * The merge-on-WRITE sinks, [[StreamingPipeline.currentValueSink]]
+    * and `format("txtable")` ([[TxTableSink]]), deliberately keep
+    * AutoStats instead: their tables hold one collapsed dir per partition
     * — [[compact]] never applies, so key-only stats there would
     * permanently forfeit value/timestamp skipping on raw reads, and the
     * observe overhead is marginal next to the per-trigger partition
-    * rewrite that sink already pays.
+    * rewrite those sinks already pay.
     */
   val StreamingSinkStats: Seq[String] = Seq("serverName", "tag")
-
-  /** Streaming sink over the transactional merge — the multi-writer-safe
-    * twin of [[StreamingPipeline.currentValueSink]].
-    */
-  def currentValueSinkTx(
-      normalized: DataFrame,
-      tablePath: String,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    normalized.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeLatest(batch.sparkSession, batch, tablePath)
-        ()
-      }
 
   /** The LSM sink: each micro-batch lands as an O(batch) [[upsertDelta]]
     * commit, and every `compactEvery`th batch folds the accumulated

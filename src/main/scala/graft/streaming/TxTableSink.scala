@@ -39,7 +39,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * and the observe cost is marginal next to the partition rewrite the
   * merge already pays. (An LSM-delta sink variant would switch to
   * key-only stats; that path stays on
-  * [[StreamingPipeline.currentValueSinkTxDelta]].)
+  * [[TxTable.currentValueSinkTxDelta]].)
   *
   * Cost per micro-batch: [[TxTable.mergeLatest]]'s three jobs, no sort,
   * and no session-config change — the commit passes its partition count

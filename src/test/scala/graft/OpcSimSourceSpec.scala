@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{OpcSimSource, TagReader, TagReaderProvider, TagReading, TagSession}
-import graft.streaming.StreamingPipeline
+import graft.streaming.{StreamingPipeline, TxTable}
 
 /** A drop-in [[TagReaderProvider]] proving the real-client seam: constant
   * readings, bad quality, and lifecycle counters the spec asserts on.
@@ -166,7 +166,7 @@ class OpcSimSourceSpec extends SparkSpec {
       Trigger.AvailableNow()).start()
     q.awaitTermination()
 
-    val cur = spark.read.parquet(table)
+    val cur = TxTable.read(spark, table).get
     assert(cur.count() == 4, "exactly one current row per tag")
     val byTag = cur.select("tag", "doubleValue", "stringValue")
       .as[(String, Double, String)].collect().map(r => r._1 -> r).toMap
@@ -192,7 +192,7 @@ class OpcSimSourceSpec extends SparkSpec {
       Trigger.AvailableNow(), historyPath = Some(s"$base/history")).start()
     q.awaitTermination()
 
-    assert(spark.read.parquet(s"$base/current").count() == 4)
+    assert(TxTable.read(spark, s"$base/current").get.count() == 4)
     val hist = spark.read.parquet(s"$base/history")
     assert(hist.count() == 12) // 3 cycles × 4 tags, all retained
     assert(new java.io.File(s"$base/history/serverName=Server1").isDirectory,
@@ -213,12 +213,54 @@ class OpcSimSourceSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("sim-ckpt3").toString
     val table = Files.createTempDirectory("sim-cur3").toString + "/current"
     run(ckpt, table, 2)
-    val after2 = spark.read.parquet(table)
+    val after2 = TxTable.read(spark, table).get
       .select("tag", "stringValue").as[(String, String)].collect().toMap
     run(ckpt, table, 5) // resume from checkpoint, cycles 3..5
-    val after5 = spark.read.parquet(table)
+    val after5 = TxTable.read(spark, table).get
       .select("tag", "stringValue").as[(String, String)].collect().toMap
     assert(after2("Count") == OpcSimSource.rawValue("Int32", 1, 2))
     assert(after5("Count") == OpcSimSource.rawValue("Int32", 1, 5))
+  }
+
+  test("startServerQueries: one query and one current-value table per server") {
+    val twoServers =
+      """opc.tcp://host1:4840, 1, Server1
+        |ns=1;s=Plant.Temp   ,Double  ,Y ,Temp
+        |ns=1;s=Plant.Count  ,Int32   ,N ,Count
+        |ns=1;s=Plant.Label  ,String  ,N ,Label
+        |opcda://host2, 1, Server2
+        |Device.PV  ,vt_r8  ,N ,PV
+        |Device.On  ,vt_bool,N ,On
+        |""".stripMargin
+    val servers = graft.config.OpcConfigParser.parse(twoServers).config.servers
+    val base = Files.createTempDirectory("sim-fanout").toString
+    val maxCycles = 3
+    val queries = StreamingPipeline.startServerQueries(servers,
+      srv => spark.readStream.format("opcsim")
+        .option("config", twoServers).option("server", srv.serverName)
+        .option("cyclesPerTrigger", 2).option("maxCycles", maxCycles)
+        .load(),
+      s"$base/current", s"$base/ckpt")
+    try queries.foreach(_.processAllAvailable())
+    finally queries.foreach(_.stop())
+
+    assert(queries.map(_.name) == Seq("graft-Server1", "graft-Server2"))
+    def isReal(dataType: String) = Seq("double", "vt_r8").contains(dataType.toLowerCase)
+    servers.foreach { srv =>
+      val cur = TxTable.read(spark, s"$base/current/${srv.serverName}").get
+        .select("serverName", "tag", "dataType", "doubleValue", "stringValue")
+        .as[(String, String, String, Double, String)].collect()
+      assert(cur.map(_._1).toSet == Set(srv.serverName))
+      // one row per tag, holding the last cycle's value (reals compared
+      // as numbers: their text form is G-formatted)
+      def value(dataType: String, d: Double, str: String): String =
+        if (isReal(dataType)) d.toString else str
+      val want = srv.entries.zipWithIndex.map { case (e, i) =>
+        val raw = OpcSimSource.rawValue(e.dataType, i, maxCycles)
+        e.tag -> (if (isReal(e.dataType)) raw.toDouble.toString else raw)
+      }.toMap
+      assert(cur.map(r => r._2 -> value(r._3, r._4, r._5)).toMap == want)
+      assert(cur.length == want.size)
+    }
   }
 }

@@ -57,4 +57,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"base-table reads outside Q.t (use Q.t(s, d, name)):\n" + offenders.mkString("\n"))
   }
+
+  test("streaming sinks never commit by renaming files or directories") {
+    // a current-value commit is a TxTable log publish; a rename-based
+    // swap leaves a window where the renamed partition does not exist.
+    // The one allowed move is TxTable's `_last_checkpoint` hint, a
+    // performance artifact that readers never trust for correctness.
+    val rename = """\bFiles\.move\s*\(|\.renameTo\s*\(|\.rename\s*\(""".r
+    val hits = scalaFiles("src/main/scala/graft/streaming").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if rename.findFirstIn(line).isDefined =>
+          (f.getFileName.toString == "TxTable.scala" &&
+            line.contains("Files.move(tmp.toPath, hintFile(tablePath).toPath,"),
+            s"$f:${i + 1}: ${line.trim}")
+      }
+    }
+    assert(hits.exists(_._1), "the scan no longer finds TxTable's hint write")
+    val offenders = hits.filterNot(_._1).map(_._2)
+    assert(offenders.isEmpty,
+      s"renames under graft.streaming (commit through TxTable instead):\n" +
+        offenders.mkString("\n"))
+  }
 }

@@ -45,6 +45,7 @@ class StreamingSpec extends SparkSpec {
     Files.createTempDirectory(prefix).toString
 
   test("foreachBatch merge: latest per (server, tag) survives across batches, late data loses") {
+    import graft.streaming.TxTable
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[RawReading]
     val table = tmp("graft-current") + "/current"
@@ -66,7 +67,9 @@ class StreamingSpec extends SparkSpec {
       table, tmp("graft-ckpt2"), Trigger.AvailableNow()).start()
     q2.awaitTermination()
 
-    val cur = spark.read.parquet(table)
+    // each micro-batch is one TxTable.mergeLatest commit
+    assert(TxTable.history(table).map(_.op) == Seq("mergeLatest", "mergeLatest"))
+    val cur = TxTable.read(spark, table).get
       .select("tag", "doubleValue").as[(String, Double)].collect().toMap
     assert(cur == Map("t1" -> 2.0, "t2" -> 8.0))
   }
@@ -115,59 +118,6 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       KeyValueSink.resolveProvider("com.nosuch.KvProvider"))
     assert(e.getMessage.contains("cannot be instantiated"))
-  }
-
-  test("mergeLatest only rewrites partitions of servers present in the batch") {
-    def mkBatch(rows: (String, String, String, Double)*) =
-      rows.map { case (srv, tag, t, v) =>
-        (srv, tag, v, ts(t), ts(t))
-      }.toDF("serverName", "tag", "doubleValue", "serverTimestamp", "sourceTimestamp")
-
-    val table = tmp("graft-partmerge") + "/current"
-    StreamingPipeline.mergeLatest(spark, mkBatch(
-      ("srvA", "a1", "2024-06-01 10:00:00", 1.0),
-      ("srvB", "b1", "2024-06-01 10:00:00", 2.0)), table)
-
-    def partFiles(srv: String): Map[String, Long] =
-      Option(new java.io.File(table, s"serverName=$srv").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    val aBefore = partFiles("srvA")
-    assert(aBefore.nonEmpty)
-
-    // second batch touches only srvB: srvA's partition files must be
-    // byte-identical (merge never read nor rewrote them)
-    StreamingPipeline.mergeLatest(spark, mkBatch(
-      ("srvB", "b1", "2024-06-01 10:01:00", 9.0)), table)
-
-    assert(partFiles("srvA") == aBefore, "untouched partition was rewritten")
-    val cur = spark.read.parquet(table)
-      .select("tag", "doubleValue").as[(String, Double)].collect().toMap
-    assert(cur == Map("a1" -> 1.0, "b1" -> 9.0))
-  }
-
-  test("compactHistory rewrites only over-threshold partitions, preserving rows") {
-    val hist = tmp("graft-hist") + "/history"
-    def append(srv: String, tag: String, v: Double): Unit =
-      Seq((srv, tag, v)).toDF("serverName", "tag", "doubleValue")
-        .write.mode("append").partitionBy("serverName").parquet(hist)
-    (1 to 6).foreach(i => append("srvA", s"t$i", i.toDouble)) // 6 files
-    append("srvB", "t1", 9.0)                                // 1 file
-
-    def files(srv: String): Map[String, Long] =
-      Option(new java.io.File(hist, s"serverName=$srv").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    val bBefore = files("srvB")
-
-    val report = StreamingPipeline.compactHistory(spark, hist, maxFiles = 3)
-    assert(report.map(r => (r._1, r._2)) == Seq(("serverName=srvA", 6)))
-    assert(files("srvA").size < 6)
-    assert(files("srvB") == bBefore, "under-threshold partition was touched")
-    val rows = spark.read.parquet(hist)
-      .select("serverName", "tag", "doubleValue")
-      .as[(String, String, Double)].collect().toSet
-    assert(rows.size == 7 && rows.contains(("srvA", "t3", 3.0)) && rows.contains(("srvB", "t1", 9.0)))
   }
 
   test("latestPerTagTws (transformWithState) matches the fMGWS changelog semantics") {
@@ -1287,31 +1237,6 @@ class StreamingSpec extends SparkSpec {
     val cur = TxTable.read(spark, table).get
       .select("tag", "doubleValue").as[(String, Double)].collect().toMap
     assert(cur == Map("t1" -> 1.0))
-  }
-
-  test("TxTable streaming sink: current-value table across micro-batches") {
-    import graft.streaming.TxTable
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[RawReading]
-    val table = tmp("graft-txsink") + "/tbl"
-    mem.addData(
-      raw("t1", "1.0", "2024-06-01 10:00:00"),
-      raw("t1", "2.0", "2024-06-01 10:00:05"),
-      raw("t2", "7.5", "2024-06-01 10:00:01"))
-    val q = TxTable.currentValueSinkTx(
-      StreamingPipeline.normalizeStream(mem.toDF()),
-      table, tmp("graft-txckpt"), Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    mem.addData(
-      raw("t1", "9.9", "2024-06-01 09:59:00"), // late
-      raw("t2", "8.0", "2024-06-01 10:00:30"))
-    val q2 = TxTable.currentValueSinkTx(
-      StreamingPipeline.normalizeStream(mem.toDF()),
-      table, tmp("graft-txckpt2"), Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    val cur = TxTable.read(spark, table).get
-      .select("tag", "doubleValue").as[(String, Double)].collect().toMap
-    assert(cur == Map("t1" -> 2.0, "t2" -> 8.0))
   }
 
   test("streaming index probe: stateless band probe against the corpus index") {

@@ -129,4 +129,51 @@ class TableReadSpec extends SparkSpec {
     val (jobs, _) = jobsIn(Q.t(spark, dir, "tbl"))
     assert(jobs === 0)
   }
+
+  test("reading events leaves the session's config unchanged") {
+    // ts as TIMESTAMP(MICROS, isAdjustedToUTC=false): the encoding the
+    // test tables ship with
+    val dir = tmpDir()
+    Seq((1L, "2024-06-01 10:00:00"), (2L, "2024-06-01 10:00:01.5")).toDF("id", "t")
+      .selectExpr("id", "to_timestamp_ntz(t) AS ts")
+      .write.parquet(s"$dir/events.parquet")
+    // start without nanosAsLong, which an earlier events read may have set
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(nanos)
+    try {
+      spark.conf.unset(nanos)
+      val before = spark.conf.getAll
+      val df = Q.t(spark, dir, "events")
+      assert(df.schema("ts").dataType === TimestampType)
+      assert(df.orderBy("id").selectExpr("CAST(ts AS STRING)").as[String].collect().toSeq ===
+        Seq("2024-06-01 10:00:00", "2024-06-01 10:00:01.5"))
+      assert(spark.conf.getAll === before)
+    } finally old.fold(spark.conf.unset(nanos))(spark.conf.set(nanos, _))
+  }
+
+  test("events stored as TIMESTAMP(NANOS) are read under nanosAsLong") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpDir()
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    // 2024-06-01 10:00:00.000001999 UTC: the sub-microsecond part is cut
+    try writer.write(groups.newGroup().append("id", 1L).append("ts", 1717236000000001999L))
+    finally writer.close()
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(nanos)
+    try {
+      spark.conf.unset(nanos)
+      val df = Q.t(spark, dir, "events")
+      assert(spark.conf.get(nanos) === "true")
+      assert(df.schema("ts").dataType === TimestampType)
+      assert(df.selectExpr("CAST(ts AS STRING)").as[String].collect().toSeq ===
+        Seq("2024-06-01 10:00:00.000001"))
+    } finally old.fold(spark.conf.unset(nanos))(spark.conf.set(nanos, _))
+  }
 }
