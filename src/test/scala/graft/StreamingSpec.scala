@@ -1239,6 +1239,35 @@ class StreamingSpec extends SparkSpec {
     assert(cur == Map("t1" -> 1.0))
   }
 
+  test("TxTable streaming sink: current-value table across micro-batches") {
+    import graft.streaming.TxTable
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[RawReading]
+    val table = tmp("graft-txsink") + "/tbl"
+    // one running query, one checkpoint: each micro-batch is one table version
+    val q = StreamingPipeline.currentValueSink(
+      StreamingPipeline.normalizeStream(mem.toDF()),
+      table, tmp("graft-txckpt"), Trigger.ProcessingTime(0)).start()
+    try {
+      mem.addData(
+        raw("t1", "1.0", "2024-06-01 10:00:00"),
+        raw("t1", "2.0", "2024-06-01 10:00:05"),
+        raw("t2", "7.5", "2024-06-01 10:00:01"))
+      q.processAllAvailable()
+      mem.addData(
+        raw("t1", "9.9", "2024-06-01 09:59:00"), // late
+        raw("t2", "8.0", "2024-06-01 10:00:30"))
+      q.processAllAvailable()
+    } finally q.stop()
+    def cur(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      df.select("tag", "doubleValue").as[(String, Double)].collect().toMap
+    val hist = TxTable.history(table)
+    assert(hist.map(_.op) == Seq("mergeLatest", "mergeLatest"))
+    assert(cur(TxTable.readAt(spark, table, hist.last.version).get)
+      == Map("t1" -> 2.0, "t2" -> 7.5), "first micro-batch's version")
+    assert(cur(TxTable.read(spark, table).get) == Map("t1" -> 2.0, "t2" -> 8.0))
+  }
+
   test("streaming index probe: stateless band probe against the corpus index") {
     import graft.streaming.StreamingIndexProbe
     implicit val sc = spark.sqlContext
