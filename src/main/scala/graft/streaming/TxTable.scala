@@ -30,11 +30,14 @@ import graft.operators.LastValue
   *     FileAlreadyExistsException if the version exists — the same
   *     atomic-rename trick Delta uses on HDFS; object stores plug in a
   *     conditional-PUT implementation via [[setLogStore]], see the
-  *     [[LogStore]] deployment matrix). Losers of the race re-read the
-  *     new snapshot, re-apply their merge on top (the last-value merge
-  *     is commutative/associative, so rebase is semantics-preserving)
-  *     and retry at the next version: optimistic concurrency,
-  *     serializable history.
+  *     [[LogStore]] deployment matrix). Every write op commits through
+  *     ONE private loop ([[commit]]): losers of the race delete the data
+  *     directories their attempt wrote (no commit references them),
+  *     re-read the new snapshot, re-apply their op on top (the
+  *     last-value merge is commutative/associative, so rebase is
+  *     semantics-preserving) and retry at the next version, at most 51
+  *     attempts in all: optimistic concurrency, serializable history.
+  *     Superseded files of committed versions stay until [[vacuum]].
   *   - Partition pruning is metadata-based: the log records each file's
   *     partition value, so a merge or read touching S servers opens only
   *     their files — no directory listing, which is also what makes the
@@ -284,19 +287,25 @@ object TxTable {
       statCols: Seq[(String, Char)]): Option[(String, Long)] = {
     val (stats, n) = writeWithStats(part, absPath, statCols)
     if (n > 0) Some((stats, n))
-    else {
-      // delete through the Hadoop FileSystem for the path's scheme
-      // (ADVICE r17): a java.io.File recursive delete only works on the
-      // local FS, silently leaving unreferenced empty dirs behind on the
-      // object-store/HDFS deployments the reliable-checkpoint path
-      // contemplates. Parquet just wrote through this same FS, so the
-      // resolution cost is already paid.
-      val p = new org.apache.hadoop.fs.Path(absPath)
-      p.getFileSystem(part.sparkSession.sessionState.newHadoopConf())
-        .delete(p, true)
-      None
-    }
+    else { dropDir(part.sparkSession, absPath); None }
   }
+
+  /** Recursively delete a data dir no commit references, through the
+    * Hadoop FileSystem for the path's scheme (ADVICE r17): a java.io.File
+    * recursive delete only works on the local FS, silently leaving
+    * unreferenced dirs behind on the object-store/HDFS deployments the
+    * reliable-checkpoint path contemplates. Parquet just wrote through
+    * this same FS, so the resolution cost is already paid.
+    */
+  private def dropDir(spark: SparkSession, absPath: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(absPath)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    ()
+  }
+
+  /** The top-level `data/<uuid>` dirs that hold the data refs `rels`. */
+  private def topDirs(rels: Seq[String]): Seq[String] =
+    rels.map(_.split('/').take(2).mkString("/")).distinct
 
   /** Write EVERY affected partition's data dir in ONE Spark job
     * (VERDICT r17 task #2): the per-partition `writePartition` loop cost
@@ -402,12 +411,15 @@ object TxTable {
         }.toMap
     }
     // only partitions that produced rows have dirs (partitionBy writes
-    // nothing for an empty group) — and only they get add lines
-    escaped.flatMap { case (p, esc) =>
+    // nothing for an empty group) — and only they get add lines; a write
+    // with no rows at all leaves just `abs` and its marker, dropped here
+    val out = escaped.flatMap { case (p, esc) =>
       stats.get(p).filter(_._1 > 0).map { case (n, st) =>
         (p, s"$rel/__p=$esc", st, n)
       }
     }
+    if (out.isEmpty) dropDir(df.sparkSession, abs)
+    out
   }
 
   /** One `add` log line; stats ride as an optional 4th field so a
@@ -427,6 +439,11 @@ object TxTable {
     * 10; snapshot replay cost stays O(interval), not O(table age)).
     */
   val CheckpointInterval = 10
+
+  /** Replay passes a snapshot read makes against a log that a concurrent
+    * [[vacuum]] keeps changing under it, before the failure surfaces.
+    */
+  private val ReplayAttempts = 5
 
   /** Replay the log: latest checkpoint (full file listing) + the commits
     * after it. Version -1 = empty/uninitialized table.
@@ -452,7 +469,7 @@ object TxTable {
   def snapshot(tablePath: String): Snapshot = {
     var last: java.nio.file.NoSuchFileException = null
     var attempt = 0
-    while (attempt < 5) {
+    while (attempt < ReplayAttempts) {
       try {
         anchoredReplay(tablePath) match {
           case Some((snap, _)) => return snap
@@ -493,11 +510,10 @@ object TxTable {
     * vacuum-created gap can only have started from a hint that has since
     * moved — re-reading the hint detects that and retries.
     */
-  private[graft] def anchoredReplay(
-      tablePath: String, maxRetries: Int = 5): Option[(Snapshot, Seq[File])] = {
+  private[graft] def anchoredReplay(tablePath: String): Option[(Snapshot, Seq[File])] = {
     val hf = hintFile(tablePath)
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < ReplayAttempts) {
       if (!hf.exists()) return None
       val baseOpt =
         try new String(Files.readAllBytes(hf.toPath), StandardCharsets.UTF_8)
@@ -794,7 +810,7 @@ object TxTable {
     // fresh listing is always complete, so retry, bounded
     var last: java.nio.file.NoSuchFileException = null
     var attempt = 0
-    while (attempt < 5) {
+    while (attempt < ReplayAttempts) {
       try {
         // time travel only trusts a checkpoint whose payload header
         // matches its filename (an EXACT state). Header-less files from
@@ -1380,6 +1396,60 @@ object TxTable {
       (lines :+ s"eof\t${lines.size}").mkString("\n").getBytes(StandardCharsets.UTF_8))
   }
 
+  /** One write op's commit attempt: the detail pairs of its `op` line,
+    * its log actions, and the top-level `data/<uuid>` dirs the attempt
+    * itself wrote (dropped again if the attempt loses its race; dirs
+    * staged once before the loop and re-published on every attempt are
+    * not listed).
+    */
+  private final case class Attempt(
+      detail: Seq[(String, Any)],
+      actions: Seq[String],
+      written: Seq[String] = Nil)
+
+  /** Lost commit races a write op absorbs before it gives up: 51
+    * attempts in all.
+    */
+  private val MaxCommitRetries = 50
+
+  /** The optimistic-concurrency commit loop every write op runs: read the
+    * snapshot, run the op's `attempt` on it, publish the result at
+    * `snapshot.version + 1`. `Left(v)` means nothing to commit; the op
+    * returns `v`. A lost race (FileAlreadyExistsException: a concurrent
+    * writer took the version) drops the attempt's own data dirs — no
+    * commit references them — and runs the attempt again on the fresh
+    * snapshot. The `op` line is `op <name> attempt <n>`, the attempt's
+    * detail pairs, then `ms` (snapshot plus attempt wall time).
+    */
+  private def commit(tablePath: String, op: String)(
+      attempt: Snapshot => Either[Long, Attempt]): Long = {
+    @annotation.tailrec
+    def run(n: Int): Long = {
+      val t0 = System.nanoTime()
+      val snap = snapshot(tablePath)
+      attempt(snap) match {
+        case Left(v) => v
+        case Right(a) =>
+          val ms = (System.nanoTime() - t0) / 1000000
+          val opLine = (Seq("op", op, "attempt", n) ++
+            a.detail.flatMap { case (k, v) => Seq(k, v) } ++ Seq("ms", ms)).mkString("\t")
+          val won =
+            try { publishCommit(tablePath, snap.version + 1, opLine +: a.actions); true }
+            catch { case _: FileAlreadyExistsException => false }
+          if (won) {
+            maybeCheckpoint(tablePath, snap.version + 1)
+            snap.version + 1
+          } else {
+            a.written.foreach(rel => dropDir(SparkSession.active, s"$tablePath/$rel"))
+            if (n == MaxCommitRetries) throw new IllegalStateException(
+              s"$op lost $MaxCommitRetries consecutive commit races on $tablePath")
+            run(n + 1)
+          }
+      }
+    }
+    run(0)
+  }
+
   /** Row-level last-value merge with optimistic concurrency: upsert the
     * batch's latest row per `keys` (ordered by `order`) into the table,
     * rewriting ONLY the partitions the batch touches. `partitionCol` must
@@ -1397,8 +1467,8 @@ object TxTable {
     *   3. the write: one partition goes to a single directory with no
     *      `partitionBy` (no sort before the writer), several fan out
     *      through one `partitionBy` write.
-    * The commit's `op` line records the attempt number, the rows written
-    * and the attempt's wall time in ms ([[history]] `detail`).
+    * The commit's `op` line records the rows written ([[history]]
+    * `detail`), next to the attempt number and ms every op line carries.
     *
     * Returns the committed version.
     */
@@ -1409,7 +1479,6 @@ object TxTable {
       partitionCol: String = "serverName",
       keys: Seq[String] = Seq("serverName", "tag"),
       order: Seq[String] = Seq("serverTimestamp", "sourceTimestamp"),
-      maxRetries: Int = 50,
       statsCols: Seq[String] = AutoStats): Long = {
     // null partition keys are unrepresentable under partition pruning
     // (an equi-join/filter on the partition value never matches null) and
@@ -1432,7 +1501,6 @@ object TxTable {
           it.foreach(r => seen += r.getString(0))
           seen.iterator
         }.collect().distinct.sorted.toSeq
-      var attempt = 0
       // constraints come from each attempt's snapshot: a concurrently
       // added CHECK must gate the retry, not be bypassed by a pre-loop
       // read (mergeInto re-reads per attempt; here the agg re-runs only
@@ -1442,9 +1510,7 @@ object TxTable {
       // pre-aggregation now runs only on this rare path instead of on
       // every commit.
       var enforcedFor: Map[String, String] = null
-      while (true) {
-        val t0 = System.nanoTime()
-        val snap = snapshot(tablePath)
+      commit(tablePath, "mergeLatest") { snap =>
         if (affected.nonEmpty && snap.constraints != enforcedFor) {
           enforceConstraints(LastValue.latestPerKey(batch0, keys, order),
             snap.constraints, "mergeLatest")
@@ -1498,27 +1564,11 @@ object TxTable {
               union.schema.fields.map(_.copy(nullable = true)))
             Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
           }
-        val ms = (System.nanoTime() - t0) / 1000000
-        val lines = Seq(s"op\tmergeLatest\tattempt\t$attempt" +
-            s"\trows\t${adds.map(_._4).sum}\tms\t$ms") ++
+        Right(Attempt(Seq("rows" -> adds.map(_._4).sum),
           adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
-          removedFiles.map(f => s"remove\t$f") ++ schemaLine
-        try {
-          publishCommit(tablePath, snap.version + 1, lines)
-          maybeCheckpoint(tablePath, snap.version + 1)
-          return snap.version + 1
-        } catch {
-          case _: FileAlreadyExistsException =>
-            // a concurrent writer committed first: orphan this attempt's
-            // data files (vacuum reclaims them) and rebase on the new
-            // snapshot
-            attempt += 1
-            if (attempt > maxRetries)
-              throw new IllegalStateException(
-                s"mergeLatest lost $maxRetries consecutive commit races on $tablePath")
-        }
+            removedFiles.map(f => s"remove\t$f") ++ schemaLine,
+          topDirs(adds.map(_._2))))
       }
-      -1L // unreachable
     } finally batch0.unpersist(blocking = false)
   }
 
@@ -1551,7 +1601,6 @@ object TxTable {
       tablePath: String,
       partitionCol: String = "serverName",
       keys: Seq[String] = Seq("serverName", "tag"),
-      maxRetries: Int = 50,
       statsCols: Seq[String] = AutoStats): Long = {
     require(keys.contains(partitionCol),
       s"keys must include the partition column $partitionCol")
@@ -1560,41 +1609,32 @@ object TxTable {
     try {
       val affected = del.select(partitionCol).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        val snap = snapshot(tablePath)
+      // a lost race recomputes from the fresh snapshot: a concurrent
+      // writer may have added new rows for the affected partitions, and
+      // the delete must never erase or resurrect a racer's rows
+      commit(tablePath, "deleteKeys") { snap =>
         val removedFiles = affected.flatMap(p => snap.filesByPartition.getOrElse(p, Nil))
-        if (removedFiles.isEmpty) return snap.version
-        val current = snapReader(spark, snap).parquet(removedFiles.map(p => resolveRef(tablePath, p)): _*)
+        lazy val current = snapReader(spark, snap).parquet(removedFiles.map(p => resolveRef(tablePath, p)): _*)
         // idempotence: a re-issued erasure whose keys are already gone
         // must NOT rewrite (and re-version, and orphan) whole partitions
         // — the read happens anyway, the semi-join probe is one action
-        if (current.join(del, keys, "left_semi").isEmpty) return snap.version
-        val kept = current.join(del, keys, "left_anti")
-        val statCols = eligibleStats(kept, statsCols)
-        // size-derived parallelism for the rewrite (r19) — measured A/B
-        // in [[graft.operators.Checkpoints.sizedLoop]]'s scaladoc
-        val adds = graft.operators.Checkpoints.sizedLoop(kept) {
-          writePartitions(kept, partitionCol, affected,
-            tablePath, statCols)
-        }
-        val lines = Seq(s"op\tdeleteKeys\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
-          removedFiles.map(f => s"remove\t$f")
-        try {
-          publishCommit(tablePath, snap.version + 1, lines)
-          maybeCheckpoint(tablePath, snap.version + 1)
-          return snap.version + 1
-        } catch {
-          case _: FileAlreadyExistsException =>
-            // rebase: a concurrent writer may have added new rows for the
-            // affected partitions — recompute from the fresh snapshot so
-            // the delete never erases or resurrects a racer's rows
-            attempt += 1
+        if (removedFiles.isEmpty || current.join(del, keys, "left_semi").isEmpty)
+          Left(snap.version)
+        else {
+          val kept = current.join(del, keys, "left_anti")
+          val statCols = eligibleStats(kept, statsCols)
+          // size-derived parallelism for the rewrite (r19) — measured A/B
+          // in [[graft.operators.Checkpoints.sizedLoop]]'s scaladoc
+          val adds = graft.operators.Checkpoints.sizedLoop(kept) {
+            writePartitions(kept, partitionCol, affected,
+              tablePath, statCols)
+          }
+          Right(Attempt(Nil,
+            adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
+              removedFiles.map(f => s"remove\t$f"),
+            topDirs(adds.map(_._2))))
         }
       }
-      throw new IllegalStateException(
-        s"deleteKeys lost $maxRetries consecutive commit races on $tablePath")
     } finally { del.unpersist(blocking = false); () }
   }
 
@@ -1654,7 +1694,6 @@ object TxTable {
       deleteCondition: Option[Column] = None,
       insertNotMatched: Boolean = true,
       mergeSchema: Boolean = false,
-      maxRetries: Int = 50,
       statsCols: Seq[String] = AutoStats): Long = {
     require(keys.contains(partitionCol),
       s"keys must include the partition column $partitionCol")
@@ -1682,9 +1721,9 @@ object TxTable {
         s"mergeInto source violates MERGE cardinality: $nRows rows but only " +
           s"$nKeys distinct ${keys.mkString("(", ",", ")")} keys")
 
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        val snap = snapshot(tablePath)
+      // a lost race rebases on the racer's snapshot: matched/unmatched
+      // sets are recomputed against the fresh partition contents
+      commit(tablePath, "mergeInto") { snap =>
         val removedFiles = affected.flatMap(p => snap.filesByPartition.getOrElse(p, Nil))
         val current = if (removedFiles.isEmpty) None
           else Some(snapReader(spark, snap).parquet(removedFiles.map(p => resolveRef(tablePath, p)): _*))
@@ -1750,22 +1789,11 @@ object TxTable {
               materialized.schema.fields.map(_.copy(nullable = true)))
             Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
           }
-        val lines = Seq(s"op\tmergeInto\tattempt\t$attempt") ++
+        Right(Attempt(Nil,
           adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
-          removedFiles.map(f => s"remove\t$f") ++ schemaLine
-        try {
-          publishCommit(tablePath, snap.version + 1, lines)
-          maybeCheckpoint(tablePath, snap.version + 1)
-          return snap.version + 1
-        } catch {
-          case _: FileAlreadyExistsException =>
-            // rebase on the racer's snapshot: matched/unmatched sets are
-            // recomputed against the fresh partition contents
-            attempt += 1
-        }
+            removedFiles.map(f => s"remove\t$f") ++ schemaLine,
+          topDirs(adds.map(_._2))))
       }
-      throw new IllegalStateException(
-        s"mergeInto lost $maxRetries consecutive commit races on $tablePath")
     } finally { src.unpersist(blocking = false); () }
   }
 
@@ -1838,7 +1866,7 @@ object TxTable {
     * Returns the committed version (or the current version unchanged if
     * it already equals `version`).
     */
-  def restore(tablePath: String, version: Long, maxRetries: Int = 50): Long = {
+  def restore(tablePath: String, version: Long): Long = {
     val target = snapshotAt(tablePath, version)
     require(target.allFiles.nonEmpty,
       s"cannot restore $tablePath to version $version: empty state")
@@ -1847,26 +1875,15 @@ object TxTable {
     require(missing.isEmpty,
       s"cannot restore to version $version: ${missing.size} data dirs " +
         s"were vacuumed (first: ${missing.head})")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
-      if (snap.version == version) return version
-      val lines = Seq(s"op\trestore\tto\t$version") ++
+    commit(tablePath, "restore") { snap =>
+      if (snap.version == version) Left(version)
+      else Right(Attempt(Seq("to" -> version),
         snap.allFiles.map(f => s"remove\t$f") ++
-        target.filesByPartition.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
-          fs.map(f => addLine(p, f, target.statsByFile.getOrElse(f, "")))
-        } ++
-        target.schemaJson.map(j => s"schema\t${StatsCodec.escField(j)}").toSeq
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+          target.filesByPartition.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
+            fs.map(f => addLine(p, f, target.statsByFile.getOrElse(f, "")))
+          } ++
+          target.schemaJson.map(j => s"schema\t${StatsCodec.escField(j)}").toSeq))
     }
-    throw new IllegalStateException(
-      s"restore lost $maxRetries consecutive commit races on $tablePath")
   }
 
   /** Record per-file BLOOM FILTERS for `cols` as a metadata-only commit
@@ -1896,54 +1913,14 @@ object TxTable {
       tablePath: String,
       cols: Seq[String],
       expectedItems: Long = 20000L,
-      fpp: Double = 0.03,
-      maxRetries: Int = 50): Long = {
-    require(cols.nonEmpty, "addBlooms needs at least one column")
-    val snap0 = snapshot(tablePath)
-    val bloomsByFile: Map[String, Map[String, ColStats]] =
-      snap0.allFiles.map { f =>
-        val df = spark.read.parquet(resolveRef(tablePath, f))
-        val entries = cols.flatMap { c =>
-          if (!df.columns.contains(c)) None
-          else {
-            val bf = df.select(col(c).cast("string").as("__b"))
-              .filter(col("__b").isNotNull)
-              .stat.bloomFilter("__b", expectedItems, fpp)
-            val bos = new java.io.ByteArrayOutputStream()
-            bf.writeTo(bos)
-            Some((c + BloomSuffix) -> ColStats('B',
-              java.util.Base64.getEncoder.encodeToString(bos.toByteArray), ""))
-          }
-        }.toMap
-        f -> entries
-      }.toMap
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
-      // only refs still live AND unchanged since the build get blooms;
-      // their CURRENT stats merge with (never lose to) the new entries
-      val lines = Seq(s"op\taddBlooms\tcols\t${cols.mkString(",")}") ++
-        snap.filesByPartition.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
-          fs.flatMap { f =>
-            bloomsByFile.get(f).filter(_.nonEmpty).map { bm =>
-              val merged =
-                StatsCodec.decode(snap.statsByFile.getOrElse(f, "")) ++ bm
-              addLine(p, f, StatsCodec.encode(merged))
-            }
-          }
-        }
-      if (lines.size == 1) return snap.version
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+      fpp: Double = 0.03): Long =
+    addFileStats(spark, tablePath, "addBlooms", cols, BloomSuffix, 'B') { (df, c) =>
+      val bos = new java.io.ByteArrayOutputStream()
+      df.select(col(c).cast("string").as("__b"))
+        .filter(col("__b").isNotNull)
+        .stat.bloomFilter("__b", expectedItems, fpp).writeTo(bos)
+      bos.toByteArray
     }
-    throw new IllegalStateException(
-      s"addBlooms lost $maxRetries consecutive commit races on $tablePath")
-  }
 
   /** Per-file HLL DISTINCT SKETCHES into the commit log — [[addBlooms]]'
     * sibling for the approximate-NDV question: each live file gets a
@@ -1958,49 +1935,41 @@ object TxTable {
       spark: SparkSession,
       tablePath: String,
       cols: Seq[String],
-      lgK: Int = 12,
-      maxRetries: Int = 50): Long = {
-    require(cols.nonEmpty, "addDistinctSketches needs at least one column")
-    val snap0 = snapshot(tablePath)
-    val byFile: Map[String, Map[String, ColStats]] =
-      snap0.allFiles.map { f =>
-        val df = spark.read.parquet(resolveRef(tablePath, f))
-        val entries = cols.flatMap { c =>
-          if (!df.columns.contains(c)) None
-          else {
-            val sk = df.agg(hll_sketch_agg(col(c).cast("string"), lit(lgK)))
-              .head().getAs[Array[Byte]](0)
-            Some((c + HllSuffix) -> ColStats('H',
-              java.util.Base64.getEncoder.encodeToString(sk), ""))
-          }
-        }.toMap
-        f -> entries
+      lgK: Int = 12): Long =
+    addFileStats(spark, tablePath, "addDistinctSketches", cols, HllSuffix, 'H') { (df, c) =>
+      df.agg(hll_sketch_agg(col(c).cast("string"), lit(lgK))).head().getAs[Array[Byte]](0)
+    }
+
+  /** The metadata-only commit behind [[addBlooms]] and
+    * [[addDistinctSketches]]: `build` summarizes column `c` of one live
+    * file, stored base64 as the stats entry `<c><suffix>` of type `typ`.
+    * Only refs still live AND unchanged since the build get the entry;
+    * their CURRENT stats merge with (never lose to) the new entries.
+    * Returns the committed version (unchanged when nothing to record).
+    */
+  private def addFileStats(spark: SparkSession, tablePath: String, op: String,
+      cols: Seq[String], suffix: String, typ: Char)(
+      build: (DataFrame, String) => Array[Byte]): Long = {
+    require(cols.nonEmpty, s"$op needs at least one column")
+    val byFile = snapshot(tablePath).allFiles.map { f =>
+      val df = spark.read.parquet(resolveRef(tablePath, f))
+      f -> cols.filter(df.columns.contains).map { c =>
+        (c + suffix) -> ColStats(typ,
+          java.util.Base64.getEncoder.encodeToString(build(df, c)), "")
       }.toMap
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
-      // only refs still live AND unchanged since the build get sketches;
-      // current stats merge with (never lose to) the new entries
-      val lines = Seq(s"op\taddDistinctSketches\tcols\t${cols.mkString(",")}") ++
-        snap.filesByPartition.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
-          fs.flatMap { f =>
-            byFile.get(f).filter(_.nonEmpty).map { m =>
-              addLine(p, f,
-                StatsCodec.encode(StatsCodec.decode(snap.statsByFile.getOrElse(f, "")) ++ m))
-            }
+    }.toMap
+    commit(tablePath, op) { snap =>
+      val adds = snap.filesByPartition.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
+        fs.flatMap { f =>
+          byFile.get(f).filter(_.nonEmpty).map { m =>
+            addLine(p, f,
+              StatsCodec.encode(StatsCodec.decode(snap.statsByFile.getOrElse(f, "")) ++ m))
           }
         }
-      if (lines.size == 1) return snap.version
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
       }
+      if (adds.isEmpty) Left(snap.version)
+      else Right(Attempt(Seq("cols" -> cols.mkString(",")), adds))
     }
-    throw new IllegalStateException(
-      s"addDistinctSketches lost $maxRetries consecutive commit races on $tablePath")
   }
 
   private[graft] val HllSuffix = "#hll"
@@ -2191,60 +2160,37 @@ object TxTable {
       spark: SparkSession,
       tablePath: String,
       name: String,
-      exprSql: String,
-      maxRetries: Int = 50): Long = {
+      exprSql: String): Long = {
     require(name.nonEmpty && !name.contains('\t') && !name.contains('\n'),
       s"constraint name must be a tab/newline-free token, got '$name'")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
+    commit(tablePath, "addConstraint") { snap =>
       require(!snap.constraints.contains(name),
         s"constraint $name already exists on $tablePath")
       read(spark, tablePath).foreach { cur =>
         enforceConstraints(cur, Map(name -> exprSql), s"addConstraint($name)")
       }
-      try {
-        publishCommit(tablePath, snap.version + 1, Seq(
-          s"op\taddConstraint\tname\t$name",
-          s"constraint\tadd\t$name\t${StatsCodec.escField(exprSql)}"))
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+      Right(Attempt(Seq("name" -> name),
+        Seq(s"constraint\tadd\t$name\t${StatsCodec.escField(exprSql)}")))
     }
-    throw new IllegalStateException(
-      s"addConstraint lost $maxRetries consecutive commit races on $tablePath")
   }
 
   /** Drop a CHECK constraint by name (no-op version bump if absent —
     * idempotent, like SQL `DROP CONSTRAINT IF EXISTS`). Returns the
     * committed version, or the current one when nothing was dropped.
     */
-  def dropConstraint(
-      tablePath: String, name: String, maxRetries: Int = 50): Long = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
-      if (!snap.constraints.contains(name)) return snap.version
-      try {
-        publishCommit(tablePath, snap.version + 1, Seq(
-          s"op\tdropConstraint\tname\t$name",
-          s"constraint\tdrop\t$name"))
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+  def dropConstraint(tablePath: String, name: String): Long =
+    commit(tablePath, "dropConstraint") { snap =>
+      if (!snap.constraints.contains(name)) Left(snap.version)
+      else Right(Attempt(Seq("name" -> name), Seq(s"constraint\tdrop\t$name")))
     }
-    throw new IllegalStateException(
-      s"dropConstraint lost $maxRetries consecutive commit races on $tablePath")
-  }
 
   /** One retained commit's audit row: version, the writer-declared
     * operation (from the `op` header line; "unknown" for header-less
     * commits), its key/value detail pairs, the file mtime, and add /
-    * remove counts.
+    * remove counts. Every write op's `detail` holds `attempt` (lost races
+    * before this commit won) and `ms` (the winning attempt's wall time),
+    * plus the op's own pairs: `rows` (mergeLatest), `to` (restore),
+    * `cols` (addBlooms, addDistinctSketches) or `name` (constraints).
     */
   final case class CommitInfo(
       version: Long,
@@ -2357,7 +2303,6 @@ object TxTable {
       partitionCol: String = "serverName",
       keys: Seq[String] = Seq("serverName", "tag"),
       order: Seq[String] = Seq("serverTimestamp", "sourceTimestamp"),
-      maxRetries: Int = 50,
       statsCols: Seq[String] = AutoStats): Long = {
     val batchLatest = LastValue.latestPerKey(
       batch.filter(col(partitionCol).isNotNull), keys, order).persist()
@@ -2378,25 +2323,13 @@ object TxTable {
       val statCols = eligibleStats(batchLatest, statsCols)
       val adds = writePartitions(batchLatest, partitionCol, affected,
         tablePath, statCols)
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        val snap = snapshot(tablePath)
+      commit(tablePath, "upsertDelta") { snap =>
         if (snap.constraints != enforcedFor) {
           enforceConstraints(batchLatest, snap.constraints, "upsertDelta")
           enforcedFor = snap.constraints
         }
-        val lines = Seq(s"op\tupsertDelta\tattempt\t$attempt") ++
-          adds.map { case (p, rel, st, _) => addLine(p, rel, st) }
-        try {
-          publishCommit(tablePath, snap.version + 1, lines)
-          maybeCheckpoint(tablePath, snap.version + 1)
-          return snap.version + 1
-        } catch {
-          case _: FileAlreadyExistsException => attempt += 1
-        }
+        Right(Attempt(Nil, adds.map { case (p, rel, st, _) => addLine(p, rel, st) }))
       }
-      throw new IllegalStateException(
-        s"upsertDelta lost $maxRetries consecutive commit races on $tablePath")
     } finally batchLatest.unpersist(blocking = false)
   }
 
@@ -2448,19 +2381,15 @@ object TxTable {
       keys: Seq[String] = Seq("serverName", "tag"),
       order: Seq[String] = Seq("serverTimestamp", "sourceTimestamp"),
       minFiles: Int = 2,
-      maxRetries: Int = 50,
       statsCols: Seq[String] = AutoStats): Long = {
     require(minFiles >= 2, "compacting below 2 directories is a no-op")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
+    commit(tablePath, "compact") { snap =>
       val victims = snap.filesByPartition.filter(_._2.size >= minFiles)
-      if (victims.isEmpty) return -1L
       // rewrites land BEFORE the commit references them (invisible until
-      // the publish wins); orphans of a lost race are vacuum fodder.
-      // Stats are RECOMPUTED on the collapsed data (not merged from the
-      // victims' entries): superseded rows drop out, so recomputed
-      // ranges are tighter — merging would only widen them.
+      // the publish wins). Stats are RECOMPUTED on the collapsed data
+      // (not merged from the victims' entries): superseded rows drop
+      // out, so recomputed ranges are tighter — merging would only widen
+      // them.
       val adds = victims.toSeq.sortBy(_._1).map { case (p, files) =>
         val rel = s"data/${UUID.randomUUID()}"
         val folded = LastValue.latestPerKey(
@@ -2469,19 +2398,12 @@ object TxTable {
         (p, rel, files,
           writeWithStats(folded, s"$tablePath/$rel", eligibleStats(folded, statsCols))._1)
       }
-      val lines = Seq(s"op\tcompact\tattempt\t$attempt") ++
+      if (adds.isEmpty) Left(-1L)
+      else Right(Attempt(Nil,
         adds.map { case (p, rel, _, st) => addLine(p, rel, st) } ++
-        adds.flatMap(_._3).map(f => s"remove\t$f")
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+          adds.flatMap(_._3).map(f => s"remove\t$f"),
+        adds.map(_._2)))
     }
-    throw new IllegalStateException(
-      s"compact lost $maxRetries consecutive commit races on $tablePath")
   }
 
   /** Z-order bulk ingest — the write side of multi-dimension data
@@ -2566,31 +2488,18 @@ object TxTable {
       yCol: String,
       buckets: Int,
       partition: String = "default",
-      statsCols: Seq[String] = AutoStats,
-      maxRetries: Int = 50): Long = {
+      statsCols: Seq[String] = AutoStats): Long = {
     // re-enforced in the commit loop iff the set changes under a race
     var enforcedFor = snapshot(tablePath).constraints
     enforceConstraints(df, enforcedFor, "ingestZOrdered")
     val bucketDirs = stageZOrdered(spark, df, tablePath, xCol, yCol, buckets, statsCols)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
+    commit(tablePath, "ingestZOrdered") { snap =>
       if (snap.constraints != enforcedFor) {
         enforceConstraints(df, snap.constraints, "ingestZOrdered")
         enforcedFor = snap.constraints
       }
-      val lines = Seq(s"op\tingestZOrdered\tattempt\t$attempt") ++
-        bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) }
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
-      }
+      Right(Attempt(Nil, bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) }))
     }
-    throw new IllegalStateException(
-      s"ingestZOrdered lost $maxRetries consecutive commit races on $tablePath")
   }
 
   /** OPTIMIZE ZORDER BY for a LIVE table: rewrite one partition's
@@ -2614,30 +2523,20 @@ object TxTable {
       yCol: String,
       buckets: Int,
       partition: String = "default",
-      statsCols: Seq[String] = AutoStats,
-      maxRetries: Int = 50): Long = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val snap = snapshot(tablePath)
+      statsCols: Seq[String] = AutoStats): Long =
+    commit(tablePath, "optimizeZOrder") { snap =>
       val victims = snap.filesByPartition.getOrElse(partition, Nil)
-      if (victims.isEmpty) return -1L
-      val df = snapReader(spark, snap)
-        .parquet(victims.map(f => resolveRef(tablePath, f)): _*)
-      val bucketDirs = stageZOrdered(spark, df, tablePath, xCol, yCol, buckets, statsCols)
-      val lines = Seq(s"op\toptimizeZOrder\tattempt\t$attempt") ++
-        bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) } ++
-        victims.map(f => s"remove\t$f")
-      try {
-        publishCommit(tablePath, snap.version + 1, lines)
-        maybeCheckpoint(tablePath, snap.version + 1)
-        return snap.version + 1
-      } catch {
-        case _: FileAlreadyExistsException => attempt += 1
+      if (victims.isEmpty) Left(-1L)
+      else {
+        val df = snapReader(spark, snap)
+          .parquet(victims.map(f => resolveRef(tablePath, f)): _*)
+        val bucketDirs = stageZOrdered(spark, df, tablePath, xCol, yCol, buckets, statsCols)
+        Right(Attempt(Nil,
+          bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) } ++
+            victims.map(f => s"remove\t$f"),
+          topDirs(bucketDirs.map(_._2))))
       }
     }
-    throw new IllegalStateException(
-      s"optimizeZOrder lost $maxRetries consecutive commit races on $tablePath")
-  }
 
   /** Delete data directories no longer referenced by the current snapshot
     * and older than `minAgeMs` (the age guard keeps in-flight writers'

@@ -78,4 +78,37 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"renames under graft.streaming (commit through TxTable instead):\n" +
         offenders.mkString("\n"))
   }
+
+  test("TxTable write ops share one commit loop: no hand-written retry loops") {
+    // a lost commit race is handled in one place, TxTable.commit; the
+    // only other catch is maybeCheckpoint's, where an existing
+    // checkpoint of the same version is not an error
+    val lostRace = """case\s+\w+\s*:\s*(java\.nio\.file\.)?FileAlreadyExistsException""".r
+    val sites = Seq(
+      "commit loop" -> "catch { case _: FileAlreadyExistsException => false }",
+      "maybeCheckpoint" -> "case _: FileAlreadyExistsException => true // identical state exists")
+    val hits = scalaFiles("src/main/scala/graft/streaming").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if lostRace.findFirstIn(line).isDefined =>
+          (sites.find { case (_, s) =>
+            f.getFileName.toString == "TxTable.scala" && line.trim == s
+          }.map(_._1), s"$f:${i + 1}: ${line.trim}")
+      }
+    }
+    sites.foreach { case (site, _) =>
+      assert(hits.count(_._1.contains(site)) == 1, s"the scan no longer finds the $site catch")
+    }
+    val offenders = hits.filter(_._1.isEmpty).map(_._2)
+    assert(offenders.isEmpty,
+      s"lost-race catches outside TxTable's commit loop (route the op through it):\n" +
+        offenders.mkString("\n"))
+    // and no write op grows its own retry budget again
+    val knob = """\bmaxRetries\s*:""".r
+    val knobs = scalaFiles("src/main/scala").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if knob.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(knobs.isEmpty, s"maxRetries parameters declared:\n" + knobs.mkString("\n"))
+  }
 }

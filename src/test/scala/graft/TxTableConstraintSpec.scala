@@ -118,7 +118,9 @@ class TxTableConstraintSpec extends SparkSpec {
     val h = TxTable.history(path)
     assert(h.map(_.version) == Seq(2L, 1L, 0L))
     assert(h.map(_.op) == Seq("mergeInto", "addConstraint", "mergeInto"))
-    assert(h.find(_.version == 1L).get.detail == Map("name" -> "pos"))
+    val v1 = h.find(_.version == 1L).get.detail
+    assert(v1 - "ms" == Map("attempt" -> "0", "name" -> "pos"))
+    assert(v1("ms").toLong >= 0L)
     val v2 = h.head
     assert(v2.nAdded == 1 && v2.nRemoved == 1) // partition a: one in, one out
     assert(h.last.nAdded == 2 && h.last.nRemoved == 0)
