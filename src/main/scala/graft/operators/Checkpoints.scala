@@ -103,7 +103,8 @@ private[graft] object Checkpoints {
     * round-latency-bound loops here (dupClusters, BFS, label
     * propagation, Bellman-Ford, k-core, PageRank) spend their
     * wall-clock on per-stage fixed costs, not data — measured on the
-    * real q58 pipeline at sf0.1 (LoopProbe, interleaved A/B ×3, min):
+    * real q58 pipeline at sf0.1 (OPTIMIZATION_r19.md §1, interleaved
+    * A/B ×3, min):
     *
     *   AQE on,  32 shuffle partitions (session default): 6.49 s
     *   AQE off, 32:                                      6.57 s

@@ -2581,9 +2581,9 @@ object ExtendedQueries {
       // materialization inside the loop is bounded by the two tables'
       // merged snapshots (scratch-table parquet, a few MB here), and the
       // per-step truncations otherwise run ~50 AQE stage jobs of 32 tiny
-      // tasks each (ProfQ: 64 jobs, all < 0.5 s, jobs-sum ≈ wall). Gated
-      // on the v0 orders snapshot's plan estimate — production-scale
-      // tables fall through to session confs.
+      // tasks each (OPTIMIZATION_r19.md §4: 64 jobs, all < 0.5 s,
+      // jobs-sum ≈ wall). Gated on the v0 orders snapshot's plan
+      // estimate — production-scale tables fall through to session confs.
       graft.operators.Checkpoints.sizedLoop(mergedOrders(0)) {
       for (v <- 1L to 2L) {
         val cdfA = TxTable.changeDataFeed(s, ordT, v - 1, v, "o_orderkey",

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.functions.Normalize
@@ -27,7 +27,7 @@ import graft.model.{OpcServer, OpcValue}
   *
   * 100 TB posture: each commit reads and rewrites only the partitions of
   * the servers in the batch; state (current-value table) is
-  * O(distinct tags), not O(events). The stateful variants keep the same
+  * O(distinct tags), not O(events). The stateful variant keeps the same
   * bound with one OpcValue of state per key.
   */
 object StreamingPipeline extends Serializable {
@@ -101,7 +101,7 @@ object StreamingPipeline extends Serializable {
     }
 
   /** Event-order "newer" for OpcValue rows: (serverTimestamp,
-    * sourceTimestamp) lexicographic — shared by both stateful variants.
+    * sourceTimestamp) lexicographic.
     */
   private[streaming] def newerValue(a: OpcValue, b: OpcValue): Boolean = {
     // full-precision comparison (getNanos carries the sub-millisecond
@@ -138,23 +138,6 @@ object StreamingPipeline extends Serializable {
             case _ => Iterator.empty
           }
       }.toDF()
-  }
-
-  /** [[latestPerTagStateful]] re-expressed on `transformWithState` — the
-    * Spark 4 arbitrary-state API that supersedes flatMapGroupsWithState:
-    * typed named state cells, explicit time modes, per-cell TTL, state
-    * schema evolution. Same changelog semantics as the fMGWS twin; state
-    * remains one OpcValue per key. Requires the RocksDB state store
-    * provider (`spark.sql.streaming.stateStore.providerClass`), which is
-    * also the provider you'd run at scale — changelog checkpointing and
-    * out-of-heap state.
-    */
-  def latestPerTagTws(normalized: DataFrame): DataFrame = {
-    import normalized.sparkSession.implicits._
-    normalized.as[OpcValue]
-      .groupByKey(v => (v.serverName, v.tag))
-      .transformWithState(new LatestValueProcessor, TimeMode.None(), OutputMode.Update())
-      .toDF()
   }
 
   /** Stream–static enrichment: attach tag-catalog metadata to every
@@ -364,31 +347,3 @@ final case class AnomalousReading(
     sourceTimestamp: Timestamp,
     z: Double,
     baselineN: Long)
-
-/** transformWithState processor for [[StreamingPipeline.latestPerTagTws]]:
-  * one named ValueState cell ("latest") holding the current OpcValue per
-  * (serverName, tag); emits only genuine updates (the changelog contract).
-  */
-class LatestValueProcessor
-    extends StatefulProcessor[(String, String), OpcValue, OpcValue] {
-
-  @transient private var latest: ValueState[OpcValue] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[OpcValue](
-      "latest", org.apache.spark.sql.Encoders.product[OpcValue], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: (String, String),
-      rows: Iterator[OpcValue],
-      timerValues: TimerValues): Iterator[OpcValue] = {
-    val incoming = rows.reduceOption((a, b) =>
-      if (StreamingPipeline.newerValue(a, b)) a else b)
-    incoming match {
-      case Some(in) if !latest.exists() || StreamingPipeline.newerValue(in, latest.get()) =>
-        latest.update(in)
-        Iterator.single(in)
-      case _ => Iterator.empty
-    }
-  }
-}

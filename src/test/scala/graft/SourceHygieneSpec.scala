@@ -111,4 +111,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(knobs.isEmpty, s"maxRetries parameters declared:\n" + knobs.mkString("\n"))
   }
+
+  test("the only mains are Bench, Demo, Verify, ScaleData and Prof") {
+    // a one-off measurement runs through Prof or a spec, not a new main
+    val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = scalaFiles("src/main/scala").flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toSeq
+      lines.indices.filter(i => entry.findFirstIn(lines(i)).isDefined).map { i =>
+        lines.take(i + 1).reverseIterator
+          .flatMap(l => objectDecl.findFirstMatchIn(l).map(_.group(1)))
+          .nextOption().getOrElse(s"$f:${i + 1}")
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "Demo", "Prof", "ScaleData", "Verify"),
+      s"mains under src/main/scala: ${mains.sorted.mkString(", ")}")
+  }
 }
