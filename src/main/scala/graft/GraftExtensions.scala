@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CharEntropy, CosineSimilarity, Int8QuantStats, RollingHash, SimHash32, SortedLongIntersectCount, UrlCanonicalize}
+import graft.functions.{GraftFunctions, TxTableTvf}
 
 /** SparkSessionExtensions entry point: makes the engine's Catalyst
   * expressions available to pure-SQL users at session build time —
@@ -16,75 +15,22 @@ import graft.functions.{CharEntropy, CosineSimilarity, Int8QuantStats, RollingHa
   *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *
-  * The same registrations are available imperatively via
-  * [[graft.functions.GraftFunctions.register]]; this path covers
+  * It injects every entry of [[GraftFunctions.all]] and
+  * [[TxTableTvf.all]], the same tables [[GraftFunctions.register]] loops
+  * over for a session that is already running; this path covers
   * deployments where the session is built by infra (spark-submit,
-  * Thrift/Connect servers) and user code never sees the builder.
+  * Thrift/Connect servers) and user code never sees the builder. The
+  * DataFrame helpers in [[GraftFunctions]] need neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two ARRAY<FLOAT> vectors"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash32"),
-      info("simhash32", "simhash32(tokens) - 32-bit SimHash of an ARRAY<STRING>"),
-      (exprs: Seq[Expression]) => SimHash32(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "rolling_hash(s) - Rabin-Karp fingerprint mod 1e9+7"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("char_entropy"),
-      info("char_entropy", "char_entropy(s) - Shannon entropy (nats) of the char distribution"),
-      (exprs: Seq[Expression]) => CharEntropy(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - common-element count of two sorted ARRAY<BIGINT>"),
-      (exprs: Seq[Expression]) => SortedLongIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("int8_quant"),
-      info("int8_quant",
-        "int8_quant(v) - struct(scale, checksum) of symmetric int8 quantization of an ARRAY<FLOAT>"),
-      (exprs: Seq[Expression]) => Int8QuantStats(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_canonicalize"),
-      info("url_canonicalize",
-        "url_canonicalize(s) - canonical form of an http(s) URL (NULL if unparseable)"),
-      (exprs: Seq[Expression]) => UrlCanonicalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("text_canonicalize"),
-      info("text_canonicalize",
-        "text_canonicalize(s) - whitespace-collapsed, NFC-normalized, lowercased form"),
-      (exprs: Seq[Expression]) => graft.functions.TextCanonicalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_bounds"),
-      info("cdc_bounds",
-        "cdc_bounds(s, window, modulus, minLen) - content-defined chunk end positions (1-based)"),
-      (exprs: Seq[Expression]) => graft.functions.CdcBounds(exprs(0),
-        graft.functions.HashExpressions.litInt(exprs(1), "cdc_bounds", "window"),
-        graft.functions.HashExpressions.litInt(exprs(2), "cdc_bounds", "modulus"),
-        graft.functions.HashExpressions.litInt(exprs(3), "cdc_bounds", "minLen"))))
-    ext.injectFunction((
-      FunctionIdentifier("image_dhash"),
-      info("image_dhash",
-        "image_dhash(payload) - 64-bit dHash of an encoded image (BMP/PNG/JPEG/GIF/QOI/TIFF), NULL if undecodable"),
-      (exprs: Seq[Expression]) => graft.functions.ImageDHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler",
-        "jaro_winkler(a, b) - Jaro-Winkler similarity (p=0.1, prefix<=4, 0.7 boost threshold)"),
-      (exprs: Seq[Expression]) => graft.functions.JaroWinkler(exprs(0), exprs(1))))
+    GraftFunctions.all.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, usage), builder))
+    }
     // ACID-table reads as table-valued functions: FROM txtable_merged(...)
-    graft.functions.TxTableTvf.all.foreach { case (name, usage, builder) =>
-      ext.injectTableFunction((
-        FunctionIdentifier(name), info(name, usage), builder))
+    TxTableTvf.all.foreach { case (name, usage, builder) =>
+      ext.injectTableFunction((FunctionIdentifier(name), GraftFunctions.info(name, usage), builder))
     }
     // optimizer rule: banded rewrite of levenshtein threshold predicates
     ext.injectOptimizerRule(_ => graft.plans.BoundedLevenshteinRewrite)

@@ -63,7 +63,7 @@ object TextAnalysis {
     * signal. Backed by the one-pass codegen [[CharEntropy]] expression
     * (O(length) per row inside WholeStageCodegen — the interpreted HOF
     * formulation this replaces re-scanned the char array per distinct
-    * char). Requires [[GraftFunctions.register]] on the session.
+    * char).
     *
     * NULL text coalesces to 0.0 — the contract the pre-codegen
     * formulation had and the q113 oracle encodes (a missing document

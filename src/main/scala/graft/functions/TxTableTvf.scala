@@ -18,9 +18,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DataFrame API produces ([[graft.streaming.TxTable.read]] /
   * `readMergedAt` / `readAt` / `readAsOf`), so Catalyst sees one plan
   * shape regardless of entry path — SqlParitySpec pins hash equality
-  * between the SQL and DSL forms. Registered both imperatively
-  * ([[GraftFunctions.register]]) and at session build time
-  * ([[graft.GraftExtensions]]).
+  * between the SQL and DSL forms. SQL text sees them on a session built
+  * with [[graft.GraftExtensions]] or after [[GraftFunctions.register]];
+  * DataFrame code calls `TxTable` directly and needs neither.
   *
   * Arguments must be foldable literals: a table PATH is catalog metadata,
   * not data — resolving it per-row is meaningless, and literal-only

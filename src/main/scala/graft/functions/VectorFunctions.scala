@@ -1,12 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
 /** Cosine similarity over two `ARRAY<FLOAT>` embedding columns as a native
@@ -306,7 +308,6 @@ case class SrpBits(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level entry points for the graft expressions. */
 /** Symmetric int8 quantization stats over an `ARRAY<FLOAT>` embedding as a
   * native codegen expression: struct(scale, checksum) with
   * scale = 127 / max|x_i| and checksum = Σ floor(x_i·scale + 0.5) — the
@@ -870,95 +871,122 @@ case class PointInConvexPoly(first: Expression, second: Expression, third: Expre
 
 object GraftFunctions {
 
-  /** Idempotent; call once per session before using the helpers below. */
+  import HashExpressions.litInt
+
+  /** (name, usage, builder) for every graft scalar function — the one
+    * place a function's SQL name, usage text and Catalyst builder live.
+    * The helpers below build from it directly, so they work on any
+    * session; [[register]] and [[graft.GraftExtensions]] loop over it to
+    * expose the same entries to SQL text.
+    */
+  val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two ARRAY<FLOAT> vectors",
+      e => CosineSimilarity(e(0), e(1))),
+    ("max_sim", "max_sim(q, d, subDim) - late-interaction score: per query " +
+      "sub-vector, the best cosine over the document's sub-vectors, summed",
+      e => MaxSim(e(0), e(1), litInt(e(2), "max_sim", "subDim"))),
+    ("simhash32", "simhash32(tokens) - 32-bit SimHash of an ARRAY<STRING>",
+      e => SimHash32(e.head)),
+    ("simhash60", "simhash60(tokens) - 60-bit SimHash of an ARRAY<STRING>",
+      e => SimHash60(e.head)),
+    ("rolling_hash", "rolling_hash(s) - Rabin-Karp fingerprint mod 1e9+7",
+      e => RollingHash(e.head)),
+    ("char_entropy", "char_entropy(s) - Shannon entropy (nats) of the char distribution",
+      e => CharEntropy(e.head)),
+    ("srp_bits", "srp_bits(v, planes) - sign-random-projection bits of an " +
+      "ARRAY<FLOAT> against plane-major ARRAY<DOUBLE> hyperplanes",
+      e => SrpBits(e(0), e(1))),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - common-element count of two sorted ARRAY<BIGINT>",
+      e => SortedLongIntersectCount(e(0), e(1))),
+    ("int8_quant",
+      "int8_quant(v) - struct(scale, checksum) of symmetric int8 quantization of an ARRAY<FLOAT>",
+      e => Int8QuantStats(e.head)),
+    ("adc_score", "adc_score(codes, lut) - product-quantization score: the sum " +
+      "of the flat per-query lookup-table cell each TINYINT code selects",
+      e => AdcScore(e(0), e(1))),
+    ("pq_encode", "pq_encode(v, codebooks, m) - nearest-centroid code per " +
+      "sub-vector of an ARRAY<FLOAT> against flat codebooks",
+      e => PqEncode(e(0), e(1), litInt(e(2), "pq_encode", "m"))),
+    ("pq_lut", "pq_lut(v, codebooks, m) - flat ADC lookup table of a query " +
+      "vector against flat codebooks",
+      e => PqLut(e(0), e(1), litInt(e(2), "pq_lut", "m"))),
+    ("hilbert16", "hilbert16(x, y) - Hilbert-curve distance of two 16-bit coordinates",
+      e => Hilbert16Dist(e(0), e(1))),
+    ("point_in_convex_poly", "point_in_convex_poly(verts, px, py) - whether an " +
+      "integer point lies in a counter-clockwise convex polygon",
+      e => PointInConvexPoly(e(0), e(1), e(2))),
+    ("url_canonicalize",
+      "url_canonicalize(s) - canonical form of an http(s) URL (NULL if unparseable)",
+      e => UrlCanonicalize(e.head)),
+    ("text_canonicalize",
+      "text_canonicalize(s) - whitespace-collapsed, NFC-normalized, lowercased form",
+      e => TextCanonicalize(e.head)),
+    ("cdc_bounds",
+      "cdc_bounds(s, window, modulus, minLen) - content-defined chunk end positions (1-based)",
+      e => CdcBounds(e(0), litInt(e(1), "cdc_bounds", "window"),
+        litInt(e(2), "cdc_bounds", "modulus"), litInt(e(3), "cdc_bounds", "minLen"))),
+    ("image_dhash", "image_dhash(payload) - 64-bit dHash of an encoded image " +
+      "(BMP/PNG/JPEG/GIF/QOI/TIFF), NULL if undecodable",
+      e => ImageDHash(e.head)),
+    ("jaro_winkler",
+      "jaro_winkler(a, b) - Jaro-Winkler similarity (p=0.1, prefix<=4, 0.7 boost threshold)",
+      e => JaroWinkler(e(0), e(1))),
+    ("double_sortable_bits",
+      "double_sortable_bits(d) - order-preserving BIGINT image of a non-NaN DOUBLE",
+      e => DoubleSortableBits(e.head)),
+    ("sortable_bits_double",
+      "sortable_bits_double(b) - inverse of double_sortable_bits",
+      e => SortableBitsDouble(e.head)))
+
+  private val builders = all.map { case (name, _, builder) => name -> builder }.toMap
+
+  /** The ExpressionInfo both SQL registration paths publish. */
+  private[graft] def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo(classOf[graft.GraftExtensions].getName, null, name, usage, "")
+
+  /** Registers [[all]] and the `txtable_*` table functions on `spark`, for
+    * a session that runs SQL text and was not built with
+    * [[graft.GraftExtensions]]. The DataFrame helpers below never need it.
+    */
   def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "max_sim", exprs => MaxSim(exprs(0), exprs(1),
-        HashExpressions.litInt(exprs(2), "max_sim", "subDim")), "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "srp_bits", exprs => SrpBits(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "int8_quant", exprs => Int8QuantStats(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "adc_score", exprs => AdcScore(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1),
-        HashExpressions.litInt(exprs(2), "pq_encode", "m")), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pq_lut", exprs => PqLut(exprs(0), exprs(1),
-        HashExpressions.litInt(exprs(2), "pq_lut", "m")), "built-in")
-    registry.createOrReplaceTempFunction(
-      "hilbert16", exprs => Hilbert16Dist(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "point_in_convex_poly",
-      exprs => PointInConvexPoly(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "url_canonicalize", exprs => UrlCanonicalize(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "text_canonicalize", exprs => TextCanonicalize(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "cdc_bounds", exprs => CdcBounds(exprs(0),
-        HashExpressions.litInt(exprs(1), "cdc_bounds", "window"),
-        HashExpressions.litInt(exprs(2), "cdc_bounds", "modulus"),
-        HashExpressions.litInt(exprs(3), "cdc_bounds", "minLen")), "built-in")
-    registry.createOrReplaceTempFunction(
-      "image_dhash", exprs => ImageDHash(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "double_sortable_bits", exprs => DoubleSortableBits(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "sortable_bits_double", exprs => SortableBitsDouble(exprs.head), "built-in")
-    // ACID-table reads as table-valued functions: FROM txtable_merged(...)
-    val tvf = spark.sessionState.tableFunctionRegistry
-    TxTableTvf.all.foreach { case (name, _, builder) =>
-      tvf.createOrReplaceTempFunction(name, builder, "built-in")
+    all.foreach { case (name, usage, builder) =>
+      spark.sessionState.functionRegistry
+        .registerFunction(FunctionIdentifier(name), info(name, usage), builder)
+    }
+    TxTableTvf.all.foreach { case (name, usage, builder) =>
+      spark.sessionState.tableFunctionRegistry
+        .registerFunction(FunctionIdentifier(name), info(name, usage), builder)
     }
   }
 
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+  private def call(name: String, args: Column*): Column =
+    column(builders(name)(args.map(expression)))
+
+  def cosineSim(a: Column, b: Column): Column = call("cosine_sim", a, b)
   def maxSim(a: Column, b: Column, subDim: Int): Column =
-    call_function("max_sim", a, b, lit(subDim))
-  def simhash32(tokens: Column): Column = call_function("simhash32", tokens)
-  def simhash60(tokens: Column): Column = call_function("simhash60", tokens)
-  def rollingHash(text: Column): Column = call_function("rolling_hash", text)
-  def charEntropy(text: Column): Column = call_function("char_entropy", text)
-  def srpBits(vec: Column, planes: Column): Column =
-    call_function("srp_bits", vec, planes)
+    call("max_sim", a, b, lit(subDim))
+  def simhash32(tokens: Column): Column = call("simhash32", tokens)
+  def simhash60(tokens: Column): Column = call("simhash60", tokens)
+  def rollingHash(text: Column): Column = call("rolling_hash", text)
+  def charEntropy(text: Column): Column = call("char_entropy", text)
+  def srpBits(vec: Column, planes: Column): Column = call("srp_bits", vec, planes)
   def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function("sorted_intersect_count", a, b)
-  def int8Quant(vec: Column): Column = call_function("int8_quant", vec)
-  def hilbert16(x: Column, y: Column): Column = call_function("hilbert16", x, y)
+    call("sorted_intersect_count", a, b)
+  def int8Quant(vec: Column): Column = call("int8_quant", vec)
+  def hilbert16(x: Column, y: Column): Column = call("hilbert16", x, y)
   def pointInConvexPoly(verts: Column, px: Column, py: Column): Column =
-    call_function("point_in_convex_poly", verts, px, py)
-  def adcScore(codes: Column, lut: Column): Column =
-    call_function("adc_score", codes, lut)
+    call("point_in_convex_poly", verts, px, py)
+  def adcScore(codes: Column, lut: Column): Column = call("adc_score", codes, lut)
   def pqEncode(vec: Column, flatCodebooks: Column, m: Int): Column =
-    call_function("pq_encode", vec, flatCodebooks, lit(m))
+    call("pq_encode", vec, flatCodebooks, lit(m))
   def pqLut(vec: Column, flatCodebooks: Column, m: Int): Column =
-    call_function("pq_lut", vec, flatCodebooks, lit(m))
-  def urlCanonicalize(url: Column): Column = call_function("url_canonicalize", url)
-  def textCanonicalize(text: Column): Column = call_function("text_canonicalize", text)
+    call("pq_lut", vec, flatCodebooks, lit(m))
+  def urlCanonicalize(url: Column): Column = call("url_canonicalize", url)
+  def textCanonicalize(text: Column): Column = call("text_canonicalize", text)
   def cdcBounds(text: Column, window: Int, modulus: Int, minLen: Int): Column =
-    call_function("cdc_bounds", text, lit(window), lit(modulus), lit(minLen))
-  def jaroWinkler(a: Column, b: Column): Column =
-    call_function("jaro_winkler", a, b)
-  def doubleSortableBits(d: Column): Column =
-    call_function("double_sortable_bits", d)
-  def sortableBitsDouble(s: Column): Column =
-    call_function("sortable_bits_double", s)
+    call("cdc_bounds", text, lit(window), lit(modulus), lit(minLen))
+  def jaroWinkler(a: Column, b: Column): Column = call("jaro_winkler", a, b)
+  def doubleSortableBits(d: Column): Column = call("double_sortable_bits", d)
+  def sortableBitsDouble(s: Column): Column = call("sortable_bits_double", s)
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 
 /** Bloom-filter join pruning: build a Bloom filter over the (filtered) join
   * keys of the small side, ship it to every fact-side task, and drop fact
@@ -44,14 +47,14 @@ object BloomPrune {
       dimKey: String,
       expectedItems: Long,
       fpp: Double): Option[Array[Byte]] = {
-    registerAgg(dim.sparkSession)
     // Same sizing formula as util.sketch.BloomFilter.optimalNumOfBits.
     val numBits = math.max(
       math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong,
       64L)
     val row = dim
-      .select(call_function("graft_bloom_agg",
-        col(dimKey).cast("long"), lit(expectedItems), lit(numBits)).as("bf"))
+      .select(column(new BloomFilterAggregate(expression(col(dimKey).cast("long")),
+        expression(lit(expectedItems)), expression(lit(numBits))).toAggregateExpression())
+        .as("bf"))
       .head()
     if (row.isNullAt(0)) None else Some(row.getAs[Array[Byte]](0))
   }
@@ -60,10 +63,8 @@ object BloomPrune {
     * `key` must be LONG (the sketch stores raw longs for integral keys —
     * same convention on build and probe side).
     */
-  def mightContain(spark: SparkSession, bloom: Array[Byte], key: Column): Column = {
-    registerProbe(spark)
-    call_function("graft_bloom_might_contain", lit(bloom), key)
-  }
+  def mightContain(bloom: Array[Byte], key: Column): Column =
+    column(BloomFilterMightContain(expression(lit(bloom)), expression(key)))
 
   /** Exact inner equi-join with a Bloom pre-prune of the fact side: the
     * filter runs in the fact scan stage (before the shuffle), the join
@@ -80,27 +81,10 @@ object BloomPrune {
       dimKey: String,
       expectedItems: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
-    val spark = fact.sparkSession
     val pruned = buildBloom(dim, dimKey, expectedItems, fpp) match {
-      case Some(bloom) => fact.filter(mightContain(spark, bloom, col(factKey)))
+      case Some(bloom) => fact.filter(mightContain(bloom, col(factKey)))
       case None        => fact.filter(lit(false))
     }
     pruned.join(dim, col(factKey) === col(dimKey))
   }
-
-  private def registerProbe(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-
-  private def registerAgg(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
 }

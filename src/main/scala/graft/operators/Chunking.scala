@@ -45,7 +45,6 @@ object Chunking {
       window: Int = 16,
       modulus: Int = 32,
       minLen: Int = 12): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val n = length(col(textCol)).cast("long")
     val bounds = GraftFunctions.cdcBounds(col(textCol), window, modulus, minLen)
     // append the text end as the tail chunk's boundary unless a hash

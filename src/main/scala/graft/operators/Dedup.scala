@@ -157,7 +157,6 @@ object Dedup {
       textCol: String,
       k: Int,
       blockCols: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = df.filter(length(col(textCol)) >= k)
       .select(col(idCol) +: blockCols.map(col) :+ col(textCol): _*)
       .select(col(idCol) +: blockCols.map(col) :+ col(textCol) :+

@@ -68,7 +68,6 @@ object Layout {
     * integer values, so CASE-vs-loop cannot diverge.
     */
   def hilbert16(df: DataFrame, xCol: String, yCol: String, outCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn(outCol,
       graft.functions.GraftFunctions.hilbert16(
         col(xCol).cast("long"), col(yCol).cast("long")))

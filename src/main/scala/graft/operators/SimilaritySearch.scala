@@ -1048,7 +1048,6 @@ object SimilaritySearch {
       nProbe: Int = 4,
       refine: Int = 4,
       maxBroadcastQueries: Long = 65536L): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"),
       pqLut(col(vecCol), codebooks).as("__lut"),
       explode(probeCells(col(vecCol), centroids, nProbe)).as("__cell"))

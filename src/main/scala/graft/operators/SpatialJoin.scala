@@ -177,9 +177,7 @@ object SpatialJoin {
     // fold evaluated an interpreted lambda per edge per candidate row,
     // and the candidate stream (points × bbox-overlapping polygons) is
     // exactly where this operator's time goes (q245 profile: one 3 s job
-    // = the probe stage). Identical operand order and ≥ 0 test; the
-    // session registration is idempotent.
-    graft.functions.GraftFunctions.register(points.sparkSession)
+    // = the probe stage). Identical operand order and ≥ 0 test.
     val inside = graft.functions.GraftFunctions.pointInConvexPoly(
       verts, col(px).cast("long"), col(py).cast("long"))
     pts.join(cells, Seq("__cx", "__cy"))

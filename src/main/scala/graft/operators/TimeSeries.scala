@@ -517,7 +517,6 @@ object TimeSeries {
       keyCols: Seq[String],
       tCol: String,
       yCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // single synthetic group key (the selection machinery groups on one
     // string column); the \\u0001 separator cannot appear in printable
     // key text, so multi-key tuples cannot collide. Each component is

@@ -392,7 +392,6 @@ object ExtendedQueries {
     Q("q35_simhash_signatures",
       s"""WITH $simhashCte
          |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           GraftFunctions.simhash32(TextAnalysis.tokens(col("text"))).as("simhash"))
@@ -408,7 +407,6 @@ object ExtendedQueries {
          |FROM sig a JOIN sig b
          |  ON a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3
          |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val sigs = t(s, d, "documents")
         .select(col("doc_id"),
           GraftFunctions.simhash32(TextAnalysis.tokens(col("text"))).as("simhash"))
@@ -427,7 +425,6 @@ object ExtendedQueries {
          |FROM sig a JOIN sig b
          |  ON a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3
          |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val sigs = t(s, d, "documents")
         .select(col("doc_id"),
           GraftFunctions.simhash60(TextAnalysis.tokens(col("text"))).as("simhash"))
@@ -524,7 +521,6 @@ object ExtendedQueries {
         |  list_reduce(list_transform(regexp_split_to_array(text, ''),
         |    c -> ord(c)::BIGINT), (x, y) -> (x * 31 + y) % 1000000007) AS fp
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), GraftFunctions.rollingHash(col("text")).as("fp"))
         .orderBy("doc_id")
@@ -541,7 +537,6 @@ object ExtendedQueries {
         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank,
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM scored QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.bruteForceTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", k = 5)
@@ -566,7 +561,6 @@ object ExtendedQueries {
         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank,
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM scored QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.filteredTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -591,7 +585,6 @@ object ExtendedQueries {
         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank,
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM scored QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.sameAttrTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -620,7 +613,6 @@ object ExtendedQueries {
             s"SELECT CAST($d AS INT) AS dim, round((SELECT count(*) FROM t$d JOIN gold USING (query_id, neighbor_id))::DOUBLE / (n * 5), 6) AS recall FROM nq")
           .mkString("\nUNION ALL\n")}
         |ORDER BY dim""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.matryoshkaRecall(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -635,7 +627,6 @@ object ExtendedQueries {
         |  ON a.label = b.label AND a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.35
         |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       SimilaritySearch.nearDupPairsBlocked(
           t(s, d, "embeddings"), "vec_id", "embedding", "label", threshold = 0.35)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
@@ -659,7 +650,6 @@ object ExtendedQueries {
         |FROM c a JOIN c b ON a.cell = b.cell AND a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.35
         |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       SimilaritySearch.semanticDupPairs(
           t(s, d, "embeddings"), "vec_id", "embedding",
           SimilaritySearch.axisSignCell(col("embedding"), 8), threshold = 0.35)
@@ -681,7 +671,6 @@ object ExtendedQueries {
         |  WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.35)
         |SELECT id2 AS removed, min(id1) AS keep_witness
         |FROM p GROUP BY id2 ORDER BY removed""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       SimilaritySearch.semanticRemovals(
           t(s, d, "embeddings"), "vec_id", "embedding",
           SimilaritySearch.axisSignCell(col("embedding"), 8), threshold = 0.35)
@@ -717,7 +706,6 @@ object ExtendedQueries {
         |SELECT vec_id, keep_witness, witness_in FROM corp_rej
         |UNION ALL SELECT vec_id, keep_witness, witness_in FROM batch_rej
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.admissionDecisions(
           emb.filter(col("vec_id") % 5 < 4), emb.filter(col("vec_id") % 5 === 4),
@@ -736,7 +724,6 @@ object ExtendedQueries {
       // so no oracle; the decision semantics are oracle-paired in q201
       // and the lifecycle (incl. append visibility to a second batch)
       // is SimilaritySearchSpec-pinned.
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.scratchDir("graft-q202") + "/idx"
       val corpus = emb.filter(col("vec_id") % 5 < 4)
@@ -797,7 +784,6 @@ object ExtendedQueries {
         |SELECT vec_id, keep_witness, witness_in FROM corp_rej
         |UNION ALL SELECT vec_id, keep_witness, witness_in FROM batch_rej
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.oracleArtifactDir("q202b_idx")
       val corpus = emb.filter(col("vec_id") % 5 < 4)
@@ -853,7 +839,6 @@ object ExtendedQueries {
         |FROM nrel n LEFT JOIN agg a USING (query_id)
         |JOIN ideal i USING (query_id)
         |ORDER BY query_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") % 50 === 0)
       val run = SimilaritySearch.bruteForceTopK(
@@ -873,7 +858,6 @@ object ExtendedQueries {
     Q.noOracle("q42_lsh_topk") { (s, d) =>
       // SRP-LSH is approximate (recall < 1): no SQL oracle; recall vs the
       // exact q40 result is asserted in SimilaritySearchSpec.
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       // planes/tables tuned on the synthetic embeddings: they are weakly
       // clustered (max intra-label cosine ≈ 0.45), so per-plane collision
@@ -932,7 +916,6 @@ object ExtendedQueries {
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM scored QUALIFY rank <= 5
         |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.lshTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -981,7 +964,6 @@ object ExtendedQueries {
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM cand QUALIFY rank <= 5
         |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.oracleArtifactDir("q54b_idx")
       val (cents, assigned) = SimilaritySearch.ivfBuildIndex(
@@ -1001,7 +983,6 @@ object ExtendedQueries {
       // data-adaptive ANN scale path; approximate, so no SQL oracle.
       // Recall vs exact q40 asserted in QueriesSpec (beats SRP-LSH on
       // clustered data because the partition adapts to it).
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.ivfTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -1019,7 +1000,6 @@ object ExtendedQueries {
       // then probe. Approximate (no SQL oracle); SimilaritySearchSpec
       // pins append==bulk-assignment equality and the recall floor, and
       // cellImbalance is the documented re-train signal.
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.scratchDir("graft-q175") + "/idx"
       val seed = emb.filter(col("vec_id") % 5 < 3)
@@ -1070,7 +1050,6 @@ object ExtendedQueries {
         |       WHEN vec_id % 5 = 3 THEN 'b1' ELSE 'b2' END AS batch,
         |  CAST(cell AS BIGINT) AS cell
         |FROM a WHERE rn = 1 ORDER BY neighbor_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.oracleArtifactDir("q175b_idx")
       val seed = emb.filter(col("vec_id") % 5 < 3)
@@ -1107,7 +1086,6 @@ object ExtendedQueries {
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM scored QUALIFY rank > 5 AND rank <= 15
         |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.hardNegatives(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -1146,7 +1124,6 @@ object ExtendedQueries {
         |  sn.negative_id, round(sn.neg_cos, 6) AS neg_cos
         |FROM sp JOIN sn USING (query_id)
         |WHERE sp.rk = 1 AND sn.rk = 1 ORDER BY query_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.contrastiveTriplets(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", "label")
@@ -1225,7 +1202,6 @@ object ExtendedQueries {
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM rer QUALIFY rank <= 5
         |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val path = Q.oracleArtifactDir("q163b_idx")
       val (cents, books, coded) = SimilaritySearch.ivfPqBuildIndex(
@@ -1246,7 +1222,6 @@ object ExtendedQueries {
       // ADC shortlist, exact re-rank of shortlist ids only. Approximate,
       // so no SQL oracle; recall floor vs exact q40 asserted in
       // SimilaritySearchSpec and QueriesSpec.
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       SimilaritySearch.ivfPqTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -2580,7 +2555,7 @@ object ExtendedQueries {
       // size-derived parallelism for the refresh steps (r19): every
       // materialization inside the loop is bounded by the two tables'
       // merged snapshots (scratch-table parquet, a few MB here), and the
-      // per-step truncations otherwise run ~50 AQE stage jobs of 32 tiny
+      // per-step collects otherwise run ~50 AQE stage jobs of 32 tiny
       // tasks each (OPTIMIZATION_r19.md §4: 64 jobs, all < 0.5 s,
       // jobs-sum ≈ wall). Gated on the v0 orders snapshot's plan
       // estimate — production-scale tables fall through to session confs.
@@ -2590,15 +2565,18 @@ object ExtendedQueries {
           Seq("o_custkey", "p"), oKeys, Seq("seq"))
         val cdfB = TxTable.changeDataFeed(s, custT, v - 1, v, "c_custkey",
           Seq("seg"), cKeys, Seq("seq"))
-        // materialize the (tiny) state between steps: each step's plan
-        // otherwise carries the previous step's whole lineage — per-step
-        // truncation is exactly what a production maintenance loop does
-        // with its persisted state table (the q249 parquet state)
-        state = graft.operators.Checkpoints.truncate(
-          IncrementalAgg.refreshJoinSumCount(state,
-            cdfA.drop("o_orderkey"), mergedOrders(v - 1), cdfB, mergedCust(v),
-            leftKey = "o_custkey", rightKey = "c_custkey",
-            groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p")))
+        // materialize the state between steps: each step's plan otherwise
+        // carries the previous step's whole lineage — per-step truncation
+        // is exactly what a production maintenance loop does with its
+        // persisted state table (the q249 parquet state). The state is one
+        // row per segment, so it travels as a local relation: unlike a
+        // localCheckpoint it leaves no persisted RDD in the session
+        val next = IncrementalAgg.refreshJoinSumCount(state,
+          cdfA.drop("o_orderkey"), mergedOrders(v - 1), cdfB, mergedCust(v),
+          leftKey = "o_custkey", rightKey = "c_custkey",
+          groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p"))
+        state = s.createDataFrame(
+          java.util.Arrays.asList(next.collect(): _*), next.schema)
       }
       }
       state

@@ -485,7 +485,6 @@ object PipelineQueries {
         |  GROUP BY doc_id)
         |SELECT d.doc_id, round(coalesce(e.h, 0.0), 6) AS entropy
         |FROM documents d LEFT JOIN e USING (doc_id) ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           round(TextAnalysis.charEntropy(col("text")), 6).as("entropy"))
@@ -668,7 +667,6 @@ object PipelineQueries {
         |  list_sum(list_transform(embedding,
         |    x -> floor(x::DOUBLE * (127.0 / maxabs) + 0.5)))::BIGINT AS checksum
         |FROM m ORDER BY vec_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       t(s, d, "embeddings")
         .select(col("vec_id"), GraftFunctions.int8Quant(col("embedding")).as("__q"))
         .select(col("vec_id"), round(col("__q.scale"), 6).as("scale"),
@@ -984,7 +982,6 @@ object PipelineQueries {
         |  FROM c)
         |SELECT canonical_url, count(*) AS n_dups, min(doc_id) AS keeper
         |FROM k GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val c = t(s, d, "documents").select(col("doc_id"),
         expr("doc_id div 4").as("g"), (col("doc_id") % 4).as("v"))
       val base = concat(lit("site"), (col("g") % 10).cast("string"),
@@ -1029,7 +1026,6 @@ object PipelineQueries {
         |  FROM m)
         |SELECT doc_id, canon, length(canon) AS canon_len FROM c
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val messy = when(col("doc_id") % 3 === 0, col("text"))
         .when(col("doc_id") % 3 === 1,
           concat(lit("\t"), regexp_replace(upper(col("text")), " ", "  "), lit("\n")))
@@ -1451,7 +1447,6 @@ object PipelineQueries {
       // replays every stage — seeded term-order fold, rounded-score
       // lexical rank, raw-cosine dense rank, exact rrf re-rank.
       Ranking.hybridRrfSql(queryMod = 50)) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val lex = Ranking.bm25QueryDocTopK(t(s, d, "documents"), "doc_id", "text",
         queryPred = col("doc_id") % 50 === 0)
@@ -1611,7 +1606,6 @@ object PipelineQueries {
         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank,
         |  neighbor_id, cosine
         |FROM scored QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       graft.operators.SimilaritySearch.maxSimTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -1654,7 +1648,6 @@ object PipelineQueries {
         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank,
         |  neighbor_id, round(cosine, 6) AS cosine
         |FROM rer QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       graft.operators.SimilaritySearch.binaryHammingTopK(
           emb, emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -3381,7 +3374,6 @@ object PipelineQueries {
         |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
         |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.8
         |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       // VERDICT r14 wrong #1 fix: the former plan self-joined part on
       // p_brand alone and scored EVERY within-brand id pair — O(block²)
       // Jaro-Winkler evaluations, 10 000× more scorer work at 100× data.
@@ -3783,7 +3775,6 @@ object PipelineQueries {
         |  count(*)::BIGINT AS n_pairs, round(avg(jw), 4) AS avg_jw,
         |  min(jw) AS min_jw, max(jw) AS max_jw
         |FROM idpairs GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val lower = "abcdefghijklmnopqrstuvwxyz"
       val names = t(s, d, "orders")
         .select(col("o_orderkey").cast("long").as("key"))

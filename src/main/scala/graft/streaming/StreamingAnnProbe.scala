@@ -58,7 +58,6 @@ object StreamingAnnProbe {
       vecCol: String,
       nProbe: Int = 4,
       cacheIndex: Boolean = true): Probe = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // cacheIndex = false: a 100 TB index cannot live in executor storage
     // — pass the ivfLoadIndex lists (cell-partitioned parquet) uncached
     // and each trigger re-reads only what the join needs from disk; the
@@ -90,7 +89,6 @@ object StreamingAnnProbe {
       vecCol: String,
       nProbe: Int = 4,
       cacheIndex: Boolean = true): Probe = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val idx = if (cacheIndex) coded.persist() else coded
     val q = queries.select(col(idCol).as("query_id"),
       SimilaritySearch.pqLut(col(vecCol), codebooks).as("__lut"),
@@ -127,7 +125,6 @@ object StreamingAnnProbe {
       cellOf: Column => Column,
       threshold: Double,
       cacheIndex: Boolean = true): Probe = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val stat = corpus.select(cellOf(col(vecCol)).as("__cell"),
       col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
     val idx = if (cacheIndex) stat.persist() else stat

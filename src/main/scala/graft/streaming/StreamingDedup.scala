@@ -63,14 +63,11 @@ object StreamingDedup {
       textCol: String,
       nBands: Int = 4,
       maxHamming: Int = 3,
-      maxPerBucket: Int = 64): Dataset[BandVerdict] = {
-    val spark = docs.sparkSession
-    GraftFunctions.register(spark) // idempotent; simhash60 must resolve
+      maxPerBucket: Int = 64): Dataset[BandVerdict] =
     bandVerdictsSig(
       docs.select(col(idCol).cast("long").as("docId"),
         GraftFunctions.simhash60(TextAnalysis.tokens(col(textCol))).as("sig")),
       "docId", "sig", nBands, maxHamming, maxPerBucket, sigBits = 60)
-  }
 
   /** [[bandVerdicts]] over a PRECOMPUTED signature column — the entry
     * point for non-text fingerprints (image dHash, video temporal

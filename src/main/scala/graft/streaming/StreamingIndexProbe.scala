@@ -60,9 +60,6 @@ object StreamingIndexProbe {
       idCol: String,
       textCol: String,
       threshold: Double = 0.5): Probe = {
-    // the codegen sorted-intersect function rides the session registry —
-    // registration is idempotent, so self-register rather than demand it
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val idxBands = index.bands
       .select(col(index.bands.columns.head).as("matched_id"),
         col("band"), col("bkey"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.types.StructType
 
-/** The one `private[sql]` door the v1 streaming-source API requires.
+/** The `private[sql]` door the v1 streaming-source API requires.
   *
   * `MicroBatchExecution` asserts that every DataFrame a v1
   * [[org.apache.spark.sql.execution.streaming.Source]] returns from
@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.StructType
   * API; a package-qualified shim is the standard way for an external
   * build to reach it. The same door serves batch operators that compute
   * their partitions on catalyst rows and hand the result back to the
-  * planner ([[ofInternalRows]]). This object is the ONLY code in the
-  * repo outside the `graft` namespace, and it must stay a few pure
-  * wrappers of that one constructor — anything more belongs in
-  * `graft.*`.
+  * planner ([[ofInternalRows]]). This package is the ONLY code in the
+  * repo outside the `graft` namespace. It has two doors, this object and
+  * [[ColumnShim]] (Expression ↔ Column), and each must stay a few pure
+  * wrappers — anything more belongs in `graft.*`.
   */
 object StreamingShim {
 

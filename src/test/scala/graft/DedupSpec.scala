@@ -8,8 +8,6 @@ import graft.operators.Dedup
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   private val corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog tonight"),
     (2L, "the quick brown fox jumps over the lazy cat tonight"), // near-dup of 1

@@ -471,4 +471,49 @@ class ExpressionsSpec extends SparkSpec {
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
+
+  test("every GraftFunctions helper resolves on a fresh session with nothing registered") {
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")),
+      "the premise: a new session carries none of the suite's temp functions")
+    val a = Seq(1f, 0f, 0f, 1f)
+    val df = fresh.createDataFrame(Seq((a, Seq("a", "b"), "abc",
+        Seq(1.0, 0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0), Seq(1L, 2L, 3L), 3L, 5L,
+        Seq((0L, 0L), (10L, 0L), (10L, 10L), (0L, 10L)), Seq[Byte](0, 1),
+        Seq(0.5, 1.5, 2.5, 3.5), Seq.tabulate(8)(_.toDouble),
+        "HTTP://WWW.A.COM/z/", "  A\tB  ", 2.5)))
+      .toDF("v", "toks", "s", "planes", "longs", "x", "y", "verts", "codes", "lut",
+        "cb", "url", "text", "d")
+      .repartition(1) // not a LocalRelation, so nothing folds away
+    val G = GraftFunctions
+    val r = df.select(
+      G.cosineSim(col("v"), col("v")), G.maxSim(col("v"), col("v"), 2),
+      G.simhash32(col("toks")), G.simhash60(col("toks")),
+      G.rollingHash(col("s")), G.charEntropy(col("s")),
+      G.srpBits(col("v"), col("planes")), G.sortedIntersectCount(col("longs"), col("longs")),
+      G.int8Quant(col("v")), G.hilbert16(col("x"), col("y")),
+      G.pointInConvexPoly(col("verts"), col("x"), col("y")),
+      G.adcScore(col("codes"), col("lut")), G.pqEncode(col("v"), col("cb"), 2),
+      G.pqLut(col("v"), col("cb"), 2), G.urlCanonicalize(col("url")),
+      G.textCanonicalize(col("text")), G.cdcBounds(col("text"), 2, 2, 0),
+      G.jaroWinkler(col("s"), col("s")),
+      G.sortableBitsDouble(G.doubleSortableBits(col("d")))).collect().head
+    assert(r.length == 19 && (0 until r.length).forall(i => !r.isNullAt(i)),
+      s"a helper evaluated to NULL: $r")
+    def near(i: Int, want: Double) = math.abs(r.getDouble(i) - want) < 1e-12
+    assert(near(0, 1.0) && near(1, 2.0))
+    assert(r.getLong(4) == 96354L && r.getLong(6) == 1L && r.getLong(7) == 3L)
+    assert(r.getLong(9) == graft.operators.Layout.hilbert16Scala(3L, 5L))
+    assert(r.getBoolean(10) && r.getDouble(11) == 4.0)
+    assert(r.getString(14) == "http://a.com/z" && r.getString(15) == "a b")
+    assert(near(17, 1.0) && r.getDouble(18) == 2.5)
+
+    val corpus = fresh.createDataFrame(Seq((1L, Seq(1f, 0f)), (2L, Seq(0.9f, 0.1f)),
+        (3L, Seq(0f, 1f)))).toDF("vec_id", "embedding")
+    val top = graft.operators.SimilaritySearch.bruteForceTopK(
+        corpus, corpus.filter(col("vec_id") === 1L), "vec_id", "embedding", k = 1)
+      .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(top.toSeq == Seq((1L, 2L)))
+  }
 }

@@ -40,6 +40,14 @@ class QueriesSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "q269 left a persisted RDD")
   }
 
+  test("q251 leaves nothing cached or persisted in the session") {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assert(SparkEntry.queries("q251_txtable_join_view")(spark, sf).count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "q251 left a cached relation")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "q251 left a persisted RDD")
+  }
+
   test("q26 approx_count_distinct within 10% of exact counts") {
     val approx = SparkEntry.queries("q26_approx_distinct")(spark, sf)
       .as[(Long, Long)].collect().head

@@ -8,8 +8,6 @@ import graft.operators.{Dedup, SimilaritySearch}
 class SimilaritySearchSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   /** Deterministic pseudo-random unit-ish vectors in 16 dims, clustered:
     * vectors i and i+100 share a cluster direction (high cosine).
     */

@@ -112,6 +112,24 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(knobs.isEmpty, s"maxRetries parameters declared:\n" + knobs.mkString("\n"))
   }
 
+  test("engine code builds graft expressions directly, never through the session registry") {
+    // a helper that resolves by name fails on any session where nobody
+    // registered it first; only the one function table and its SQL
+    // registration paths may touch the registry
+    val allowed = Set("functions/VectorFunctions.scala", "GraftExtensions.scala")
+    val byName = """GraftFunctions\.register\(|createOrReplaceTempFunction|call_function\(""".r
+    val offenders = scalaFiles("src/main/scala").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if byName.findFirstIn(line).isDefined &&
+            !allowed.exists(a => f.toString.endsWith("graft/" + a)) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"registry lookups in engine code (build through GraftFunctions' table):\n" +
+        offenders.mkString("\n"))
+  }
+
   test("the only mains are Bench, Demo, Verify, ScaleData and Prof") {
     // a one-off measurement runs through Prof or a spec, not a new main
     val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r

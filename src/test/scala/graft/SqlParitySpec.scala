@@ -13,9 +13,9 @@ import graft.streaming.TxTable
   * representative query per family: IVM refresh, ANN brute-force top-k,
   * dedup, TxTable time travel (via the txtable_* table-valued
   * functions), and multimodal dHash (via the image_dhash expression).
-  * Everything the SQL side needs is registered by
-  * [[GraftFunctions.register]] (imperative) — the same builders
-  * [[graft.GraftExtensions]] injects at session build time.
+  * The SQL text needs [[GraftFunctions.register]] on this already-built
+  * session; it loops over the same tables [[graft.GraftExtensions]]
+  * injects at session build time. The DSL twins need no registration.
   */
 class SqlParitySpec extends SparkSpec {
   import spark.implicits._

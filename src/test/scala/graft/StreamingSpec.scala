@@ -1428,9 +1428,6 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.SimilaritySearch
     import graft.streaming.StreamingAnnProbe
     implicit val sc = spark.sqlContext
-    // cosine_sim rides the session registry; register explicitly so the
-    // test passes in isolation, not just after a suite that registered
-    graft.functions.GraftFunctions.register(spark)
     def vec(i: Int): Array[Float] = {
       val base = Array.tabulate(16)(j => math.sin(i % 10 + j * 0.7).toFloat)
       val noise = Array.tabulate(16)(j => (((i * 31 + j * 13) % 7) - 3) * 0.02f)

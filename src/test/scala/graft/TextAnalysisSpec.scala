@@ -64,7 +64,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("charEntropy Column helper: NULL text scores 0.0 (q113 oracle contract)") {
-    graft.functions.GraftFunctions.register(spark)
     val got = Seq(Some("ab"), Some(""), None).toDF("t")
       .select(TextAnalysis.charEntropy(col("t")).as("h"))
       .as[Double].collect()

@@ -45,8 +45,13 @@ class UdafExtensionsSpec extends SparkSpec {
       // image_dhash resolves (NULL on non-image bytes, no exception)
       assert(ext.sql("SELECT image_dhash(CAST('x' AS BINARY)) AS d")
         .collect().head.isNullAt(0))
-      // the txtable_* table-valued functions are injected too
+      // every graft function and txtable_* table-valued function is
+      // injected, from the same tables GraftFunctions.register loops over
       import org.apache.spark.sql.catalyst.FunctionIdentifier
+      graft.functions.GraftFunctions.all.foreach { case (name, _, _) =>
+        assert(ext.sessionState.functionRegistry
+          .functionExists(FunctionIdentifier(name)), s"$name missing")
+      }
       graft.functions.TxTableTvf.all.foreach { case (name, _, _) =>
         assert(ext.sessionState.tableFunctionRegistry
           .functionExists(FunctionIdentifier(name)), s"$name missing")
