@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.graftshim.SessionShim
 
 /** Lineage truncation + storage hygiene for iterative operators
   * (PageRank, dupClusters): each round's result must be materialized and
@@ -28,6 +31,14 @@ import org.apache.spark.sql.functions.{col, sum}
   * the spec pins label-for-label equality.
   */
 private[graft] object Checkpoints {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  // [[sizedLoop]]'s last fork per partition count, with the session and
+  // config it was cloned from: a fresh session runs cold (its own analyzer
+  // and executor-side artifact session); forking per call cost q58, q109
+  // and q260 15–50% at sf0.1
+  private val forks = new ConcurrentHashMap[Int, (SparkSession, Map[String, String], SparkSession)]()
 
   /** The session conf key naming the reliable checkpoint directory. */
   val DirKey = "graft.checkpoint.dir"
@@ -77,82 +88,66 @@ private[graft] object Checkpoints {
     }
 
   /** [[sizedLoop]]'s partition rule, for callers that pass the count to
-    * their own plan instead of the session:
-    * min(session partitions, max(4, ⌈estimate / graft.loop.partitionBytes⌉)),
-    * the estimate taken from `input`'s optimized-plan statistics (no job).
+    * their own plan instead of running on a fork:
+    * min(session partitions, max(4, ⌈estimate / 1 MB⌉)), the estimate
+    * taken from `input`'s optimized-plan statistics (no job).
     */
-  def sizedPartitions(input: DataFrame): Int = {
-    val spark = input.sparkSession
+  def sizedPartitions(input: DataFrame): Int = sizing(input)._2
+
+  private def sizing(input: DataFrame): (BigInt, Int, Int) = {
     val est: BigInt = input.queryExecution.optimizedPlan.stats.sizeInBytes
-    // 1 MB of PLAN-estimated bytes per partition: plan estimates are
-    // compressed-file-sized for scans, so 1 MB estimated ≈ 4–10 MB of
-    // in-flight rows — small uniform tasks, but an order of magnitude
-    // fewer of them than the session default on loop-sized state.
-    // (Measured on q260's 1.2M-edge label propagation: 32 MB/partition
-    // gave p=4 and under-parallelized the real per-round aggregates —
-    // a wash against baseline; 1 MB keeps those rounds at p≈11.)
-    val perPart = spark.conf.get(
-      "graft.loop.partitionBytes", (1L * 1024 * 1024).toString).toLong
-    val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    ((est + perPart - 1) / perPart).max(BigInt(4)).min(BigInt(defaultP)).toInt
+    // 1 MB of PLAN-estimated (compressed-file-sized) bytes ≈ 4–10 MB of
+    // in-flight rows per partition. On q260's 1.2M-edge label propagation
+    // 32 MB gave p=4 and under-parallelized its rounds; 1 MB gives p≈11.
+    val perPart = BigInt(1L << 20)
+    val defaultP = input.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    (est, ((est + perPart - 1) / perPart).max(BigInt(4)).min(BigInt(defaultP)).toInt, defaultP)
   }
 
   /** Run an ITERATIVE operator's loop under SIZE-DERIVED parallelism
-    * (r19, guide §2.2 "fewer, larger partitions" + the task rule
-    * "derive partitioning from input size, not a constant"): the
-    * round-latency-bound loops here (dupClusters, BFS, label
-    * propagation, Bellman-Ford, k-core, PageRank) spend their
-    * wall-clock on per-stage fixed costs, not data — measured on the
-    * real q58 pipeline at sf0.1 (OPTIMIZATION_r19.md §1, interleaved
-    * A/B ×3, min):
-    *
-    *   AQE on,  32 shuffle partitions (session default): 6.49 s
-    *   AQE off, 32:                                      6.57 s
-    *   AQE off,  8 / 4 / 2 / 16:          3.69 / 3.47 / 3.77 / 3.52 s
-    *
-    * i.e. ~1.9× of pure per-task scheduling + per-stage AQE
-    * re-optimization on state that is a few MB. So: estimate the loop
-    * input's size from plan statistics (file-based for scans — no job),
-    * and when the loop state is smaller than the session default would
-    * imply, run the loop at ceil(bytes / graft.loop.partitionBytes)
-    * partitions (floor 4), with AQE off in the tiny zone (see inline).
-    * When the derived count reaches the session default NOTHING
-    * changes: big state keeps the session's partitioning and AQE's
-    * skew/coalesce machinery — that fall-through is what makes this
-    * scale-adaptive rather than a local[32] constant (unknown-size
-    * plans estimate Long.MaxValue and never gate). Session confs are
-    * restored in finally; loops run sequentially in bench/verify
-    * (documented non-reentrancy caveat of the scratch dirs applies
-    * here too). Callers: the loops above, the ANN/selection batch
-    * actions and `TxTable.deleteKeys`. `TxTable.mergeLatest` does NOT
-    * run under it: a streaming sink commits while other queries share
-    * the session, so it passes [[sizedPartitions]] to its own plan and
-    * never touches session config.
+    * (r19, guide §2.2 "fewer, larger partitions"): the loops here
+    * (dupClusters, BFS, label propagation, Bellman-Ford, k-core,
+    * PageRank) spend their wall-clock on per-stage fixed costs, not
+    * data — q58 at sf0.1 ran 6.49 s at the 32-partition default and
+    * 3.47 s at 4 with AQE off (OPTIMIZATION_r19.md §1); at 4 partitions
+    * AQE on costs q109 +24% (NOTES.md, "sizedLoop on a session fork").
+    * So when [[sizedPartitions]] is below the session default, `body`
+    * runs on a FORK of `input`'s session (`cloneSession()`: its config,
+    * temp views, cache manager and SparkContext) with that many shuffle
+    * partitions and AQE off. The caller's session config is never
+    * written, so work sharing it (stream sinks, commits, queries) keeps
+    * its partitions and AQE. `body` must [[rebind]] each frame it uses
+    * onto the loop session — a join takes its LEFT side's session, so a
+    * missed rebind silently runs at the session default — and a frame
+    * it returns (alone or in a pair) comes back on the caller's session.
+    * A fork is reused while the caller's session and config are
+    * unchanged, so `body` must not resolve temp views or functions by
+    * name. At or past the default, `body` gets the caller's session and
+    * no frame moves (unknown-size plans estimate Long.MaxValue and never
+    * gate). Each call logs its estimate, partition count and AQE at INFO.
     */
-  def sizedLoop[T](input: DataFrame)(body: => T): T = {
+  def sizedLoop[T](input: DataFrame)(body: SparkSession => T): T = {
     val spark = input.sparkSession
-    val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val p = sizedPartitions(input)
-    if (p >= defaultP) body // big state: session partitioning + AQE untouched
-    else {
-      // AQE off only in the TINY zone (p ≤ graft.loop.aqeOffMaxPartitions,
-      // default 64): there every partition is ≤ a few MB and uniform, so
-      // runtime re-planning has nothing to fix and its per-stage cost
-      // dominates. Between that and defaultP, keep AQE (skew handling on
-      // a medium loop is worth its planning cost) but still size the
-      // shuffle to the state.
-      val aqeOffMax = spark.conf.get("graft.loop.aqeOffMaxPartitions", "64").toInt
-      val oldAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      try {
-        if (p <= aqeOffMax) spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", p)
-        body
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", defaultP)
-      }
-    }
+    val (est, p, defaultP) = sizing(input)
+    val conf = spark.conf.getAll
+    val loop = if (p >= defaultP) spark else forks.compute(p, (_, f) =>
+      if (f != null && (f._1 eq spark) && f._2 == conf) f
+      else (spark, conf, SessionShim.fork(spark, Map(
+        "spark.sql.shuffle.partitions" -> p.toString, "spark.sql.adaptive.enabled" -> "false"))))._3
+    log.info(s"sizedLoop: estimate $est bytes, $p partitions, " +
+      s"AQE ${if (loop.conf.get("spark.sql.adaptive.enabled").toBoolean) "on" else "off"}")
+    handBack(spark, body(loop))
   }
+
+  /** `df` as a frame of `spark`; `df` itself when it already is one. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq spark) df else SessionShim.ofRows(spark, df)
+
+  private def handBack[T](spark: SparkSession, out: T): T = (out match {
+    case df: Dataset[Row @unchecked] => rebind(spark, df)
+    case (a, b) => (handBack(spark, a), handBack(spark, b))
+    case other => other
+  }).asInstanceOf[T]
 
   /** Drop the storage blocks behind a checkpointed DataFrame (either
     * mode). `Dataset.unpersist` only clears cache-manager entries; the

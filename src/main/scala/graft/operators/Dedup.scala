@@ -522,10 +522,9 @@ object Dedup {
     * the convergence check costs zero extra Spark actions.
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame =
-    // size-derived loop parallelism (r19): the label tables are bounded
-    // by the pair set, so the pair plan's size estimate gates the whole
-    // loop — see [[Checkpoints.sizedLoop]] for the measured A/B
-    Checkpoints.sizedLoop(pairs) { dupClustersLoop(pairs, maxIters) }
+    // the pair set bounds the label tables, so it gates the whole loop
+    Checkpoints.sizedLoop(pairs) { loop =>
+      dupClustersLoop(Checkpoints.rebind(loop, pairs), maxIters) }
 
   private def dupClustersLoop(pairs: DataFrame, maxIters: Int): DataFrame = {
     val c1 = pairs.columns(0); val c2 = pairs.columns(1)

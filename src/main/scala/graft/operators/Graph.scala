@@ -108,8 +108,8 @@ object Graph {
       k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    Checkpoints.sizedLoop(edges) {
-      kCoreLoop(edges, srcCol, dstCol, k, maxRounds) }
+    Checkpoints.sizedLoop(edges) { loop =>
+      kCoreLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol, k, maxRounds) }
   }
 
   private def kCoreLoop(edges: DataFrame, srcCol: String, dstCol: String,
@@ -169,8 +169,9 @@ object Graph {
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    Checkpoints.sizedLoop(edges) {
-      bfsLoop(edges, srcCol, dstCol, sources, sourceCol, maxDepth) }
+    Checkpoints.sizedLoop(edges) { loop =>
+      bfsLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol,
+        Checkpoints.rebind(loop, sources), sourceCol, maxDepth) }
   }
 
   private def bfsLoop(edges: DataFrame, srcCol: String, dstCol: String,
@@ -233,8 +234,8 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    Checkpoints.sizedLoop(edges) {
-      labelPropagationLoop(edges, srcCol, dstCol, rounds) }
+    Checkpoints.sizedLoop(edges) { loop =>
+      labelPropagationLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol, rounds) }
   }
 
   private def labelPropagationLoop(edges: DataFrame, srcCol: String,
@@ -299,9 +300,9 @@ object Graph {
       wCol: String, sources: DataFrame, sourceCol: String,
       maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    Checkpoints.sizedLoop(edges) {
-      shortestPathsLoop(edges, srcCol, dstCol, wCol, sources, sourceCol,
-        maxRounds) }
+    Checkpoints.sizedLoop(edges) { loop =>
+      shortestPathsLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol, wCol,
+        Checkpoints.rebind(loop, sources), sourceCol, maxRounds) }
   }
 
   private def shortestPathsLoop(edges: DataFrame, srcCol: String,

@@ -35,7 +35,8 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    Checkpoints.sizedLoop(edges) { pageRankLoop(edges, iters, damping) }
+    Checkpoints.sizedLoop(edges) { loop =>
+      pageRankLoop(Checkpoints.rebind(loop, edges), iters, damping) }
   }
 
   private def pageRankLoop(edges: DataFrame, iters: Int, damping: Double): DataFrame = {

@@ -112,13 +112,11 @@ object Selection {
       .filter(col(valCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         col(valCol).cast("long").as("v"))
-    val vals = if (cache) projected.persist() else projected
-    // size-derived parallelism for the counting rounds (r19): each round
-    // is a broadcast join + partial-agg collect over the same bounded
-    // input — at fixture scale the per-round 32-task AQE stage jobs are
-    // the bill, not the counting ([[Checkpoints.sizedLoop]]); derived
-    // inputs with unknown estimates never gate.
-    Checkpoints.sizedLoop(projected) {
+    val cached = if (cache) projected.persist() else projected
+    // size-derived parallelism ([[Checkpoints.sizedLoop]]): each counting
+    // round is a broadcast join + partial-agg collect over this input
+    Checkpoints.sizedLoop(projected) { loop =>
+    val vals = Checkpoints.rebind(loop, cached)
     try {
       // the one stats pass: n / min / max, plus (when seeding) the
       // 256-point quantile sketch — KLL-bounded state per task, and the
@@ -247,7 +245,7 @@ object Selection {
       }
       (state.toSeq.map { case (g, (_, lo, _)) => (g, nOf(g), lo) }
         .toDF(groupCol, "n", "kth"), rounds)
-    } finally if (cache) { vals.unpersist(blocking = false); () }
+    } finally if (cache) { cached.unpersist(blocking = false); () }
     }
   }
 

@@ -398,15 +398,14 @@ object SimilaritySearch {
         .select("query_id", "neighbor_id")
     }
     val gold = topSet(None).persist()
-    // size-derived parallelism (r19): the four count() pipelines below
-    // are brute-force top-k joins over the (small by contract) query ×
-    // corpus product — exact top-k with a total (cosine, id) tie order,
-    // so partitioning cannot change the ranked sets.
-    Checkpoints.sizedLoop(corpus) {
+    // size-derived parallelism ([[Checkpoints.sizedLoop]]): exact top-k
+    // with a total (cosine, id) tie order — partitioning cannot change it
+    Checkpoints.sizedLoop(corpus) { loop =>
     try {
-      val nQ = queries.select(col(idCol)).distinct().count()
+      val nQ = Checkpoints.rebind(loop, queries).select(col(idCol)).distinct().count()
       val frames = dims.map { d =>
-        val hits = topSet(Some(d)).join(gold, Seq("query_id", "neighbor_id")).count()
+        val hits = Checkpoints.rebind(loop, topSet(Some(d)))
+          .join(gold, Seq("query_id", "neighbor_id")).count()
         import spark.implicits._
         // one IEEE division of small integers — identical across engines
         Seq((d, hits.toDouble / (nQ * k))).toDF("dim", "recall")
@@ -500,18 +499,18 @@ object SimilaritySearch {
     // eager localCheckpoint TRUNCATES LINEAGE before the append: a mere
     // persist+count could still recompute an evicted partition against
     // the grown index (batch rows would then self-match)
-    // size-derived parallelism (r19): both checkpoints and the append
-    // are batch-bounded actions ([[Checkpoints.sizedLoop]]); decisions
-    // are mins over the saved lists — partitioning-independent.
-    Checkpoints.sizedLoop(batch) {
-      val rejected = semDedupDecisions(spark, path, batch, idCol, vecCol,
+    // both checkpoints and the append run sized ([[Checkpoints.sizedLoop]]);
+    // decisions are mins over the saved lists — partitioning-independent
+    val (admitted, rejected) = Checkpoints.sizedLoop(batch) { loop =>
+      val b = Checkpoints.rebind(loop, batch)
+      val rejected = semDedupDecisions(loop, path, b, idCol, vecCol,
         threshold).localCheckpoint(true)
-      val admitted = batch.join(
-          rejected.select(col(idCol)), Seq(idCol), "left_anti")
+      val admitted = b.join(rejected.select(col(idCol)), Seq(idCol), "left_anti")
         .localCheckpoint(true)
-      ivfAppendIndex(spark, path, admitted, idCol, vecCol)
-      new Admission(admitted, rejected)
+      ivfAppendIndex(loop, path, admitted, idCol, vecCol)
+      (admitted, rejected)
     }
+    new Admission(admitted, rejected)
   }
 
   /** The DECISION phase of [[semDedupAdmit]], a pure function of (saved
@@ -538,8 +537,8 @@ object SimilaritySearch {
     // bounded O(nCells) collect — static IN-list so the cell-partitioned
     // parquet prunes at planning time (a dynamic join key would read
     // every partition and hope for DPP)
-    val cells = Checkpoints.sizedLoop(batch) {
-      probed.select(col("__cell")).distinct()
+    val cells = Checkpoints.sizedLoop(batch) { loop =>
+      Checkpoints.rebind(loop, probed).select(col("__cell")).distinct()
         .collect().map(_.getInt(0)).toSeq
     }
     val pruned = lists.filter(col("__cell").isin(cells: _*))
@@ -650,18 +649,15 @@ object SimilaritySearch {
     // cache the (small) sample across iterations; the unsampled path skips
     // the cache — rescanning beats cache-materialization overhead until
     // the corpus outgrows one pass, at which point you want sampling anyway
-    val vecs = if (trainOneIn > 1) {
+    val sample = if (trainOneIn > 1) {
       all.filter(pmod(xxhash64(col("__id")), lit(trainOneIn)) === 0).persist()
     } else all
-    // size-derived parallelism for the training actions (r19): each Lloyd
-    // iteration is one agg + one bounded collect — at fixture scale the
-    // 32-task AQE stage jobs are the bill ([[Checkpoints.sizedLoop]]).
-    // Centroid floats may move in their last bits when the reduce
-    // partition count changes (double-avg merge order), which the design
-    // already tolerates: every index artifact is replayed FROM the saved
-    // parquet by its oracle twin, and quality is pinned by recall floors,
-    // never by centroid bits.
-    Checkpoints.sizedLoop(vecs) {
+    // Lloyd iterations run sized ([[Checkpoints.sizedLoop]]); centroid
+    // floats may move in their last bits with the reduce partition count
+    // (double-avg merge order), but every index artifact is replayed FROM
+    // the saved parquet by its oracle twin and pinned by recall floors.
+    Checkpoints.sizedLoop(sample) { loop =>
+    val vecs = Checkpoints.rebind(loop, sample)
     try {
       var cents: Seq[Seq[Float]] = vecs
         .orderBy(md5(col("__id")), col("__id"))
@@ -709,7 +705,7 @@ object SimilaritySearch {
         cents = cents.indices.map(c => byCell.getOrElse(c, cents(c)))
       }
       cents
-    } finally { vecs.unpersist(blocking = false); () }
+    } finally { sample.unpersist(blocking = false); () }
     }
   }
 
@@ -809,8 +805,8 @@ object SimilaritySearch {
     // exactly the probed list directories instead of relying on runtime
     // DPP heuristics to maybe prune them. (The collect makes this method
     // eager at call time — the price of static pruning.)
-    val probedCells = Checkpoints.sizedLoop(queries) {
-      q.select("__cell").distinct()
+    val probedCells = Checkpoints.sizedLoop(queries) { loop =>
+      Checkpoints.rebind(loop, q).select("__cell").distinct()
         .collect().map(_.getInt(0)).toSeq
     }
     rankTopK(
@@ -1053,8 +1049,8 @@ object SimilaritySearch {
       explode(probeCells(col(vecCol), centroids, nProbe)).as("__cell"))
     // bounded O(nCells) collect — same static-pruning rationale as
     // [[ivfQueryIndex]]
-    val probedCells = Checkpoints.sizedLoop(queries) {
-      q.select("__cell").distinct()
+    val probedCells = Checkpoints.sizedLoop(queries) { loop =>
+      Checkpoints.rebind(loop, q).select("__cell").distinct()
         .collect().map(_.getInt(0)).toSeq
     }
     // ADC via the native codegen expression (ksub inferred from the

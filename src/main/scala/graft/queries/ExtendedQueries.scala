@@ -2552,14 +2552,9 @@ object ExtendedQueries {
           Seq("o_custkey"))
         .groupBy("seg")
         .agg(count(lit(1)).as("n_orders"), sum(col("p")).as("p"))
-      // size-derived parallelism for the refresh steps (r19): every
-      // materialization inside the loop is bounded by the two tables'
-      // merged snapshots (scratch-table parquet, a few MB here), and the
-      // per-step collects otherwise run ~50 AQE stage jobs of 32 tiny
-      // tasks each (OPTIMIZATION_r19.md §4: 64 jobs, all < 0.5 s,
-      // jobs-sum ≈ wall). Gated on the v0 orders snapshot's plan
-      // estimate — production-scale tables fall through to session confs.
-      graft.operators.Checkpoints.sizedLoop(mergedOrders(0)) {
+      // sized refresh steps: at the session default each step's collect
+      // ran ~50 AQE stage jobs of 32 tiny tasks (OPTIMIZATION_r19.md §4)
+      graft.operators.Checkpoints.sizedLoop(mergedOrders(0)) { loop =>
       for (v <- 1L to 2L) {
         val cdfA = TxTable.changeDataFeed(s, ordT, v - 1, v, "o_orderkey",
           Seq("o_custkey", "p"), oKeys, Seq("seq"))
@@ -2575,8 +2570,8 @@ object ExtendedQueries {
           cdfA.drop("o_orderkey"), mergedOrders(v - 1), cdfB, mergedCust(v),
           leftKey = "o_custkey", rightKey = "c_custkey",
           groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p"))
-        state = s.createDataFrame(
-          java.util.Arrays.asList(next.collect(): _*), next.schema)
+        state = s.createDataFrame(java.util.Arrays.asList(
+          graft.operators.Checkpoints.rebind(loop, next).collect(): _*), next.schema)
       }
       }
       state

@@ -2847,14 +2847,10 @@ object PipelineQueries {
           val next = IncrementalAgg.refreshSumCount(
             prev, batch, groupCols, "n_orders", Seq("p"))
           val dir = s"$root/state_$id"
-          // size-derived parallelism per micro-batch (r19): the state is
-          // O(groups) rows — the refresh+write ran 32-task stages and
-          // left up to 32 tiny state files for the NEXT batch to re-read
-          // (footer per file). Gated on the prev state's estimate, so a
-          // genuinely large state falls through untouched; sum/count
-          // refresh algebra is partitioning-independent (decimals).
-          graft.operators.Checkpoints.sizedLoop(prev) {
-            next.write.mode("overwrite").parquet(dir)
+          // sized write of the O(groups) state (the session default left up to
+          // 32 tiny files per batch); sum/count refresh is partition-independent
+          graft.operators.Checkpoints.sizedLoop(prev) { loop =>
+            graft.operators.Checkpoints.rebind(loop, next).write.mode("overwrite").parquet(dir)
           }
           stateDir = Some(dir)
           ()

@@ -1623,11 +1623,10 @@ object TxTable {
         else {
           val kept = current.join(del, keys, "left_anti")
           val statCols = eligibleStats(kept, statsCols)
-          // size-derived parallelism for the rewrite (r19) — measured A/B
-          // in [[graft.operators.Checkpoints.sizedLoop]]'s scaladoc
-          val adds = graft.operators.Checkpoints.sizedLoop(kept) {
-            writePartitions(kept, partitionCol, affected,
-              tablePath, statCols)
+          // sized rewrite on a fork of the shared session (Checkpoints.sizedLoop)
+          val adds = graft.operators.Checkpoints.sizedLoop(kept) { loop =>
+            writePartitions(graft.operators.Checkpoints.rebind(loop, kept),
+              partitionCol, affected, tablePath, statCols)
           }
           Right(Attempt(Nil,
             adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++

@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.StructType
   * build to reach it. The same door serves batch operators that compute
   * their partitions on catalyst rows and hand the result back to the
   * planner ([[ofInternalRows]]). This package is the ONLY code in the
-  * repo outside the `graft` namespace. It has two doors, this object and
-  * [[ColumnShim]] (Expression ↔ Column), and each must stay a few pure
-  * wrappers — anything more belongs in `graft.*`.
+  * repo outside the `graft` namespace; its three doors (this object,
+  * [[ColumnShim]], [[SessionShim]]) must each stay a few pure wrappers —
+  * anything more belongs in `graft.*`.
   */
 object StreamingShim {
 

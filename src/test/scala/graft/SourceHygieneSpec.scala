@@ -130,6 +130,36 @@ class SourceHygieneSpec extends AnyFunSuite {
         offenders.mkString("\n"))
   }
 
+  test("engine code never writes a shared session's config") {
+    // a session is shared by concurrent work (stream sinks, TxTable
+    // commits, queries), so a conf written for one of them changes the
+    // others; a loop that wants its own config runs on a session fork
+    // (Checkpoints.sizedLoop). Two writes are allowed: Q.t's, which sets
+    // the nanos-timestamp read flag only when an events file needs it,
+    // and the fork's own config, set on the clone before anyone uses it
+    val write = """\bconf\.(set|unset)\(|\.(setConf|setConfString|unsetConf)\(""".r
+    val allowed = Seq(
+      "Q.t" -> ("graft/queries/Queries.scala",
+        "if (tsIsNanos(s, path)) s.conf.set(\"spark.sql.legacy.parquet.nanosAsLong\", \"true\")"),
+      "fork" -> ("graftshim/SessionShim.scala",
+        "confs.foreach { case (k, v) => f.sessionState.conf.setConfString(k, v) }"))
+    val hits = scalaFiles("src/main/scala").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if write.findFirstIn(line).isDefined =>
+          (allowed.find { case (_, (file, text)) =>
+            f.toString.endsWith(file) && line.trim == text
+          }.map(_._1), s"$f:${i + 1}: ${line.trim}")
+      }
+    }
+    val offenders = hits.filter(_._1.isEmpty).map(_._2)
+    assert(offenders.isEmpty,
+      s"session config writes in engine code (run on a fork instead):\n" +
+        offenders.mkString("\n"))
+    allowed.foreach { case (site, _) =>
+      assert(hits.count(_._1.contains(site)) == 1, s"the scan no longer finds the $site write")
+    }
+  }
+
   test("the only mains are Bench, Demo, Verify, ScaleData and Prof") {
     // a one-off measurement runs through Prof or a spec, not a new main
     val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
