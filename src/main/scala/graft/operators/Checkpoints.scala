@@ -2,14 +2,20 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.graftshim.SessionShim
 
-/** Lineage truncation + storage hygiene for iterative operators
-  * (PageRank, dupClusters): each round's result must be materialized and
-  * its plan cut, or the self-referential logical plan doubles per round
-  * (analyzer OOM long before any data moves).
+/** Lineage truncation, sizing and storage hygiene for iterative
+  * operators. [[iterate]] is the round driver behind them (k-core, BFS,
+  * label propagation, PageRank, dupClusters, the distributed power
+  * iteration; `Graph.shortestPaths` keeps its own loop): each round's
+  * state must be materialized and its plan cut, or the self-referential
+  * logical plan doubles per round (analyzer OOM long before any data
+  * moves), and each superseded round's blocks must be freed, or executor
+  * storage grows with the round count.
   *
   * TWO MODES (VERDICT r9 weak #2):
   *
@@ -60,7 +66,8 @@ private[graft] object Checkpoints {
   }
 
   /** [[truncate]] plus the Long sum of `sumCol` over the materialized
-    * table — the convergence signature iterative loops compare between
+    * table — the convergence signal [[iterate]] and
+    * `Graph.shortestPaths`, which keeps its own loop, compare between
     * rounds. Local mode rides `Dataset.observe` on the checkpoint's own
     * materialization action (zero extra Spark jobs); reliable mode runs
     * one explicit aggregation over the ALREADY-materialized table
@@ -153,18 +160,125 @@ private[graft] object Checkpoints {
     * mode). `Dataset.unpersist` only clears cache-manager entries; the
     * RDD a checkpoint pinned sits inside the plan's `LogicalRDD` leaf and
     * stays in executor storage for the life of the session unless freed
-    * explicitly. Iterative operators MUST free each superseded round's
-    * blocks or executor storage grows linearly with iterations — and in
-    * a long-lived session (a 130-query bench, a streaming job) the
-    * pinned blocks tax every later query. Reliable-mode checkpoint FILES
-    * are not deleted here (they are the fault-tolerance substrate while
-    * later rounds still reference derived state); the directory is
-    * caller-owned. Safe on non-checkpointed plans (no-op). Non-blocking.
+    * explicitly. [[iterate]] frees its loops' rounds; the other callers
+    * free one-off tables. Each free of a local checkpoint logs Spark's
+    * "was locally checkpointed … cannot be recomputed after unpersisting"
+    * WARN: it marks a free, not a leak. Reliable-mode checkpoint FILES
+    * are not deleted here; the directory is caller-owned. Safe on
+    * non-checkpointed plans (no-op). Non-blocking.
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
       case _ => ()
+    }
+
+  /** The frames one [[iterate]] run holds: set up by its `setup`,
+    * released by [[iterate]].
+    */
+  final class Loop private[Checkpoints] {
+    private val invariants = ArrayBuffer.empty[() => Unit]
+    private val scratch = ArrayBuffer.empty[DataFrame]
+
+    /** `df` truncated and held until the loop ends. */
+    def keep(df: DataFrame): DataFrame = {
+      val ck = truncate(df)
+      invariants += (() => free(ck))
+      ck
+    }
+
+    /** `df` persisted (lazily, as `Dataset.persist`) until the loop ends. */
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      invariants += (() => p.unpersist(blocking = false))
+      p
+    }
+
+    /** `df` truncated for the current round only: freed once the round's
+      * next state has materialized.
+      */
+    def roundLocal(df: DataFrame): DataFrame = {
+      val ck = truncate(df)
+      scratch += ck
+      ck
+    }
+
+    private[Checkpoints] def freeScratch(): Unit = {
+      scratch.foreach(free)
+      scratch.clear()
+    }
+
+    private[Checkpoints] def release(): Unit = {
+      freeScratch()
+      invariants.foreach(_())
+      invariants.clear()
+    }
+  }
+
+  /** Run an iterative operator: `setup` gets a [[Loop]] and `inputs`
+    * rebound onto the loop session, and returns the initial state and
+    * the round function `(state, round) => next` (rounds count from 1).
+    * It owns the scaffolding the loops share:
+    *
+    *   - the loop runs under [[sizedLoop]], gated on `inputs.head`;
+    *   - every state is truncated; with a `signal` column, which every
+    *     state must carry, the state is OBSERVED — the Long sum of that
+    *     column rides the truncation's own materialization — and the loop
+    *     stops once `stop(previous, current)` holds over the observed sums
+    *     (the previous sum is Long.MinValue before the first);
+    *   - the superseded state and the round's [[Loop.roundLocal]] tables
+    *     are freed once the next state has materialized;
+    *   - at most `maxRounds` rounds run; when they end unconverged and
+    *     `capError` is set, it throws an IllegalStateException
+    *     with its message for the last observed sum;
+    *   - the loop's invariants ([[Loop.keep]], [[Loop.persist]]) are
+    *     released on every exit, and on a throw from setup or a round the
+    *     current state too;
+    *   - each round logs operator, round, signal and wall ms at INFO.
+    *
+    * The last state backs the returned frame, signal column included:
+    * its blocks stay until the frame is unreachable and Spark's
+    * `ContextCleaner` frees them.
+    */
+  def iterate(name: String, inputs: Seq[DataFrame], maxRounds: Int,
+      signal: Option[String] = None,
+      stop: (Long, Long) => Boolean = (_, _) => false,
+      capError: Option[Long => String] = None)(
+      setup: (Loop, Seq[DataFrame]) => (DataFrame, (DataFrame, Int) => DataFrame)): DataFrame =
+    sizedLoop(inputs.head) { session =>
+      val loop = new Loop
+      var state: DataFrame = null
+      var prev, sig = Long.MinValue
+      // `df` becomes the state once it has materialized; the one it
+      // supersedes and the round's tables are freed
+      def advance(df: DataFrame): Unit = {
+        val (ck, s) = signal match {
+          case Some(c) =>
+            require(df.columns.contains(c), s"$name: state lacks its signal column $c")
+            truncateWithSum(df, c)
+          case None => (truncate(df), 0L)
+        }
+        if (state != null) free(state)
+        loop.freeScratch()
+        state = ck; prev = sig; sig = s
+      }
+      try {
+        val (init, round) = setup(loop, inputs.map(rebind(session, _)))
+        advance(init)
+        var r = 0
+        while (!stop(prev, sig) && r < maxRounds) {
+          r += 1
+          val start = System.nanoTime()
+          advance(round(state, r))
+          log.info(s"$name round $r: signal ${signal.fold("-")(_ => sig.toString)}, " +
+            s"${(System.nanoTime() - start) / 1000000} ms")
+        }
+        if (!stop(prev, sig)) capError.foreach(msg => throw new IllegalStateException(msg(sig)))
+        state
+      } catch { case t: Throwable =>
+        if (state != null) free(state)
+        throw t
+      } finally loop.release()
     }
 }

@@ -517,102 +517,62 @@ object Dedup {
     * resolves in ~10 rounds — the same round structure as the
     * large-star/small-star MapReduce connected-components decomposition.
     * Labels decrease monotonically; the loop stops when a round changes
-    * nothing, detected via the strictly-decreasing label sum OBSERVED
-    * (Dataset.observe) during each round's checkpoint materialization —
-    * the convergence check costs zero extra Spark actions.
+    * nothing, detected via the strictly-decreasing label sum that
+    * [[Checkpoints.iterate]] observes on each round's checkpoint
+    * materialization — the convergence check costs no extra Spark action.
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame =
     // the pair set bounds the label tables, so it gates the whole loop
-    Checkpoints.sizedLoop(pairs) { loop =>
-      dupClustersLoop(Checkpoints.rebind(loop, pairs), maxIters) }
-
-  private def dupClustersLoop(pairs: DataFrame, maxIters: Int): DataFrame = {
-    val c1 = pairs.columns(0); val c2 = pairs.columns(1)
-    val e0 = pairs.select(col(c1).cast("long").as("src"), col(c2).cast("long").as("dst"))
-    // undirected + a self-loop per node: the self-loop folds the "keep my
-    // own label" term into the neighborhood-min aggregation, so each round
-    // hooks with ONE join + ONE agg instead of join + agg + left-join.
-    // One fewer stage per round; at sf0.1 wall-clock is round-latency-
-    // dominated either way (~1 s/round fixed cost at local[32]) — the win
-    // is real where stages carry real data volume.
-    val sym = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = sym
-      .unionByName(sym.select(col("src"), col("src").as("dst")).distinct())
-      .distinct().persist()
-    // each round's label table is checkpointed via [[Checkpoints]]: the
-    // jump step self-joins the round's result, so without lineage
-    // truncation the logical plan DOUBLES per round (exponential plan,
-    // OOM in the analyzer long before any data moves). Default mode is
-    // localCheckpoint (local[32]); setting the `graft.checkpoint.dir`
-    // session conf switches every round to RELIABLE `checkpoint()` —
-    // executor loss mid-iteration then recovers from storage instead of
-    // killing the job (the contract a week-long 100 TB run needs).
-    //
-    // Init fuses round 1: against identity labels the neighborhood min is
-    // just min(self, neighbors) — one aggregation over edges, no join.
-    // convergence signature (labels decrease monotonically, so the label
-    // sum strictly decreases until the fixed point) is OBSERVED during
-    // the eager checkpoint materialization (local mode: Dataset.observe,
-    // one Spark action per round total, not two — r7's separate
-    // `labelSum` aggregation was a second full action per round and the
-    // prime suspect in the q58 bench anomaly).
-    def checkpointWithSum(df: DataFrame): (DataFrame, Long) =
-      Checkpoints.truncateWithSum(df, "cluster")
-    var (labels, curSum) = checkpointWithSum(
-      edges.groupBy("src")
+    Checkpoints.iterate("dupClusters", Seq(pairs), maxIters, Some("cluster"),
+        stop = _ == _) { (loop, in) =>
+      val c1 = in.head.columns(0); val c2 = in.head.columns(1)
+      val e0 = in.head.select(col(c1).cast("long").as("src"), col(c2).cast("long").as("dst"))
+      // undirected + a self-loop per node: the self-loop folds the "keep my
+      // own label" term into the neighborhood-min aggregation, so each round
+      // hooks with ONE join + ONE agg instead of join + agg + left-join.
+      // One fewer stage per round; at sf0.1 wall-clock is round-latency-
+      // dominated either way (~1 s/round fixed cost at local[32]) — the win
+      // is real where stages carry real data volume.
+      val sym = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = loop.persist(sym
+        .unionByName(sym.select(col("src"), col("src").as("dst")).distinct())
+        .distinct())
+      // one jump step: compose the mapping with itself (cluster :=
+      // cluster(cluster)); cluster values are node ids, so they resolve
+      // against the same table
+      def jump(m: DataFrame): DataFrame = m.as("a")
+        .join(m.select(col("id").as("cid"), col("cluster").as("cc")).as("b"),
+          col("a.cluster") === col("cid"), "left")
+        .select(col("a.id").as("id"),
+          least(col("a.cluster"), coalesce(col("cc"), col("a.cluster"))).as("cluster"))
+      // Init fuses round 1: against identity labels the neighborhood min is
+      // just min(self, neighbors) — one aggregation over edges, no join.
+      // Labels decrease monotonically, so the observed label sum strictly
+      // decreases until the fixed point.
+      (edges.groupBy("src")
         .agg(least(col("src"), min(col("dst"))).as("cluster"))
-        .withColumnRenamed("src", "id"))
-    var prevSum = Long.MinValue
-    var it = 0
-    // one jump step: compose the mapping with itself (cluster :=
-    // cluster(cluster)); cluster values are node ids, so they resolve
-    // against the same table
-    def jump(m: DataFrame): DataFrame = m.as("a")
-      .join(m.select(col("id").as("cid"), col("cluster").as("cc")).as("b"),
-        col("a.cluster") === col("cid"), "left")
-      .select(col("a.id").as("id"),
-        least(col("a.cluster"), coalesce(col("cc"), col("a.cluster"))).as("cluster"))
-    while (curSum != prevSum && it < maxIters) {
-      val roundStart = System.nanoTime()
-      prevSum = curSum
-      // self-loops make this min(self, neighbors) in one aggregation.
-      // Checkpointed BEFORE jumping: a jump self-joins its input, so an
-      // un-materialized hook plan would be re-evaluated per side (the
-      // round-2 "double jump was slower" measurement hit exactly that);
-      // over a materialized table the composed jumps are joins of tiny
-      // checkpointed RDDs.
-      val hooked = Checkpoints.truncate(
-        edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-          .groupBy("src").agg(min("cluster").as("cluster"))
-          .withColumnRenamed("src", "id"))
-      // two composed jumps: f → f² → f⁴: pointers skip 4× per round
-      // instead of 2×, so rounds ≈ log4(diameter) — fewer round-latency-
-      // bound materializations, which is what dominates wall-clock
-      // locally AND the critical path on a cluster. Measured (sf0.1,
-      // q58): single jump 7.2 s, double 6.5 s, triple 7.8 s — each
-      // composition doubles the lazy plan over the materialized hook
-      // table, and past f⁴ the extra join evaluations cost more than
-      // the rounds they save.
-      val (jumped, jumpedSum) = checkpointWithSum(jump(jump(hooked)))
-      curSum = jumpedSum
-      // jumped is materialized (localCheckpoint is eager), so the round's
-      // hook table and the superseded previous labels can be freed — the
-      // PageRank lesson: without this, each round's checkpoint RDD stays
-      // pinned in executor storage for the life of the session, taxing
-      // every later query in the same JVM. Only the returned table stays.
-      Checkpoints.free(hooked)
-      Checkpoints.free(labels)
-      labels = jumped
-      it += 1
-      // per-round wall time at INFO: the r7 driver bench showed a 2.5×
-      // q58 swing between identical-code runs — this line makes any
-      // future swing attributable to a specific round (data) vs uniform
-      // inflation (machine load)
-      log.info(f"dupClusters round $it%d: labelSum=$curSum%d wall=${(System.nanoTime() - roundStart) / 1e9}%.2fs")
+        .withColumnRenamed("src", "id"), (labels, _) => {
+        // self-loops make this min(self, neighbors) in one aggregation.
+        // Checkpointed BEFORE jumping: a jump self-joins its input, so an
+        // un-materialized hook plan would be re-evaluated per side (the
+        // round-2 "double jump was slower" measurement hit exactly that);
+        // over a materialized table the composed jumps are joins of tiny
+        // checkpointed RDDs.
+        val hooked = loop.roundLocal(
+          edges.join(labels.withColumnRenamed("id", "dst"), "dst")
+            .groupBy("src").agg(min("cluster").as("cluster"))
+            .withColumnRenamed("src", "id"))
+        // two composed jumps: f → f² → f⁴: pointers skip 4× per round
+        // instead of 2×, so rounds ≈ log4(diameter) — fewer round-latency-
+        // bound materializations, which is what dominates wall-clock
+        // locally AND the critical path on a cluster. Measured (sf0.1,
+        // q58): single jump 7.2 s, double 6.5 s, triple 7.8 s — each
+        // composition doubles the lazy plan over the materialized hook
+        // table, and past f⁴ the extra join evaluations cost more than
+        // the rounds they save.
+        jump(jump(hooked))
+      })
     }
-    edges.unpersist(blocking = false)
-    labels
-  }
 
   /** End-to-end near-duplicate REMOVAL: given the corpus and a pair graph
     * of confirmed duplicates (any pair-producing pipeline — [[nearDupPairsMinHash]],

@@ -96,54 +96,31 @@ object Graph {
     *
     * Returns (node, deg) over the surviving subgraph — empty when the
     * graph has no k-core. Each round is one degree aggregation + two
-    * semi-joins, lineage-truncated via [[Checkpoints]] (the PageRank
-    * pattern — an iterated self-referential plan otherwise doubles per
-    * round), the convergence count OBSERVED on each round's single
-    * checkpoint materialization (no separate count action).
-    * LOUD failure when `maxRounds` rounds do not converge — callers
-    * pairing with a fixed-round replay pass the replay's round count
-    * here, so drift fails instead of silently mismatching.
+    * semi-joins, run by [[Checkpoints.iterate]] with the surviving-edge
+    * count as its signal. LOUD failure when `maxRounds` rounds do not
+    * converge — callers pairing with a fixed-round replay pass the
+    * replay's round count here, so drift fails instead of silently
+    * mismatching.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    Checkpoints.sizedLoop(edges) { loop =>
-      kCoreLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol, k, maxRounds) }
-  }
-
-  private def kCoreLoop(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxRounds: Int): DataFrame = {
-    // the surviving-edge count rides each round's ONE checkpoint
-    // materialization as an observed sum of a unit column (the
-    // dupClusters convergence pattern) — the old separate `count()`
-    // action doubled the job count per round for a number the
-    // materialization already knew
-    val (e0, n0) = Checkpoints.truncateWithSum(
-      canonicalEdges(edges, srcCol, dstCol).withColumn("__one", lit(1L)),
-      "__one")
-    var e = e0.select("a", "b")
-    var prevEdges = n0
-    var rounds = 0
-    var converged = prevEdges == 0L
-    while (!converged) {
-      rounds += 1
-      if (rounds > maxRounds) throw new IllegalStateException(
-        s"k-core peeling did not converge within $maxRounds rounds " +
-          s"($prevEdges edges still shrinking)")
-      val deg = e.select(col("a").as("v"))
-        .unionAll(e.select(col("b").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("v")
-      val (nextCk, nextEdges) = Checkpoints.truncateWithSum(
+    // the surviving-edge count is the observed sum of a unit column
+    val e = Checkpoints.iterate("kCore", Seq(edges), maxRounds, Some("__one"),
+        stop = (prev, n) => n == prev || n == 0L,
+        capError = Some(n => s"k-core peeling did not converge within $maxRounds rounds " +
+          s"($n edges still shrinking)")) { (_, in) =>
+      (canonicalEdges(in.head, srcCol, dstCol).withColumn("__one", lit(1L)), (state, _) => {
+        val e = state.select("a", "b")
+        val deg = e.select(col("a").as("v"))
+          .unionAll(e.select(col("b").as("v")))
+          .groupBy("v").agg(count(lit(1)).as("deg"))
+        val keep = deg.filter(col("deg") >= k).select("v")
         e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-          .withColumn("__one", lit(1L)),
-        "__one")
-      Checkpoints.free(e)
-      e = nextCk.select("a", "b")
-      converged = nextEdges == prevEdges || nextEdges == 0L
-      prevEdges = nextEdges
+          .withColumn("__one", lit(1L))
+      })
     }
     e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
@@ -159,61 +136,42 @@ object Graph {
     * Each round expands the frontier by one hop: frontier ⋈ edges →
     * candidate neighbors, anti-join against the settled set (a node's
     * FIRST discovery round is its distance — later candidates lose),
-    * union into the state. All equi-joins and distincts, rounds
-    * lineage-truncated, ONE Spark action per round (the frontier size
-    * is observed on that action, never counted separately); early-out when a
-    * frontier empties. The bounded-round shape is what makes a static
-    * SQL unroll replay it exactly (q259's oracle: r_i = nodes within
-    * i hops, dist = min round of first appearance).
+    * union into the state. All equi-joins and distincts, ONE Spark
+    * action per round ([[Checkpoints.iterate]] observes the frontier
+    * size on it); early-out when a frontier empties. The bounded-round
+    * shape is what makes a static SQL unroll replay it exactly (q259's
+    * oracle: r_i = nodes within i hops, dist = min round of first
+    * appearance).
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    Checkpoints.sizedLoop(edges) { loop =>
-      bfsLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol,
-        Checkpoints.rebind(loop, sources), sourceCol, maxDepth) }
-  }
-
-  private def bfsLoop(edges: DataFrame, srcCol: String, dstCol: String,
-      sources: DataFrame, sourceCol: String, maxDepth: Int): DataFrame = {
-    val und = canonicalEdges(edges, srcCol, dstCol)
-    // both directions once, so each round is a single equi-join
-    val bidir = Checkpoints.truncate(
-      und.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(und.select(col("b").as("u"), col("a").as("v"))))
-    // ONE materialization per round (was three: frontier checkpoint,
-    // grown checkpoint, frontier count): the round's grown state carries
-    // a __new flag (1 on rows discovered this round), the frontier size
-    // rides the checkpoint's own action as the observed sum of that
-    // flag, and the next frontier is a lazy filter over the same
-    // checkpointed blocks — same rows, a third of the jobs.
-    val (init, nSources) = Checkpoints.truncateWithSum(
-      sources.select(col(sourceCol).cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0L)).withColumn("__new", lit(1L)),
-      "__new")
-    var state = init.select("node", "dist")
-    var frontier = state
-    var depth = 0
-    var frontierSize = nSources
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
-      val discovered = frontier.join(bidir, col("node") === col("u"))
-        .select(col("v").as("node")).distinct()
-        .join(state, Seq("node"), "left_anti")
-        .withColumn("dist", lit(depth.toLong))
-      val (grown, newCount) = Checkpoints.truncateWithSum(
+    Checkpoints.iterate("bfsDistances", Seq(edges, sources), maxDepth, Some("__new"),
+        stop = (_, n) => n == 0L) { (loop, in) =>
+      val und = canonicalEdges(in(0), srcCol, dstCol)
+      // both directions once, so each round is a single equi-join
+      val bidir = loop.keep(
+        und.select(col("a").as("u"), col("b").as("v"))
+          .unionAll(und.select(col("b").as("u"), col("a").as("v"))))
+      // ONE materialization per round: the grown state carries a __new
+      // flag (1 on rows discovered this round), the frontier size is its
+      // observed sum, and the next frontier is a lazy filter over the
+      // same checkpointed blocks
+      (in(1).select(col(sourceCol).cast("long").as("node")).distinct()
+        .withColumn("dist", lit(0L)).withColumn("__new", lit(1L)), (grown, depth) => {
+        val state = grown.select("node", "dist")
+        // round 1's frontier is every source: the state's own plan, so a
+        // broadcast of it is built once for both joins
+        val frontier = if (depth == 1) state
+          else grown.filter(col("__new") === 1L).select("node", "dist")
+        val discovered = frontier.join(bidir, col("node") === col("u"))
+          .select(col("v").as("node")).distinct()
+          .join(state, Seq("node"), "left_anti")
+          .withColumn("dist", lit(depth.toLong))
         state.withColumn("__new", lit(0L))
-          .unionAll(discovered.withColumn("__new", lit(1L))),
-        "__new")
-      frontierSize = newCount
-      // state and frontier are projections over the SAME superseded
-      // checkpoint from the previous round — freeing state frees both
-      Checkpoints.free(state)
-      state = grown.select("node", "dist")
-      frontier = grown.filter(col("__new") === 1L).select("node", "dist")
-    }
-    Checkpoints.free(bidir)
-    state
+          .unionAll(discovered.withColumn("__new", lit(1L)))
+      })
+    }.select("node", "dist")
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for
@@ -234,21 +192,13 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    Checkpoints.sizedLoop(edges) { loop =>
-      labelPropagationLoop(Checkpoints.rebind(loop, edges), srcCol, dstCol, rounds) }
-  }
-
-  private def labelPropagationLoop(edges: DataFrame, srcCol: String,
-      dstCol: String, rounds: Int): DataFrame = {
-    val und = canonicalEdges(edges, srcCol, dstCol)
-    val bidir = Checkpoints.truncate(
-      und.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(und.select(col("b").as("u"), col("a").as("v"))))
-    var labels = Checkpoints.truncate(
-      bidir.select(col("u").as("node")).distinct()
-        .withColumn("label", col("node").cast("long")))
-    (1 to rounds).foreach { _ =>
-      val next = Checkpoints.truncate(
+    Checkpoints.iterate("labelPropagation", Seq(edges), rounds) { (loop, in) =>
+      val und = canonicalEdges(in.head, srcCol, dstCol)
+      val bidir = loop.keep(
+        und.select(col("a").as("u"), col("b").as("v"))
+          .unionAll(und.select(col("b").as("u"), col("a").as("v"))))
+      (bidir.select(col("u").as("node")).distinct()
+        .withColumn("label", col("node").cast("long")), (labels, _) =>
         bidir
           .join(labels.withColumnRenamed("node", "v"), "v")
           .groupBy(col("u").as("node"), col("label"))
@@ -256,14 +206,7 @@ object Graph {
           .groupBy("node")
           .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("top"))
           .select(col("node"), (-col("top.nl")).as("label")))
-      // truncate() is EAGER in both modes (localCheckpoint()/checkpoint()
-      // default eager=true) — next is already materialized here, so the
-      // old `next.count()` was a redundant extra job per round
-      Checkpoints.free(labels)
-      labels = next
     }
-    Checkpoints.free(bidir)
-    labels
   }
 
   /** Weighted single-source (well, multi-source) shortest paths by
@@ -305,6 +248,8 @@ object Graph {
         Checkpoints.rebind(loop, sources), sourceCol, maxRounds) }
   }
 
+  // not run by Checkpoints.iterate: its observed negative-weight check
+  // and its uncounted sources would need driver features of its own
   private def shortestPathsLoop(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String, sources: DataFrame, sourceCol: String,
       maxRounds: Int): DataFrame = {
@@ -315,50 +260,52 @@ object Graph {
       // parallel edges: only the lightest can ever matter
       .groupBy("a", "b").agg(min(col("w")).as("w"))
     // the negative-weight refusal rides the bidir checkpoint's own
-    // materialization as an observed conditional sum (was a separate
-    // filter+count job over the edge set)
+    // materialization as an observed conditional sum
     val (bidirCk, negs) = Checkpoints.truncateWithSum(
       und.select(col("a").as("u"), col("b").as("v"), col("w"))
         .unionAll(und.select(col("b").as("u"), col("a").as("v"), col("w")))
         .withColumn("__neg", when(col("w") < 0, 1L).otherwise(0L)),
       "__neg")
-    require(negs == 0L,
-      "shortestPaths: negative edge weight — an undirected negative " +
-        "edge is a negative cycle; distances would be unbounded")
-    val bidir = bidirCk.select("u", "v", "w")
-    var state = Checkpoints.truncate(
-      sources.select(col(sourceCol).cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0L)))
-    var round = 0
-    var changed = 1L
-    while (round < maxRounds && changed > 0) {
-      round += 1
-      val relaxed = state.join(bidir, col("node") === col("u"))
-        .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      // fixpoint test FUSED into the round's single materialization
-      // (was a separate anti-join action — one extra job + one extra
-      // state-sized shuffle per round): old rows carry their distance in
-      // __old (exactly one per node — state is already min-unique),
-      // relaxed rows carry null, and min() ignores nulls, so after the
-      // aggregate __old is the node's previous distance or null when the
-      // node is newly reached. Distances are monotone non-increasing,
-      // hence "dist < __old OR __old IS NULL" is exactly the old
-      // "(node, dist) not already in state" anti-join predicate; the
-      // count of such nodes rides the checkpoint's own action.
-      val (next, chg) = Checkpoints.truncateWithSum(
-        state.withColumn("__old", col("dist"))
-          .unionAll(relaxed.withColumn("__old", lit(null).cast("long")))
-          .groupBy("node")
-          .agg(min(col("dist")).as("dist"), min(col("__old")).as("__old"))
-          .select(col("node"), col("dist"),
-            when(col("__old").isNull || col("dist") < col("__old"), 1L)
-              .otherwise(0L).as("__chg")),
-        "__chg")
-      changed = chg
-      Checkpoints.free(state)
-      state = next.select("node", "dist")
-    }
-    Checkpoints.free(bidir)
-    state
+    var state: DataFrame = null
+    try {
+      require(negs == 0L,
+        "shortestPaths: negative edge weight — an undirected negative " +
+          "edge is a negative cycle; distances would be unbounded")
+      val bidir = bidirCk.select("u", "v", "w")
+      state = Checkpoints.truncate(
+        sources.select(col(sourceCol).cast("long").as("node")).distinct()
+          .withColumn("dist", lit(0L)))
+      var round = 0
+      var changed = 1L
+      while (round < maxRounds && changed > 0) {
+        round += 1
+        val relaxed = state.join(bidir, col("node") === col("u"))
+          .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
+        // fixpoint test FUSED into the round's single materialization:
+        // old rows carry their distance in __old (exactly one per node —
+        // state is already min-unique), relaxed rows carry null, and min()
+        // ignores nulls, so after the aggregate __old is the node's
+        // previous distance or null when the node is newly reached.
+        // Distances are monotone non-increasing, hence "dist < __old OR
+        // __old IS NULL" is exactly "(node, dist) not already in state";
+        // the count of such nodes rides the checkpoint's own action.
+        val (next, chg) = Checkpoints.truncateWithSum(
+          state.withColumn("__old", col("dist"))
+            .unionAll(relaxed.withColumn("__old", lit(null).cast("long")))
+            .groupBy("node")
+            .agg(min(col("dist")).as("dist"), min(col("__old")).as("__old"))
+            .select(col("node"), col("dist"),
+              when(col("__old").isNull || col("dist") < col("__old"), 1L)
+                .otherwise(0L).as("__chg")),
+          "__chg")
+        changed = chg
+        Checkpoints.free(state)
+        state = next.select("node", "dist")
+      }
+      state
+    } catch { case t: Throwable =>
+      if (state != null) Checkpoints.free(state)
+      throw t
+    } finally Checkpoints.free(bidirCk)
   }
 }

@@ -184,38 +184,33 @@ object LinearAlgebra {
   private[graft] def dominantDirectionDistributed(vecs: DataFrame, vecCol: String,
       rounds: Int = 12, quantScale: Int = 64): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64], got $rounds")
-    val mm = Checkpoints.truncate(secondMoment(vecs, vecCol, quantScale))
-    // overflow headroom check: dim · max|M| · 2^21 must fit a Long
-    val hdr = mm.agg(max(abs(col("m"))).as("ma"), max(col("i")).as("dim")).head()
-    if (hdr.isNullAt(0)) throw new IllegalArgumentException(
-      "dominantDirection: no vectors (empty input)")
-    val (maxM, dim) = (hdr.getLong(0), hdr.getLong(1))
-    require(maxM > 0, "second moment is identically zero")
-    // dim must be bounded BEFORE it multiplies into the divisor below —
-    // for dim > 2^41 the product dim·2^22 itself overflows Long and the
-    // overflow guard would silently pass
-    require(dim <= (1L << 20),
-      s"dominantDirection: dim=$dim exceeds 2^20 components")
-    require(maxM <= Long.MaxValue / (dim * (1L << 22)),
-      s"matvec could overflow: dim=$dim, max|M|=$maxM — lower quantScale")
-    var v = Checkpoints.truncate(
-      mm.select(col("i")).distinct().withColumn("v", lit(1L << 20)))
-    (1 to rounds).foreach { _ =>
-      val w = Checkpoints.truncate(
-        mm.join(v.select(col("i").as("j"), col("v")), Seq("j"))
-          .groupBy("i").agg(sum(col("m") * col("v")).as("w")))
-      val maxAbs = w.agg(max(abs(col("w")))).head().getLong(0)
-      if (maxAbs == 0L) throw new IllegalStateException(
-        "power iteration collapsed to the zero vector")
-      // floor(log2 maxAbs) = 63 - nlz; shift down to ~21-bit components
-      val k = (63 - java.lang.Long.numberOfLeadingZeros(maxAbs)) - 20
-      val next = Checkpoints.truncate(
+    Checkpoints.iterate("dominantDirection", Seq(vecs), rounds) { (loop, in) =>
+      val mm = loop.keep(secondMoment(in.head, vecCol, quantScale))
+      // overflow headroom check: dim · max|M| · 2^21 must fit a Long
+      val hdr = mm.agg(max(abs(col("m"))).as("ma"), max(col("i")).as("dim")).head()
+      if (hdr.isNullAt(0)) throw new IllegalArgumentException(
+        "dominantDirection: no vectors (empty input)")
+      val (maxM, dim) = (hdr.getLong(0), hdr.getLong(1))
+      require(maxM > 0, "second moment is identically zero")
+      // dim must be bounded BEFORE it multiplies into the divisor below —
+      // for dim > 2^41 the product dim·2^22 itself overflows Long and the
+      // overflow guard would silently pass
+      require(dim <= (1L << 20),
+        s"dominantDirection: dim=$dim exceeds 2^20 components")
+      require(maxM <= Long.MaxValue / (dim * (1L << 22)),
+        s"matvec could overflow: dim=$dim, max|M|=$maxM — lower quantScale")
+      (mm.select(col("i")).distinct().withColumn("v", lit(1L << 20)), (v, _) => {
+        val w = loop.roundLocal(
+          mm.join(v.select(col("i").as("j"), col("v")), Seq("j"))
+            .groupBy("i").agg(sum(col("m") * col("v")).as("w")))
+        val maxAbs = w.agg(max(abs(col("w")))).head().getLong(0)
+        if (maxAbs == 0L) throw new IllegalStateException(
+          "power iteration collapsed to the zero vector")
+        // floor(log2 maxAbs) = 63 - nlz; shift down to ~21-bit components
+        val k = (63 - java.lang.Long.numberOfLeadingZeros(maxAbs)) - 20
         if (k > 0) w.select(col("i"), shiftright(col("w"), k).as("v"))
-        else w.select(col("i"), col("w").as("v")))
-      Checkpoints.free(v); Checkpoints.free(w)
-      v = next
+        else w.select(col("i"), col("w").as("v"))
+      })
     }
-    Checkpoints.free(mm)
-    v
   }
 }

@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
   * Shape at scale: per iteration, one equi-join of edges against the
   * current ranks (both hash-partitioned on the node key — a co-partitioned
   * shuffle pair that AQE keeps local after the first materialization) and
-  * one hash aggregation on the destination. Rank tables are checkpointed
-  * per round via [[Checkpoints]], the [[Dedup.dupClusters]] lesson: an
-  * iterated self-referential plan otherwise doubles per round. Default is
+  * one hash aggregation on the destination. Rounds run through
+  * [[Checkpoints.iterate]], which truncates each rank table. Default is
   * `localCheckpoint` (local mode, not fault-tolerant); set the
   * `graft.checkpoint.dir` session conf to switch every round to RELIABLE
   * `checkpoint()` so executor loss recovers from storage.
@@ -35,43 +34,28 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    Checkpoints.sizedLoop(edges) { loop =>
-      pageRankLoop(Checkpoints.rebind(loop, edges), iters, damping) }
-  }
-
-  private def pageRankLoop(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
-    val c1 = edges.columns(0); val c2 = edges.columns(1)
-    val e = edges
-      .select(col(c1).cast("long").as("src"), col(c2).cast("long").as("dst"))
-      .distinct().persist()
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    // contribution edges carry 1/deg(src) so each iteration is join+agg only
-    val contrib = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .persist()
-    // ranks stay defined over ALL nodes: a src with no in-edges must keep
-    // contributing its base rank in later rounds, so each round left-joins
-    // the full node set against the aggregated in-mass
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    var ranks = Checkpoints.truncate(nodes.withColumn("pr", lit(1.0)))
-    for (it <- 1 to iters) {
-      val inMass = contrib.join(ranks, col("src") === col("id"))
-        .groupBy("dst").agg(sum(col("w") * col("pr")).as("m"))
-      val next = Checkpoints.truncate(nodes // eager: materialized before the parent is freed
-        .join(inMass, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("m"), lit(0.0))).as("pr")))
-      // free the previous round's checkpoint blocks — without this,
-      // executor storage grows linearly with iters (each round's rank
-      // table stays pinned). The final round's table stays persisted: it
-      // backs the returned DataFrame.
-      Checkpoints.free(ranks)
-      ranks = next
+    Checkpoints.iterate("pageRank", Seq(edges), iters) { (loop, in) =>
+      val c1 = in.head.columns(0); val c2 = in.head.columns(1)
+      val e = loop.persist(in.head
+        .select(col(c1).cast("long").as("src"), col(c2).cast("long").as("dst"))
+        .distinct())
+      val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+      // contribution edges carry 1/deg(src) so each iteration is join+agg only
+      val contrib = loop.persist(e.join(deg, "src")
+        .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w")))
+      // ranks stay defined over ALL nodes: a src with no in-edges must keep
+      // contributing its base rank in later rounds, so each round left-joins
+      // the full node set against the aggregated in-mass
+      val nodes = loop.persist(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      (nodes.withColumn("pr", lit(1.0)), (ranks, _) => {
+        val inMass = contrib.join(ranks, col("src") === col("id"))
+          .groupBy("dst").agg(sum(col("w") * col("pr")).as("m"))
+        nodes
+          .join(inMass, col("id") === col("dst"), "left")
+          .select(col("id"),
+            (lit(1.0 - damping) + lit(damping) * coalesce(col("m"), lit(0.0))).as("pr"))
+      })
     }
-    e.unpersist(blocking = false)
-    contrib.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    ranks
   }
 }

@@ -160,6 +160,39 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("iterative loops free their rounds only through Checkpoints.iterate") {
+    // the round driver frees each superseded round and releases a loop's
+    // state on every exit, errors included; a hand-written free in a loop
+    // misses the error path. Each allowed line, by file and text: the
+    // non-loop tables of the semantic-dedup admission, q202, the linkage
+    // dictionary and curation, and shortestPaths, which keeps its own loop
+    val allowed = Seq(
+      "admission" -> ("operators/SimilaritySearch.scala", "Checkpoints.free(admitted)"),
+      "admission" -> ("operators/SimilaritySearch.scala", "Checkpoints.free(rejected)"),
+      "q202" -> ("queries/ExtendedQueries.scala",
+        "graft.operators.Checkpoints.free(adm.admitted)"),
+      "dictionary" -> ("operators/Dedup.scala", "Checkpoints.free(vals)"),
+      "curation" -> ("operators/Curation.scala", "Checkpoints.free(db0)"),
+      "shortestPaths" -> ("operators/Graph.scala", "Checkpoints.free(state)"),
+      "shortestPaths" -> ("operators/Graph.scala", "if (state != null) Checkpoints.free(state)"),
+      "shortestPaths" -> ("operators/Graph.scala", "} finally Checkpoints.free(bidirCk)"))
+    val hits = scalaFiles("src/main/scala").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("Checkpoints.free(") =>
+          (allowed.find { case (_, (file, text)) =>
+            f.toString.endsWith("graft/" + file) && line.trim == text
+          }, s"$f:${i + 1}: ${line.trim}")
+      }
+    }
+    val offenders = hits.filter(_._1.isEmpty).map(_._2)
+    assert(offenders.isEmpty,
+      s"Checkpoints.free outside Checkpoints and the listed sites (use Checkpoints.iterate):\n" +
+        offenders.mkString("\n"))
+    allowed.foreach { a =>
+      assert(hits.count(_._1.contains(a)) == 1, s"the scan no longer finds the ${a._1} free ${a._2}")
+    }
+  }
+
   test("the only mains are Bench, Demo, Verify, ScaleData and Prof") {
     // a one-off measurement runs through Prof or a spec, not a new main
     val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
