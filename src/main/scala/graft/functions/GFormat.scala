@@ -52,5 +52,4 @@ object GFormat {
     * ticks exactly as in the reference (double carry).
     */
   val TicksAtEpoch = 621355968000000000L
-  def ticksFromEpochMillis(ms: Long): Long = TicksAtEpoch + ms * 10000L
 }

@@ -271,15 +271,6 @@ object Dedup {
     array_distinct(transform(idx, i => array_join(slice(words, i, lit(k)), " ")))
   }
 
-  /** Per-ROW sorted distinct 40-bit shingle-hash set — pairs with
-    * [[rowShingles]] for stateless Jaccard verification via the codegen
-    * sorted-intersect expression (hash-level Jaccard: identical to
-    * string-level except under 40-bit collisions, negligible and
-    * documented).
-    */
-  def rowShingleHashSet(text: Column, k: Int): Column =
-    array_sort(array_distinct(transform(rowShingles(text, k), s => hash40(s))))
-
   /** Per-ROW MinHash band keys as ARRAY<STRUCT<band INT, bkey STRING>> —
     * the stateless reformulation of shingles→[[minhashSignatures]]→
     * [[bandKeys]], producing byte-identical band-key strings (including

@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * under deletes) need a rescan of the affected groups and are out of
   * scope by design — document, don't pretend.
   *
+  * Join views maintain through ONE refresher, [[refreshJoinSumCount]]:
+  * the view is the inner term set (one signed feed per term, the
+  * multilinear telescoping) plus, for outer joins, the left-anti and
+  * right-anti term sets — all folded through the same sign algebra into
+  * the same null-safe state merge.
+  *
   * EXACTNESS requires an order-insensitive value domain: integer or
   * DECIMAL sums are exact under any grouping/merge order, so the
   * maintained state is bit-identical to a from-scratch recompute (q185's
@@ -54,10 +60,15 @@ object IncrementalAgg {
     * @param prevAgg previous state: groupCols ++ (cntCol, sum columns) —
     *                the schema [[sumCountDeltas]] maintains
     * @param deltas  output of [[sumCountDeltas]] over the CDF
-    * @return the refreshed state: same schema as `prevAgg`; groups with
+    * @return the refreshed state: same columns as `prevAgg`; groups with
     *         zero remaining rows are dropped, brand-new groups appear.
-    *         One full-outer equi-join on the group key — co-located for
-    *         free when the state table is bucketed by it.
+    *
+    * The state rides along as one more delta row per group and one
+    * re-aggregation merges them. GROUP BY puts every NULL key in one
+    * group, so a NULL group meets its own delta (a using-join never
+    * matches NULL to NULL and would split it in two). When both inputs
+    * arrive hash-partitioned on the group key (an aggregate's output),
+    * the merge adds no exchange.
     */
   def applySumCount(
       prevAgg: DataFrame,
@@ -65,13 +76,12 @@ object IncrementalAgg {
       groupCols: Seq[String],
       cntCol: String,
       sumCols: Seq[String]): DataFrame = {
-    def z(c: Column) = coalesce(c, lit(0L))
-    prevAgg.join(deltas, groupCols, "full_outer")
-      .select((groupCols.map(col) :+
-        (z(col(cntCol)) + z(col("d_cnt"))).as(cntCol)) ++
-        sumCols.map(c =>
-          (coalesce(col(c), lit(0)) + coalesce(col(s"d_sum_$c"), lit(0)))
-            .as(c)): _*)
+    val state = prevAgg.select(groupCols.map(col) ++ (col(cntCol).as("d_cnt") +:
+      sumCols.map(c => col(c).as(s"d_sum_$c"))): _*)
+    state.unionByName(deltas.select(state.columns.toSeq.map(col): _*))
+      .groupBy(groupCols.map(col): _*)
+      .agg(sum(col("d_cnt")).as(cntCol),
+        sumCols.map(c => coalesce(sum(col(s"d_sum_$c")), lit(0)).as(c)): _*)
       .filter(col(cntCol) > 0)
   }
 
@@ -85,8 +95,8 @@ object IncrementalAgg {
     applySumCount(prevAgg, sumCountDeltas(cdf, groupCols, sumCols),
       groupCols, cntCol, sumCols)
 
-  /** Second-moment (variance) maintenance — the FIFTH IVM algebra, and
-    * the degenerate-easy one: (count, Σv, Σv²) are all abelian-group
+  /** Second-moment (variance) maintenance — the degenerate-easy member
+    * of the family: (count, Σv, Σv²) are all abelian-group
     * aggregates, so variance maintains exactly like sum/count with a
     * derived squared column — no rescan set, no support table. The
     * prevAgg must carry `cntCol`, `valCol` (= Σv) and `<valCol>_sq`
@@ -188,374 +198,24 @@ object IncrementalAgg {
     monotonic.unionByName(rescanned)
   }
 
-  /** The join-view refreshers rename the right input's join key to the
-    * left's name before the using-join; if the right side ALREADY has a
-    * distinct column named like the left key, that rename would create
-    * duplicate column names and an ambiguous join — fail loudly instead.
+  /** The join-view refresher renames each dimension's join key to the
+    * fact side's name before the using-join; if that dimension ALREADY
+    * has a distinct column named like the fact key, the rename would
+    * create duplicate column names and an ambiguous join — fail loudly
+    * instead.
     */
   private def requireNoKeyShadow(
-      right: DataFrame, leftKey: String, rightKey: String): Unit =
-    require(leftKey == rightKey || !right.columns.contains(leftKey),
-      s"right input already carries a column named '$leftKey' distinct " +
-        s"from its join key '$rightKey' — renaming would create an " +
+      dim: DataFrame, factKey: String, dimKey: String): Unit =
+    require(factKey == dimKey || !dim.columns.contains(factKey),
+      s"dimension input already carries a column named '$factKey' distinct " +
+        s"from its join key '$dimKey' — renaming would create an " +
         "ambiguous duplicate; drop or rename it before the refresh")
 
-  /** Maintain a JOIN-aggregate view from the change feeds of BOTH join
-    * inputs — the sixth IVM algebra, and the one that makes the others
-    * compose into real pipelines: V = γ(L ⋈ R) maintained without ever
-    * re-joining the full inputs. Joins are bilinear over signed
-    * multisets, so with L' = L + ΔL and R' = R + ΔR:
-    *
-    *   L' ⋈ R'  =  L ⋈ R  +  ΔL ⋈ R'  +  L ⋈ ΔR
-    *
-    * (the ΔL ⋈ ΔR cross term is absorbed by joining ΔL against the NEW
-    * right side and ΔR against the OLD left side — the standard
-    * delta-join bracketing). Each correction term is one equi-join of a
-    * small signed feed against a snapshot, then the [[sumCountDeltas]]
-    * sign algebra folds both into the maintained (count, sums) state —
-    * a feed row's sign rides every pair it produces, signs never
-    * multiply because no term joins two deltas.
-    *
-    * Scale posture: the refresh cost is O(|ΔL| · fanout + |ΔR| ·
-    * fanout) join work + one O(affected groups) state merge — never a
-    * scan of L, R, or the view. Both probe joins are partition-pruned /
-    * co-located for free when the snapshots are bucketed on their join
-    * keys. Exactness needs the same order-insensitive value domain as
-    * [[refreshSumCount]]: integer or DECIMAL sums.
-    *
-    * @param cdfLeft  change feed of the LEFT input: change_type + join
-    *                 key + the left-side group/sum columns
-    * @param oldLeft  PRE-change left snapshot (L)
-    * @param cdfRight change feed of the RIGHT input
-    * @param newRight POST-change right snapshot (R')
-    * @param leftKey/rightKey equi-join columns (renamed into one name
-    *                 internally; pass the same string when they match)
-    * @return the refreshed state, [[applySumCount]] semantics: emptied
-    *         groups leave, brand-new groups (e.g. a dimension value the
-    *         right feed just introduced) appear.
-    */
-  def refreshJoinSumCount(
-      prevAgg: DataFrame,
-      cdfLeft: DataFrame,
-      oldLeft: DataFrame,
-      cdfRight: DataFrame,
-      newRight: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      groupCols: Seq[String],
-      cntCol: String,
-      sumCols: Seq[String]): DataFrame = {
-    require(!oldLeft.columns.contains("change_type") &&
-        !newRight.columns.contains("change_type"),
-      "snapshot inputs must not carry a change_type column — it would " +
-        "shadow the feed's sign and silently corrupt the delta algebra")
-    Seq(cdfRight, newRight).foreach(requireNoKeyShadow(_, leftKey, rightKey))
-    // sum columns must ride the LEFT (probe/fact) side: a right-carried
-    // measure multiplies by the join fan-out and the maintained number
-    // would be silently wrong
-    val rightMeasures = sumCols.filterNot(oldLeft.columns.contains)
-    require(rightMeasures.isEmpty,
-      s"sum column(s) ${rightMeasures.mkString(", ")} are not left-side " +
-        "columns — a right-carried measure multiplies by the join " +
-        "fan-out; make that side the left input or aggregate it " +
-        "in its own view")
-    val proj = (groupCols ++ sumCols :+ "change_type").map(col)
-    // ΔL ⋈ R′ : the left feed's sign rides each produced pair
-    val dLeft = cdfLeft
-      .join(newRight.withColumnRenamed(rightKey, leftKey), Seq(leftKey))
-      .select(proj: _*)
-    // L ⋈ ΔR : the right feed's sign rides each produced pair
-    val dRight = oldLeft
-      .join(cdfRight.withColumnRenamed(rightKey, leftKey), Seq(leftKey))
-      .select(proj: _*)
-    refreshSumCount(prevAgg, dLeft.unionByName(dRight),
-      groupCols, cntCol, sumCols)
-  }
-
-  /** [[applySumCount]] with a NULL-SAFE group-key merge: LEFT-outer
-    * views have a legitimate NULL group (the unmatched rows' null-padded
-    * dimension attributes), and the plain using-join would never match
-    * the state's null-group row against its delta — the group would
-    * silently split in two. Same contract otherwise.
-    */
-  def applySumCountNullSafe(
-      prevAgg: DataFrame,
-      deltas: DataFrame,
-      groupCols: Seq[String],
-      cntCol: String,
-      sumCols: Seq[String]): DataFrame = {
-    def z(c: Column) = coalesce(c, lit(0L))
-    val l = prevAgg.as("__s"); val r = deltas.as("__d")
-    val cond = groupCols.map(c => col(s"__s.$c") <=> col(s"__d.$c"))
-      .reduce(_ && _)
-    l.join(r, cond, "full_outer")
-      .select((groupCols.map(c =>
-        coalesce(col(s"__s.$c"), col(s"__d.$c")).as(c)) :+
-        (z(col(s"__s.$cntCol")) + z(col(s"__d.d_cnt"))).as(cntCol)) ++
-        sumCols.map(c =>
-          (coalesce(col(s"__s.$c"), lit(0)) +
-            coalesce(col(s"__d.d_sum_$c"), lit(0))).as(c)): _*)
-      .filter(col(cntCol) > 0)
-  }
-
-  /** LEFT-OUTER-join aggregate maintenance — the null-extension case
-    * the inner-join algebras can't express: V = γ(L ⟕ R), where an L
-    * row with no R match contributes once with null-padded R
-    * attributes. Decompose L ⟕ R = (L ⋈ R) ⊎ (L ▷ R) × {nulls}; the
-    * inner part maintains by the [[refreshJoinSumCount]] bracketing,
-    * and the anti part A = L · z(m) (z(m)=1 iff the row's key has ZERO
-    * R matches) telescopes the same way:
-    *
-    *   ΔA = ΔL · z′ + L · Δz
-    *
-    * — ΔL rows kept iff their key is absent from R′ (one anti-join),
-    * plus OLD L rows of keys whose match count TRANSITIONED: a key R′
-    * dropped entirely re-enters the anti part (+, its L rows regain
-    * the null group), a key R′ introduced leaves it (−). Signs ride
-    * the feed/transition rows through [[sumCountDeltas]]; the state
-    * merge is null-safe ([[applySumCountNullSafe]]) because the null
-    * group is a first-class group here. A NULL join key on the left
-    * never matches (SQL semantics) and lives permanently in the anti
-    * part — both sides of the telescoping preserve that.
-    *
-    * Scale posture: the transition keys come from two key-distinct
-    * anti-joins of the R snapshots — O(|R| keys), the dim side; at
-    * fact-sized R maintain the per-key match count with
-    * [[refreshSumCount]] instead and feed the transitions from its
-    * before/after states. Sum columns must ride L, as everywhere in
-    * the family.
-    */
-  def refreshLeftJoinSumCount(
-      prevAgg: DataFrame,
-      cdfLeft: DataFrame,
-      oldLeft: DataFrame,
-      cdfRight: DataFrame,
-      oldRight: DataFrame,
-      newRight: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      groupCols: Seq[String],
-      cntCol: String,
-      sumCols: Seq[String]): DataFrame = {
-    require(!oldLeft.columns.contains("change_type") &&
-        !oldRight.columns.contains("change_type") &&
-        !newRight.columns.contains("change_type"),
-      "snapshot inputs must not carry a change_type column — it would " +
-        "shadow the feed's sign and silently corrupt the delta algebra")
-    Seq(cdfRight, oldRight, newRight)
-      .foreach(requireNoKeyShadow(_, leftKey, rightKey))
-    val leftMeasures = sumCols.filterNot(oldLeft.columns.contains)
-    require(leftMeasures.isEmpty,
-      s"sum column(s) ${leftMeasures.mkString(", ")} are not left-side " +
-        "columns — a right-carried measure multiplies by the join fan-out")
-    val proj = (groupCols ++ sumCols :+ "change_type").map(col)
-    // R-sourced group columns null-pad in the anti part, typed from R′
-    val rightTypes = newRight.schema.map(f => f.name -> f.dataType).toMap
-    val antiProj = (groupCols.map { g =>
-      if (oldLeft.columns.contains(g)) col(g)
-      else lit(null).cast(rightTypes.getOrElse(g,
-        org.apache.spark.sql.types.StringType)).as(g)
-    } ++ sumCols.map(col) :+ col("change_type"))
-    // inner part: the refreshJoinSumCount terms
-    val innerL = cdfLeft
-      .join(newRight.withColumnRenamed(rightKey, leftKey), Seq(leftKey))
-      .select(proj: _*)
-    val innerR = oldLeft
-      .join(cdfRight.withColumnRenamed(rightKey, leftKey), Seq(leftKey))
-      .select(proj: _*)
-    // anti part, term 1: ΔL against the NEW zero-match keys
-    val rKeysNew = newRight.select(col(rightKey).as(leftKey)).distinct()
-    val rKeysOld = oldRight.select(col(rightKey).as(leftKey)).distinct()
-    val antiDelta = cdfLeft.join(rKeysNew, Seq(leftKey), "left_anti")
-      .select(antiProj: _*)
-    // anti part, term 2: OLD L rows of keys whose emptiness flipped —
-    // a key R′ dropped re-enters the anti part (+), a born key leaves (−)
-    val died = rKeysOld.join(rKeysNew, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("insert"))
-    val born = rKeysNew.join(rKeysOld, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("delete"))
-    val antiTrans = oldLeft.join(died.unionByName(born), Seq(leftKey))
-      .select(antiProj: _*)
-    val deltas = sumCountDeltas(
-      Seq(innerL, innerR, antiDelta, antiTrans).reduce(_ unionByName _),
-      groupCols, sumCols)
-    applySumCountNullSafe(prevAgg, deltas, groupCols, cntCol, sumCols)
-  }
-
-  /** RIGHT-OUTER-join aggregate maintenance: V = γ(L ⟖ R) =
-    * γ( (L ⋈ R) ⊎ (R ▷ L)×{nullL} ). NOT expressible by swapping the
-    * left algebra's inputs when the measures ride L (the family
-    * contract): here the PRESERVED side R carries no measures, so an
-    * unmatched R row adds to the count with NULL sums — exactly
-    * [[refreshFullJoinSumCount]]'s right-anti machinery without its
-    * left-anti part. Same state schema as the full-outer (per-measure
-    * `<c>_nn` non-null counters beside each sum; restore SQL's
-    * sum-over-all-null = NULL at presentation with
-    * `when(col("p_nn") > 0, col("p"))`).
-    */
-  def refreshRightJoinSumCount(
-      prevAgg: DataFrame,
-      cdfLeft: DataFrame,
-      oldLeft: DataFrame,
-      newLeft: DataFrame,
-      cdfRight: DataFrame,
-      oldRight: DataFrame,
-      newRight: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      groupCols: Seq[String],
-      cntCol: String,
-      sumCols: Seq[String]): DataFrame = {
-    require(Seq(oldLeft, newLeft, oldRight, newRight)
-        .forall(d => !d.columns.contains("change_type")),
-      "snapshot inputs must not carry a change_type column — it would " +
-        "shadow the feed's sign and silently corrupt the delta algebra")
-    Seq(cdfRight, oldRight, newRight)
-      .foreach(requireNoKeyShadow(_, leftKey, rightKey))
-    val leftMeasures = sumCols.filterNot(oldLeft.columns.contains)
-    require(leftMeasures.isEmpty,
-      s"sum column(s) ${leftMeasures.mkString(", ")} are not left-side " +
-        "columns — a right-carried measure multiplies by the join fan-out")
-    val proj = (groupCols ++ sumCols :+ "change_type").map(col)
-    val leftTypes = oldLeft.schema.map(f => f.name -> f.dataType).toMap
-    // right-anti rows: L-sourced group cols AND all measures null-pad
-    val rightAntiProj = (groupCols.map { g =>
-      if (oldRight.columns.contains(g) || newRight.columns.contains(g)) col(g)
-      else lit(null).cast(leftTypes.getOrElse(g,
-        org.apache.spark.sql.types.StringType)).as(g)
-    } ++ sumCols.map(c => lit(null).cast(leftTypes(c)).as(c)) :+
-      col("change_type"))
-    val rRenamed = (d: DataFrame) => d.withColumnRenamed(rightKey, leftKey)
-    // inner part: the refreshJoinSumCount bracketing
-    val innerL = cdfLeft.join(rRenamed(newRight), Seq(leftKey)).select(proj: _*)
-    val innerR = oldLeft.join(rRenamed(cdfRight), Seq(leftKey)).select(proj: _*)
-    // right-anti part: ΔR·z_L′ + R·Δz_L over the LEFT side's key-emptiness
-    val lKeysNew = newLeft.select(col(leftKey)).distinct()
-    val lKeysOld = oldLeft.select(col(leftKey)).distinct()
-    val rAntiDelta = rRenamed(cdfRight).join(lKeysNew, Seq(leftKey), "left_anti")
-      .select(rightAntiProj: _*)
-    val lDied = lKeysOld.join(lKeysNew, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("insert"))
-    val lBorn = lKeysNew.join(lKeysOld, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("delete"))
-    val rAntiTrans = rRenamed(oldRight).join(lDied.unionByName(lBorn), Seq(leftKey))
-      .select(rightAntiProj: _*)
-    val unioned = Seq(innerL, innerR, rAntiDelta, rAntiTrans)
-      .reduce(_ unionByName _)
-    val withNn = sumCols.foldLeft(unioned) { (d, c) =>
-      d.withColumn(s"${c}_nn", when(col(c).isNotNull, 1L).otherwise(0L))
-    }
-    val allSums = sumCols ++ sumCols.map(c => s"${c}_nn")
-    val deltas = sumCountDeltas(withNn, groupCols, allSums)
-    applySumCountNullSafe(prevAgg, deltas, groupCols, cntCol, allSums)
-  }
-
-  /** FULL-OUTER-join aggregate maintenance — the final member of the
-    * join-IVM family: V = γ(L ⟗ R) = γ( (L ⋈ R) ⊎ (L ▷ R)×{nullR} ⊎
-    * (R ▷ L)×{nullL} ). The inner and left-anti parts maintain exactly
-    * as in [[refreshLeftJoinSumCount]]; the RIGHT-anti part is the
-    * mirror telescoping ΔA_R = ΔR·z_L′ + R·Δz_L over the LEFT side's
-    * key-emptiness — its rows carry real R-sourced group values but
-    * NULL measures (sum columns ride L by the family contract, and SQL
-    * FULL JOIN null-pads them for unmatched right rows: they add to the
-    * count and nothing to the sums, which is exactly what a null
-    * measure does under [[sumCountDeltas]]'s skip-null sums).
-    *
-    * Needs BOTH left snapshots (the right-anti transitions read the
-    * left side's old/new key sets — O(distinct keys); at fact-sized L
-    * maintain that key support with [[refreshSupport]] instead).
-    *
-    * STATE SCHEMA: groupCols ++ cntCol ++ sumCols ++ `<c>_nn` per sum
-    * column — the per-measure NON-NULL counter. SQL's `sum` over an
-    * all-null group is NULL, but an additive state can only say 0; the
-    * counter (itself abelian, so it maintains exactly) lets the caller
-    * restore exact SQL semantics at presentation:
-    * `when(col("p_nn") > 0, col("p"))`. Seed `prevAgg` with
-    * `count(col(c)).as(s"${c}_nn")` beside each sum.
-    */
-  def refreshFullJoinSumCount(
-      prevAgg: DataFrame,
-      cdfLeft: DataFrame,
-      oldLeft: DataFrame,
-      newLeft: DataFrame,
-      cdfRight: DataFrame,
-      oldRight: DataFrame,
-      newRight: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      groupCols: Seq[String],
-      cntCol: String,
-      sumCols: Seq[String]): DataFrame = {
-    require(Seq(oldLeft, newLeft, oldRight, newRight)
-        .forall(d => !d.columns.contains("change_type")),
-      "snapshot inputs must not carry a change_type column — it would " +
-        "shadow the feed's sign and silently corrupt the delta algebra")
-    Seq(cdfRight, oldRight, newRight)
-      .foreach(requireNoKeyShadow(_, leftKey, rightKey))
-    val leftMeasures = sumCols.filterNot(oldLeft.columns.contains)
-    require(leftMeasures.isEmpty,
-      s"sum column(s) ${leftMeasures.mkString(", ")} are not left-side " +
-        "columns — a right-carried measure multiplies by the join fan-out")
-    val proj = (groupCols ++ sumCols :+ "change_type").map(col)
-    val leftTypes = oldLeft.schema.map(f => f.name -> f.dataType).toMap
-    val rightTypes = newRight.schema.map(f => f.name -> f.dataType).toMap
-    // left-anti rows: R-sourced group cols null-pad
-    val leftAntiProj = (groupCols.map { g =>
-      if (oldLeft.columns.contains(g)) col(g)
-      else lit(null).cast(rightTypes.getOrElse(g,
-        org.apache.spark.sql.types.StringType)).as(g)
-    } ++ sumCols.map(col) :+ col("change_type"))
-    // right-anti rows: L-sourced group cols AND all measures null-pad
-    val rightAntiProj = (groupCols.map { g =>
-      if (oldRight.columns.contains(g) || newRight.columns.contains(g)) col(g)
-      else lit(null).cast(leftTypes.getOrElse(g,
-        org.apache.spark.sql.types.StringType)).as(g)
-    } ++ sumCols.map(c => lit(null).cast(leftTypes(c)).as(c)) :+
-      col("change_type"))
-    val rRenamed = (d: DataFrame) => d.withColumnRenamed(rightKey, leftKey)
-    // inner part
-    val innerL = cdfLeft.join(rRenamed(newRight), Seq(leftKey)).select(proj: _*)
-    val innerR = oldLeft.join(rRenamed(cdfRight), Seq(leftKey)).select(proj: _*)
-    // left-anti part (rows of L with no R match)
-    val rKeysNew = newRight.select(col(rightKey).as(leftKey)).distinct()
-    val rKeysOld = oldRight.select(col(rightKey).as(leftKey)).distinct()
-    val lAntiDelta = cdfLeft.join(rKeysNew, Seq(leftKey), "left_anti")
-      .select(leftAntiProj: _*)
-    val rDied = rKeysOld.join(rKeysNew, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("insert"))
-    val rBorn = rKeysNew.join(rKeysOld, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("delete"))
-    val lAntiTrans = oldLeft.join(rDied.unionByName(rBorn), Seq(leftKey))
-      .select(leftAntiProj: _*)
-    // right-anti part (rows of R with no L match), mirror telescoping
-    val lKeysNew = newLeft.select(col(leftKey)).distinct()
-    val lKeysOld = oldLeft.select(col(leftKey)).distinct()
-    val rAntiDelta = rRenamed(cdfRight).join(lKeysNew, Seq(leftKey), "left_anti")
-      .select(rightAntiProj: _*)
-    val lDied = lKeysOld.join(lKeysNew, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("insert"))
-    val lBorn = lKeysNew.join(lKeysOld, Seq(leftKey), "left_anti")
-      .withColumn("change_type", lit("delete"))
-    val rAntiTrans = rRenamed(oldRight).join(lDied.unionByName(lBorn), Seq(leftKey))
-      .select(rightAntiProj: _*)
-    val unioned = Seq(innerL, innerR, lAntiDelta, lAntiTrans,
-      rAntiDelta, rAntiTrans).reduce(_ unionByName _)
-    // per-measure non-null counters ride the same sign algebra
-    val withNn = sumCols.foldLeft(unioned) { (d, c) =>
-      d.withColumn(s"${c}_nn",
-        when(col(c).isNotNull, 1L).otherwise(0L))
-    }
-    val allSums = sumCols ++ sumCols.map(c => s"${c}_nn")
-    val deltas = sumCountDeltas(withNn, groupCols, allSums)
-    applySumCountNullSafe(prevAgg, deltas, groupCols, cntCol, allSums)
-  }
-
-  /** One dimension input of [[refreshStarSumCount]]: its change feed,
-    * its PRE-change snapshot (joined in terms for feeds EARLIER in the
-    * chain is wrong — see the telescoping below — it appears in terms
-    * for feeds LATER in the chain), its POST-change snapshot (terms for
-    * earlier feeds), and the fact-side/dim-side equi-join columns. For
-    * a snowflake chain, `factKey` may name a column PRODUCED by the
+  /** One dimension input of [[refreshJoinSumCount]]: its change feed,
+    * its PRE-change snapshot (joined in terms for feeds LATER in the
+    * chain, and read by the anti terms), its POST-change snapshot (terms
+    * for earlier feeds), and the fact-side/dim-side equi-join columns.
+    * For a snowflake chain, `factKey` may name a column PRODUCED by the
     * previous dimension's join (e.g. customer supplies `nationkey` for
     * the nation dim) — terms join in chain order, so it is in scope.
     */
@@ -566,74 +226,142 @@ object IncrementalAgg {
       factKey: String,
       dimKey: String)
 
-  /** STAR/SNOWFLAKE-join aggregate maintenance — the N-way telescoping
-    * of [[refreshJoinSumCount]]: V = γ(F ⋈ D₁ ⋈ … ⋈ Dₙ) maintained
-    * from the change feeds of the fact AND every dimension. Joins are
-    * multilinear over signed multisets, so the update telescopes:
+  /** Maintain a JOIN-aggregate view V = γ(F ⋈ D₁ ⋈ … ⋈ Dₙ) — or, with
+    * one dimension D, γ(F ⟕ D), γ(F ⟖ D), γ(F ⟗ D) — from the change
+    * feeds of the fact AND every dimension, never re-joining the full
+    * inputs. The view is a sum of term groups, each telescoped over
+    * signed multisets (F′ = F + ΔF, D′ = D + ΔD):
     *
-    *   F′D₁′…Dₙ′ − FD₁…Dₙ =
-    *     ΔF ⋈ D₁′ ⋈ … ⋈ Dₙ′                 (all NEW dims)
-    *   + F ⋈ ΔD₁ ⋈ D₂′ ⋈ … ⋈ Dₙ′            (OLD before, NEW after)
-    *   + F ⋈ D₁ ⋈ ΔD₂ ⋈ D₃′ ⋈ … ⋈ Dₙ′
+    * INNER (every join type; any chain length). Joins are multilinear,
+    * so the update telescopes, one signed feed per term:
+    *
+    *   ΔF ⋈ D₁′ ⋈ … ⋈ Dₙ′                 (all NEW dims)
+    *   + F ⋈ ΔD₁ ⋈ D₂′ ⋈ … ⋈ Dₙ′          (OLD before, NEW after)
     *   + …
     *   + F ⋈ D₁ ⋈ … ⋈ Dₙ₋₁ ⋈ ΔDₙ
     *
-    * — each term ONE signed feed joined against snapshots (signs never
-    * multiply), each O(|Δ| · fanout) probe work; the dims are the
-    * broadcast-sized sides of a star, so every term is a broadcast
-    * chain off a small feed or a partition-pruned probe of the fact.
-    * Group columns may come from any input (a dimension attribute the
-    * feed renames moves weight between groups through its own term);
-    * sum columns must come from the FACT (a dimension-carried measure
-    * would multiply through the join — refuse that shape by design).
-    * Exactness: the [[refreshSumCount]] integer/DECIMAL domain.
+    * — with one dimension, the ΔF ⋈ D′ + F ⋈ ΔD bracketing (the ΔF ⋈ ΔD
+    * cross term is absorbed by pairing ΔF with the NEW and ΔD with the
+    * OLD other side, so signs never multiply).
+    *
+    * LEFT-ANTI (`left`, `full`): F rows whose key has no D match, with
+    * D-sourced group columns null-padded. A = F·z (z = 1 iff the key has
+    * ZERO matches) telescopes as ΔA = ΔF·z′ + F·Δz: ΔF anti-joined
+    * against D′'s keys, plus OLD F rows of keys whose emptiness FLIPPED —
+    * a key D′ dropped re-enters (+), a key D′ introduced leaves (−). A
+    * NULL fact key never matches (SQL semantics) and stays anti.
+    *
+    * RIGHT-ANTI (`right`, `full`): the mirror, ΔD·z_F′ + D·Δz_F over the
+    * FACT side's key-emptiness. Its rows carry real D-sourced group
+    * values but NULL measures (measures ride F), so they add to the count
+    * and nothing to the sums; the state then carries a per-measure
+    * NON-NULL counter `<c>_nn` (itself abelian) beside each sum: SQL's
+    * sum over an all-null group is NULL where an additive state can only
+    * say 0, and `when(col("p_nn") > 0, col("p"))` restores it at
+    * presentation. Seed `prevAgg` with `count(col(c)).as(s"${c}_nn")`.
+    *
+    * Every term folds through the [[sumCountDeltas]] sign algebra into
+    * one null-safe [[applySumCount]] — the null-padded group is a
+    * first-class group. Group columns may come from any input; sum
+    * columns must come from the FACT (a dimension-carried measure
+    * multiplies by the join fan-out — refused loudly). Each term reads
+    * only the inputs it needs: `newFact` feeds only the right-anti terms,
+    * a dimension's `oldDim` only later-dimension and anti terms.
+    *
+    * Scale posture: O(|Δ| · fanout) probe work per term + one O(affected
+    * groups) state merge — never a scan of the view; the anti terms'
+    * key sets are O(distinct keys) of the opposite side (at fact-sized
+    * sides maintain that key support with [[refreshSupport]] instead).
+    * Exactness needs the [[refreshSumCount]] integer/DECIMAL domain.
+    *
+    * @param factCdf   change feed of the fact: change_type + join key +
+    *                  the fact-side group/sum columns
+    * @param oldFact   PRE-change fact snapshot (F)
+    * @param newFact   POST-change fact snapshot (F′)
+    * @param joinType  `inner` (any number of dimensions), or `left`,
+    *                  `right`, `full` (exactly one)
+    * @return the refreshed state, [[applySumCount]] semantics: emptied
+    *         groups leave, brand-new groups appear.
     */
-  def refreshStarSumCount(
+  def refreshJoinSumCount(
       prevAgg: DataFrame,
       factCdf: DataFrame,
       oldFact: DataFrame,
+      newFact: DataFrame,
       dims: Seq[DimFeed],
+      joinType: String,
       groupCols: Seq[String],
       cntCol: String,
       sumCols: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "refreshStarSumCount needs at least one dimension" +
+    val (leftAnti, rightAnti) = joinType match {
+      case "inner" => (false, false)
+      case "left" => (true, false)
+      case "right" => (false, true)
+      case "full" => (true, true)
+      case other => throw new IllegalArgumentException(
+        s"join type must be inner, left, right or full, got '$other'")
+    }
+    require(dims.nonEmpty, "refreshJoinSumCount needs at least one dimension" +
       " — for zero dims use refreshSumCount directly")
-    require(!oldFact.columns.contains("change_type") &&
-        dims.forall(d => !d.oldDim.columns.contains("change_type") &&
-          !d.newDim.columns.contains("change_type")),
+    require(joinType == "inner" || dims.size == 1,
+      s"a $joinType join view takes exactly one dimension, got ${dims.size}")
+    require((oldFact +: newFact +: dims.flatMap(d => Seq(d.oldDim, d.newDim)))
+        .forall(!_.columns.contains("change_type")),
       "snapshot inputs must not carry a change_type column — it would " +
         "shadow the feed's sign and silently corrupt the delta algebra")
     dims.foreach { d =>
       Seq(d.cdf, d.oldDim, d.newDim)
         .foreach(requireNoKeyShadow(_, d.factKey, d.dimKey))
     }
-    // the doc's "sum columns come from the FACT" is a THEOREM input, not
-    // advice: a dimension-carried measure multiplies by the join fan-out
-    // and the telescoping would maintain a silently wrong number
     val dimMeasures = sumCols.filterNot(oldFact.columns.contains)
     require(dimMeasures.isEmpty,
       s"sum column(s) ${dimMeasures.mkString(", ")} are not fact columns — " +
         "a dimension-carried measure multiplies by the join fan-out; " +
         "aggregate it in its own view instead")
-    def dimJoin(base: DataFrame, d: DataFrame, factKey: String, dimKey: String) =
-      base.join(d.withColumnRenamed(dimKey, factKey), Seq(factKey))
+    def dimSide(side: DataFrame, d: DimFeed) = side.withColumnRenamed(d.dimKey, d.factKey)
     val proj = (groupCols ++ sumCols :+ "change_type").map(col)
-    // term 0: the fact feed against every NEW dimension
-    val tFact = dims.foldLeft(factCdf) { case (b, dj) =>
-      dimJoin(b, dj.newDim, dj.factKey, dj.dimKey)
+    // inner: the fact feed against every NEW dimension, then per dim i
+    // the old fact with dims joined IN CHAIN ORDER as old (< i), the
+    // feed (= i), new (> i) — chain order keeps snowflake keys in scope
+    val tFact = dims.foldLeft(factCdf) { (b, d) =>
+      b.join(dimSide(d.newDim, d), Seq(d.factKey))
     }.select(proj: _*)
-    // term i+1: old fact; dims joined IN CHAIN ORDER as old (< i),
-    // the feed (= i), new (> i) — chain order keeps snowflake keys in
-    // scope when a dim keys off a column the previous dim produced
     val tDims = dims.indices.map { i =>
-      dims.zipWithIndex.foldLeft(oldFact) { case (b, (dj, j)) =>
-        val side =
-          if (j < i) dj.oldDim else if (j == i) dj.cdf else dj.newDim
-        dimJoin(b, side, dj.factKey, dj.dimKey)
+      dims.zipWithIndex.foldLeft(oldFact) { case (b, (d, j)) =>
+        val side = if (j < i) d.oldDim else if (j == i) d.cdf else d.newDim
+        b.join(dimSide(side, d), Seq(d.factKey))
       }.select(proj: _*)
     }
-    refreshSumCount(prevAgg, (tFact +: tDims).reduce(_ unionByName _),
-      groupCols, cntCol, sumCols)
+    // anti terms (one dimension): rows of one side whose key has no match
+    // on the other, the columns they lack null-padded
+    val dim = dims.head
+    val key = dim.factKey
+    val types = (oldFact.schema ++ dim.newDim.schema).map(f => f.name -> f.dataType).toMap
+    def padded(rows: DataFrame) = rows.select((groupCols ++ sumCols).map(c =>
+      if (rows.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)) :+
+      col("change_type"): _*)
+    def keys(side: DataFrame) = side.select(col(key)).distinct()
+    // ΔA = Δside·z′ + side·Δz over the other side's key-emptiness
+    def antiTerms(feed: DataFrame, old: DataFrame, otherOld: DataFrame,
+        otherNew: DataFrame): Seq[DataFrame] = {
+      val (was, now) = (keys(otherOld), keys(otherNew))
+      val died = was.join(now, Seq(key), "left_anti").withColumn("change_type", lit("insert"))
+      val born = now.join(was, Seq(key), "left_anti").withColumn("change_type", lit("delete"))
+      Seq(feed.join(now, Seq(key), "left_anti"),
+        old.join(died.unionByName(born), Seq(key))).map(padded)
+    }
+    val terms = (tFact +: tDims) ++
+      (if (leftAnti) antiTerms(factCdf, oldFact, dimSide(dim.oldDim, dim),
+        dimSide(dim.newDim, dim)) else Nil) ++
+      (if (rightAnti) antiTerms(dimSide(dim.cdf, dim), dimSide(dim.oldDim, dim),
+        oldFact, newFact) else Nil)
+    // right-anti rows carry NULL measures: the per-measure non-null
+    // counters ride the same sign algebra
+    val nn = if (rightAnti) sumCols.map(c => s"${c}_nn") else Nil
+    val withNn = sumCols.zip(nn).foldLeft(terms.reduce(_ unionByName _)) {
+      case (d, (c, n)) => d.withColumn(n, when(col(c).isNotNull, 1L).otherwise(0L))
+    }
+    refreshSumCount(prevAgg, withNn, groupCols, cntCol, sumCols ++ nn)
   }
 
   /** Signed per-(group, value) SUPPORT deltas from a CDF — the classic
@@ -674,12 +402,13 @@ object IncrementalAgg {
       groupCols: Seq[String],
       valCol: String,
       supCol: String = "support"): DataFrame = {
-    val merged = prevSupport
-      .join(supportDeltas(cdf, groupCols, valCol), groupCols :+ valCol,
-        "full_outer")
-      .select((groupCols :+ valCol).map(col) :+
-        (coalesce(col(supCol), lit(0L)) + coalesce(col("d_sup"), lit(0L)))
-          .as(supCol): _*)
+    // the applySumCount merge: the state rides as one more delta row, and
+    // GROUP BY keeps a NULL group or value one key
+    val keys = (groupCols :+ valCol).map(col)
+    val merged = prevSupport.select(keys :+ col(supCol).as("d_sup"): _*)
+      .unionByName(supportDeltas(cdf, groupCols, valCol))
+      .groupBy(keys: _*)
+      .agg(sum(col("d_sup")).as(supCol))
     merged
       .withColumn(supCol,
         when(col(supCol) < 0, raise_error(concat(

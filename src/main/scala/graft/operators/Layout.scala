@@ -116,20 +116,4 @@ object Layout {
          |FROM ($acc)""".stripMargin
     }
   }
-
-  /** Write `df` clustered by the z-order of (xCol, yCol) into `numFiles`
-    * parquet files: range-partition on the z-value (sampled bounds — no
-    * global sort), sort within each partition, drop the helper column.
-    */
-  def zorderWrite(
-      df: DataFrame,
-      xCol: String,
-      yCol: String,
-      path: String,
-      numFiles: Int): Unit =
-    df.withColumn("__z", zorder16(col(xCol), col(yCol)))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
 }

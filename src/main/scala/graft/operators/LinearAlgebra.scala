@@ -200,8 +200,10 @@ object LinearAlgebra {
       require(maxM <= Long.MaxValue / (dim * (1L << 22)),
         s"matvec could overflow: dim=$dim, max|M|=$maxM — lower quantScale")
       (mm.select(col("i")).distinct().withColumn("v", lit(1L << 20)), (v, _) => {
+        // broadcast the dim-row vector, never the dim² Gramian: the
+        // checkpointed mm keeps its aggregate's small size estimate
         val w = loop.roundLocal(
-          mm.join(v.select(col("i").as("j"), col("v")), Seq("j"))
+          mm.join(broadcast(v.select(col("i").as("j"), col("v"))), Seq("j"))
             .groupBy("i").agg(sum(col("m") * col("v")).as("w")))
         val maxAbs = w.agg(max(abs(col("w")))).head().getLong(0)
         if (maxAbs == 0L) throw new IllegalStateException(

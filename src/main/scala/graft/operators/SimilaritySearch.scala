@@ -501,13 +501,16 @@ object SimilaritySearch {
     // the grown index (batch rows would then self-match)
     // both checkpoints and the append run sized ([[Checkpoints.sizedLoop]]);
     // decisions are mins over the saved lists — partitioning-independent
+    // the saved index loads once: the decisions and the append share its
+    // centroids
     val (admitted, rejected) = Checkpoints.sizedLoop(batch) { loop =>
       val b = Checkpoints.rebind(loop, batch)
-      val rejected = semDedupDecisions(loop, path, b, idCol, vecCol,
+      val (cents, lists) = ivfLoadIndex(loop, path)
+      val rejected = decisionsAgainst(cents, lists, b, idCol, vecCol,
         threshold).localCheckpoint(true)
       val admitted = b.join(rejected.select(col(idCol)), Seq(idCol), "left_anti")
         .localCheckpoint(true)
-      ivfAppendIndex(loop, path, admitted, idCol, vecCol)
+      appendAssigned(path, admitted, idCol, vecCol, cents)
       (admitted, rejected)
     }
     new Admission(admitted, rejected)
@@ -532,6 +535,17 @@ object SimilaritySearch {
       vecCol: String,
       threshold: Double): DataFrame = {
     val (cents, lists) = ivfLoadIndex(spark, path)
+    decisionsAgainst(cents, lists, batch, idCol, vecCol, threshold)
+  }
+
+  /** [[semDedupDecisions]] against an index already loaded. */
+  private def decisionsAgainst(
+      cents: Seq[Seq[Float]],
+      lists: DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double): DataFrame = {
     val probed = batch.select(col(idCol), col(vecCol),
       assignCell(col(vecCol), cents).as("__cell"))
     // bounded O(nCells) collect — static IN-list so the cell-partitioned
@@ -1166,12 +1180,19 @@ object SimilaritySearch {
       path: String,
       batch: DataFrame,
       idCol: String,
-      vecCol: String): Unit = {
-    val cents = loadCentroids(spark, path)
+      vecCol: String): Unit =
+    appendAssigned(path, batch, idCol, vecCol, loadCentroids(spark, path))
+
+  /** [[ivfAppendIndex]] with the saved centroids already loaded. */
+  private def appendAssigned(
+      path: String,
+      batch: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cents: Seq[Seq[Float]]): Unit =
     batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"),
         assignCell(col(vecCol), cents).as("__cell"))
       .write.mode("append").partitionBy("__cell").parquet(s"$path/lists")
-  }
 
   /** [[ivfAppendIndex]] for a saved IVF-PQ index: encode the batch with
     * the SAVED codebooks (PQ codebooks model the marginal subvector

@@ -2308,6 +2308,7 @@ object ExtendedQueries {
         |FROM newA JOIN newB ON newA.o_custkey = newB.c_custkey
         |GROUP BY seg ORDER BY seg""".stripMargin) { (s, d) =>
       import graft.operators.{IncrementalAgg, Snapshot}
+      import graft.operators.IncrementalAgg.DimFeed
       val orders = t(s, d, "orders")
       val customer = t(s, d, "customer")
       val oldA = orders.filter(col("o_orderkey") % 97 =!= 0)
@@ -2330,8 +2331,8 @@ object ExtendedQueries {
         .groupBy("seg")
         .agg(count(lit(1)).as("n_orders"), sum(col("p")).as("p"))
       IncrementalAgg.refreshJoinSumCount(prevAgg,
-          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), cdfB, newB,
-          leftKey = "o_custkey", rightKey = "c_custkey",
+          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), newA.drop("o_orderkey"),
+          Seq(DimFeed(cdfB, oldB, newB, "o_custkey", "c_custkey")), "inner",
           groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p"))
         .select(col("seg"), col("n_orders"),
           col("p").cast("decimal(18,2)").cast("double").as("total"))
@@ -2341,7 +2342,7 @@ object ExtendedQueries {
     Q("q254_left_join_incremental_view",
       // LEFT-OUTER-join IVM — the null-extension case inner-join
       // algebras can't express: V = γ_seg(orders ⟕ customer) maintained
-      // from both feeds (IncrementalAgg.refreshLeftJoinSumCount: the
+      // from both feeds (IncrementalAgg.refreshJoinSumCount "left": the
       // inner part via the q250 bracketing, the anti part A = L·z(m)
       // telescoping as ΔL·z′ + L·Δz). The q250 churn makes the NULL
       // group do everything the algebra claims: it is EMPTY at the old
@@ -2364,6 +2365,7 @@ object ExtendedQueries {
         |FROM newA LEFT JOIN newB ON newA.o_custkey = newB.c_custkey
         |GROUP BY seg ORDER BY seg NULLS FIRST""".stripMargin) { (s, d) =>
       import graft.operators.{IncrementalAgg, Snapshot}
+      import graft.operators.IncrementalAgg.DimFeed
       val orders = t(s, d, "orders")
       val customer = t(s, d, "customer")
       val oldA = orders.filter(col("o_orderkey") % 97 =!= 0)
@@ -2386,9 +2388,9 @@ object ExtendedQueries {
           Seq("o_custkey"), "left")
         .groupBy("seg")
         .agg(count(lit(1)).as("n_orders"), sum(col("p")).as("p"))
-      IncrementalAgg.refreshLeftJoinSumCount(prevAgg,
-          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), cdfB, oldB, newB,
-          leftKey = "o_custkey", rightKey = "c_custkey",
+      IncrementalAgg.refreshJoinSumCount(prevAgg,
+          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), newA.drop("o_orderkey"),
+          Seq(DimFeed(cdfB, oldB, newB, "o_custkey", "c_custkey")), "left",
           groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p"))
         .select(col("seg"), col("n_orders"),
           col("p").cast("decimal(18,2)").cast("double").as("total"))
@@ -2422,6 +2424,7 @@ object ExtendedQueries {
         |FROM newA FULL JOIN newB ON newA.o_custkey = newB.c_custkey
         |GROUP BY seg ORDER BY seg NULLS FIRST""".stripMargin) { (s, d) =>
       import graft.operators.{IncrementalAgg, Snapshot}
+      import graft.operators.IncrementalAgg.DimFeed
       val orders = t(s, d, "orders").filter(col("o_custkey") % 5 =!= 0)
       val customer = t(s, d, "customer")
       val oldA = orders.filter(col("o_orderkey") % 97 =!= 0)
@@ -2445,10 +2448,9 @@ object ExtendedQueries {
         .groupBy("seg")
         .agg(count(lit(1)).as("n_rows"), sum(col("p")).as("p"),
           count(col("p")).as("p_nn"))
-      IncrementalAgg.refreshFullJoinSumCount(prevAgg,
-          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"),
-          newA.drop("o_orderkey"), cdfB, oldB, newB,
-          leftKey = "o_custkey", rightKey = "c_custkey",
+      IncrementalAgg.refreshJoinSumCount(prevAgg,
+          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), newA.drop("o_orderkey"),
+          Seq(DimFeed(cdfB, oldB, newB, "o_custkey", "c_custkey")), "full",
           groupCols = Seq("seg"), cntCol = "n_rows", sumCols = Seq("p"))
         .select(col("seg"), col("n_rows"),
           when(col("p_nn") > 0, col("p"))
@@ -2483,6 +2485,7 @@ object ExtendedQueries {
         |FROM newA JOIN newB ON newA.o_custkey = newB.c_custkey
         |GROUP BY seg ORDER BY seg""".stripMargin) { (s, d) =>
       import graft.operators.IncrementalAgg
+      import graft.operators.IncrementalAgg.DimFeed
       import graft.streaming.TxTable
       val root = Q.scratchDir("graft-q251")
       val ordT = root + "/orders_t"; val custT = root + "/cust_t"
@@ -2567,8 +2570,9 @@ object ExtendedQueries {
         // row per segment, so it travels as a local relation: unlike a
         // localCheckpoint it leaves no persisted RDD in the session
         val next = IncrementalAgg.refreshJoinSumCount(state,
-          cdfA.drop("o_orderkey"), mergedOrders(v - 1), cdfB, mergedCust(v),
-          leftKey = "o_custkey", rightKey = "c_custkey",
+          cdfA.drop("o_orderkey"), mergedOrders(v - 1), mergedOrders(v),
+          Seq(DimFeed(cdfB, mergedCust(v - 1), mergedCust(v),
+            "o_custkey", "c_custkey")), "inner",
           groupCols = Seq("seg"), cntCol = "n_orders", sumCols = Seq("p"))
         state = s.createDataFrame(java.util.Arrays.asList(
           graft.operators.Checkpoints.rebind(loop, next).collect(): _*), next.schema)
@@ -2581,7 +2585,7 @@ object ExtendedQueries {
     },
 
     Q("q253_star_incremental_view",
-      // N-way star IVM (refreshStarSumCount): V = γ_nation(orders ⋈
+      // N-way star IVM (refreshJoinSumCount): V = γ_nation(orders ⋈
       // customer ⋈ nation) maintained from the change feeds of ALL
       // THREE inputs via the multilinear telescoping ΔF⋈D1′⋈D2′ +
       // F⋈ΔD1⋈D2′ + F⋈D1⋈ΔD2 — a SNOWFLAKE chain (nation keys off the
@@ -2647,10 +2651,10 @@ object ExtendedQueries {
           Seq("c_nationkey"))
         .groupBy("nname")
         .agg(count(lit(1)).as("n_orders"), sum(col("p")).as("p"))
-      IncrementalAgg.refreshStarSumCount(prev, cdfF,
-          oldF.drop("o_orderkey"),
+      IncrementalAgg.refreshJoinSumCount(prev, cdfF,
+          oldF.drop("o_orderkey"), newF.drop("o_orderkey"),
           Seq(DimFeed(cdfD1, oldD1, newD1, "o_custkey", "c_custkey"),
-            DimFeed(cdfD2, oldD2, newD2, "c_nationkey", "n_nationkey")),
+            DimFeed(cdfD2, oldD2, newD2, "c_nationkey", "n_nationkey")), "inner",
           groupCols = Seq("nname"), cntCol = "n_orders", sumCols = Seq("p"))
         .select(col("nname"), col("n_orders"),
           col("p").cast("decimal(18,2)").cast("double").as("total"))
@@ -3109,6 +3113,7 @@ object ExtendedQueries {
         |FROM newA RIGHT JOIN newB ON newA.o_custkey = newB.c_custkey
         |GROUP BY seg ORDER BY seg""".stripMargin) { (s, d) =>
       import graft.operators.{IncrementalAgg, Snapshot}
+      import graft.operators.IncrementalAgg.DimFeed
       val orders = t(s, d, "orders").filter(col("o_custkey") % 5 =!= 0)
       val customer = t(s, d, "customer")
       val oldA = orders.filter(col("o_orderkey") % 97 =!= 0)
@@ -3132,10 +3137,9 @@ object ExtendedQueries {
         .groupBy("seg")
         .agg(count(lit(1)).as("n_rows"), sum(col("p")).as("p"),
           count(col("p")).as("p_nn"))
-      IncrementalAgg.refreshRightJoinSumCount(prevAgg,
-          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"),
-          newA.drop("o_orderkey"), cdfB, oldB, newB,
-          leftKey = "o_custkey", rightKey = "c_custkey",
+      IncrementalAgg.refreshJoinSumCount(prevAgg,
+          cdfA.drop("o_orderkey"), oldA.drop("o_orderkey"), newA.drop("o_orderkey"),
+          Seq(DimFeed(cdfB, oldB, newB, "o_custkey", "c_custkey")), "right",
           groupCols = Seq("seg"), cntCol = "n_rows", sumCols = Seq("p"))
         .select(col("seg"), col("n_rows"),
           when(col("p_nn") > 0, col("p"))

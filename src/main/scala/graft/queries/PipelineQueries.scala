@@ -140,8 +140,8 @@ object PipelineQueries {
 
     Q("q106_zorder_values",
       // Morton (z-order) interleave of (l_partkey, l_suppkey) — the layout
-      // key behind multi-dimension file skipping (Layout.zorderWrite +
-      // TxTable stats). Pure bitwise codegen'd arithmetic, identical
+      // key behind multi-dimension file skipping (TxTable.ingestZOrdered
+      // + per-file stats). Pure bitwise codegen'd arithmetic, identical
       // expression on both engines; unique (orderkey, linenumber)
       // tiebreak makes the LIMIT cut deterministic.
       s"""SELECT l_orderkey, l_linenumber,

@@ -28,23 +28,14 @@ import graft.operators.SimilaritySearch
   * ranking/merging belongs to the (idempotent) sink.
   *
   * The static lists are PERSISTED here (a stream-static join re-evaluates
-  * the static subplan every trigger); the returned [[StreamingIndexProbe
-  * .Probe]]-style handle owns that storage — stop the query, `close()`
-  * the probe. An index refreshed by [[SimilaritySearch.ivfAppendIndex]]
-  * needs a NEW probe over a fresh read to see the appended files (the
-  * cached relation pins the file listing of its load time — same contract
-  * as any cached static table under a streaming join).
+  * the static subplan every trigger); the returned [[Probe]] handle owns
+  * that storage — stop the query, `close()` the probe. An index
+  * refreshed by [[SimilaritySearch.ivfAppendIndex]] needs a NEW probe
+  * over a fresh read to see the appended files (the cached relation pins
+  * the file listing of its load time — same contract as any cached
+  * static table under a streaming join).
   */
 object StreamingAnnProbe {
-
-  /** Output stream + owned cached relations; `close()` after the query
-    * stops (same lifecycle contract as [[StreamingIndexProbe.Probe]]).
-    */
-  final class Probe private[streaming] (
-      val output: DataFrame,
-      cached: Seq[DataFrame]) extends AutoCloseable {
-    override def close(): Unit = cached.foreach(_.unpersist(blocking = false))
-  }
 
   /** Probe a static IVF index (`centroids` + `lists` from
     * [[SimilaritySearch.ivfBuildIndex]]/`ivfLoadIndex`) with a STREAM of

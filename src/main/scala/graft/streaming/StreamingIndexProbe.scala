@@ -28,21 +28,6 @@ import graft.operators.Dedup
   */
 object StreamingIndexProbe {
 
-  /** The probe's output stream plus the lifecycle of the two static
-    * relations it caches. The cache must live as long as the streaming
-    * query (a stream-static join re-evaluates the static subplan every
-    * micro-batch); when the query stops — or the index is rebuilt and a
-    * new probe replaces this one — `close()` releases the storage.
-    * Without the handle, repeated index rebuilds accumulated cached
-    * relations with only `spark.catalog.clearCache()` as remedy
-    * (ADVICE r8 #4).
-    */
-  final class Probe private[streaming] (
-      val output: DataFrame,
-      cached: Seq[DataFrame]) extends AutoCloseable {
-    override def close(): Unit = cached.foreach(_.unpersist(blocking = false))
-  }
-
   /** Probe `docs` (streaming: idCol, textCol) against `index`. The two
     * static tables (band keys; per-doc sorted shingle-hash sets) are
     * PERSISTED here: a stream-static join re-evaluates the static

@@ -23,13 +23,6 @@ import graft.operators.SpatialJoin
   */
 object StreamingSpatialProbe {
 
-  /** See [[StreamingIndexProbe.Probe]]. */
-  final class Probe private[streaming] (
-      val output: DataFrame,
-      cached: Seq[DataFrame]) extends AutoCloseable {
-    override def close(): Unit = cached.foreach(_.unpersist(blocking = false))
-  }
-
   /** Probe streaming `points` against static convex `polys` — same
     * arguments and semantics as [[SpatialJoin.pointInConvexPoly]].
     */

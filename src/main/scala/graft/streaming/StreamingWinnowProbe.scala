@@ -32,15 +32,6 @@ import graft.operators.Winnow
   */
 object StreamingWinnowProbe {
 
-  /** See [[StreamingIndexProbe.Probe]] — the handle owns the cached
-    * static fingerprint relation.
-    */
-  final class Probe private[streaming] (
-      val output: DataFrame,
-      cached: Seq[DataFrame]) extends AutoCloseable {
-    override def close(): Unit = cached.foreach(_.unpersist(blocking = false))
-  }
-
   /** Probe `docs` (streaming: idCol, textCol) against `corpusFp` (a
     * batch [[Winnow.fingerprints]] result). `k`/`w` MUST match the
     * parameters the corpus was fingerprinted with — a mismatch is a

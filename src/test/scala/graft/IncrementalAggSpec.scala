@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{IncrementalAgg, Snapshot}
+import graft.operators.IncrementalAgg.DimFeed
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregate maintenance: the CDF payload semantics and
@@ -101,6 +102,33 @@ class IncrementalAggSpec extends SparkSpec {
       compareCols = Seq("doubleValue")).isEmpty)
   }
 
+  private type DF = org.apache.spark.sql.DataFrame
+
+  /** γ_seg(l ⋈ r) on `cust` for join type `how`, in the state schema the
+    * refresher maintains: views with a preserved right side (right/full)
+    * carry the `v_nn` non-null counter beside the sum.
+    */
+  private def joinAgg(l: DF, r: DF, how: String): DF = {
+    val g = l.join(r, Seq("cust"), how).groupBy("seg")
+    if (how == "right" || how == "full")
+      g.agg(count(lit(1)).as("n"), sum("v").as("v"), count(col("v")).as("v_nn"))
+    else g.agg(count(lit(1)).as("n"), sum("v").as("v"))
+  }
+
+  /** seg -> (n, SQL sum of v): the sum is None when no v is non-null. */
+  private def present(d: DF): Map[Option[String], (Long, Option[Long])] = {
+    val v = if (d.columns.contains("v_nn")) when(col("v_nn") > 0, col("v")) else col("v")
+    d.select(col("seg"), col("n"), v).collect().map(r => Option(r.getString(0)) ->
+      ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
+  }
+
+  /** The one-dimension refresh of [[joinAgg]]'s view from (L, R) to (L′, R′). */
+  private def refreshJoin(ol: DF, nl: DF, or_ : DF, nr: DF, how: String): DF =
+    IncrementalAgg.refreshJoinSumCount(joinAgg(ol, or_, how),
+      Snapshot.changeDataFeed(ol, nl, "k", Seq("cust", "v")), ol, nl,
+      Seq(DimFeed(Snapshot.changeDataFeed(or_, nr, "cust", Seq("seg")),
+        or_, nr, "cust", "cust")), how, Seq("seg"), "n", Seq("v"))
+
   test("refreshJoinSumCount: maintained join view == recompute across both feeds") {
     // L = orders(k, cust, v); R = customers(cust, seg). Changes exercise
     // every cross term of ΔL⋈R′ + L⋈ΔR: a left insert whose customer
@@ -114,18 +142,10 @@ class IncrementalAggSpec extends SparkSpec {
       (6L, 20L, 600L)).toDF("k", "cust", "v")         // k6 inserted (cust 20)
     val oldR = Seq((10L, "a"), (20L, "a"), (30L, "b")).toDF("cust", "seg")
     val newR = Seq((10L, "a"), (20L, "m")).toDF("cust", "seg") // 20 moves a→m, 30 deleted
-    val cdfL = Snapshot.changeDataFeed(oldL, newL, "k", Seq("cust", "v"))
-    val cdfR = Snapshot.changeDataFeed(oldR, newR, "cust", Seq("seg"))
-    val prev = oldL.join(oldR, Seq("cust"))
-      .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-    val got = IncrementalAgg.refreshJoinSumCount(prev, cdfL, oldL, cdfR, newR,
-        "cust", "cust", Seq("seg"), "n", Seq("v"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val want = newL.join(newR, Seq("cust"))
-      .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = present(refreshJoin(oldL, newL, oldR, newR, "inner"))
+    val want = present(joinAgg(newL, newR, "inner"))
     assert(got === want)
-    assert(want === Map("a" -> ((1L, 101L)), "m" -> ((2L, 900L))),
+    assert(want === Map(Some("a") -> ((1L, Some(101L))), Some("m") -> ((2L, Some(900L)))),
       "fixture must exercise cascade-delete (b gone) and group birth (m)")
   }
 
@@ -136,63 +156,72 @@ class IncrementalAggSpec extends SparkSpec {
     val r1 = Seq((10L, "x")).toDF("cust", "seg")
     val r2 = Seq((10L, "x"), (20L, "y")).toDF("cust", "seg")
     val r3 = Seq((20L, "x")).toDF("cust", "seg")
-    var state = l1.join(r1, Seq("cust"))
-      .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-    state = IncrementalAgg.refreshJoinSumCount(state,
-      Snapshot.changeDataFeed(l1, l2, "k", Seq("cust", "v")), l1,
-      Snapshot.changeDataFeed(r1, r2, "cust", Seq("seg")), r2,
-      "cust", "cust", Seq("seg"), "n", Seq("v"))
-    state = IncrementalAgg.refreshJoinSumCount(state,
-      Snapshot.changeDataFeed(l2, l3, "k", Seq("cust", "v")), l2,
-      Snapshot.changeDataFeed(r2, r3, "cust", Seq("seg")), r3,
-      "cust", "cust", Seq("seg"), "n", Seq("v"))
-    val got = state.collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got === Map("x" -> ((1L, 9L))))
+    def step(state: DF, ol: DF, nl: DF, or_ : DF, nr: DF) =
+      IncrementalAgg.refreshJoinSumCount(state,
+        Snapshot.changeDataFeed(ol, nl, "k", Seq("cust", "v")), ol, nl,
+        Seq(DimFeed(Snapshot.changeDataFeed(or_, nr, "cust", Seq("seg")),
+          or_, nr, "cust", "cust")), "inner", Seq("seg"), "n", Seq("v"))
+    val state = step(step(joinAgg(l1, r1, "inner"), l1, l2, r1, r2), l2, l3, r2, r3)
+    assert(present(state) === Map(Some("x") -> ((1L, Some(9L)))))
   }
 
   test("refreshJoinSumCount: maintained == recompute under seeded random churn") {
     // the algebra's edge cases are combinatorial (which side changed,
     // insert vs delete vs update, key present on the other side or not,
-    // group births/deaths) — a seeded random sweep covers combinations
-    // no hand fixture enumerates. 10 trials, each a fresh (L, R, ΔL, ΔR).
-    val rnd = new scala.util.Random(101)
-    for (trial <- 1 to 10) {
-      def randL(keys: Range) = keys.flatMap { k =>
-        if (rnd.nextDouble() < 0.7)
-          Some((k.toLong, (rnd.nextInt(6) + 1).toLong, rnd.nextInt(100).toLong))
-        else None
+    // group births/deaths, null-padded groups) — a seeded random sweep
+    // per join type covers combinations no hand fixture enumerates. 10
+    // trials per join type, each a fresh (L, R, ΔL, ΔR), checked against
+    // L′.join(R′, how) recomputed. Columns: join type, seed, fact keys,
+    // P(fact row), customers, P(customer row).
+    val cases = Seq(
+      ("inner", 101, 40, 0.7, 6, 0.8),
+      ("left", 307, 40, 0.7, 8, 0.6),
+      ("full", 409, 30, 0.6, 9, 0.55),
+      ("right", 811, 30, 0.6, 9, 0.55))
+    for ((how, seed, nKeys, pL, nCust, pR) <- cases) {
+      val rnd = new scala.util.Random(seed)
+      for (trial <- 1 to 10) {
+        def randL() = (1 to nKeys).flatMap { k =>
+          if (rnd.nextDouble() < pL)
+            Some((k.toLong, (rnd.nextInt(nCust) + 1).toLong, rnd.nextInt(100).toLong))
+          else None
+        }
+        def randR() = (1 to nCust).flatMap { c =>
+          if (rnd.nextDouble() < pR) Some((c.toLong, s"g${rnd.nextInt(4)}"))
+          else None
+        }
+        val (ol, nl) = (randL(), randL())
+        val (or_, nr) = (randR(), randR())
+        val olD = ol.toDF("k", "cust", "v"); val nlD = nl.toDF("k", "cust", "v")
+        val orD = or_.toDF("cust", "seg"); val nrD = nr.toDF("cust", "seg")
+        assert(present(refreshJoin(olD, nlD, orD, nrD, how)) ===
+          present(joinAgg(nlD, nrD, how)),
+          s"$how trial $trial: L $ol -> $nl; R ${or_} -> $nr")
       }
-      def randR(custs: Range) = custs.flatMap { c =>
-        if (rnd.nextDouble() < 0.8)
-          Some((c.toLong, s"g${rnd.nextInt(4)}"))
-        else None
-      }
-      val oldL = randL(1 to 40); val newL = randL(1 to 40)
-      val oldR = randR(1 to 6); val newR = randR(1 to 6)
-      val oldLDf = oldL.toDF("k", "cust", "v"); val newLDf = newL.toDF("k", "cust", "v")
-      val oldRDf = oldR.toDF("cust", "seg"); val newRDf = newR.toDF("cust", "seg")
-      val prev = oldLDf.join(oldRDf, Seq("cust"))
-        .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-      val got = IncrementalAgg.refreshJoinSumCount(prev,
-          Snapshot.changeDataFeed(oldLDf, newLDf, "k", Seq("cust", "v")), oldLDf,
-          Snapshot.changeDataFeed(oldRDf, newRDf, "cust", Seq("seg")), newRDf,
-          "cust", "cust", Seq("seg"), "n", Seq("v"))
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val want = newLDf.join(newRDf, Seq("cust"))
-        .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(got === want, s"trial $trial: oldL=$oldL newL=$newL oldR=$oldR newR=$newR")
     }
   }
 
-  test("refreshStarSumCount: snowflake chain == recompute under churn in all three inputs") {
-    import graft.operators.IncrementalAgg.DimFeed
-    // F(k, cust, v) ⋈ D1(cust, nk) ⋈ D2(nk, name): fact churn, a
-    // customer reassigned to another nation (weight moves via the D1
-    // term), a nation RENAMED (the group key changes under the view —
-    // weight moves via the D2 term over OLD fact and OLD customers),
-    // and a customer delete cascading its orders out.
+  /** F(k, cust, v) ⋈ D1(cust, nk) ⋈ D2(nk, name), grouped by name. */
+  private def starAgg(f: DF, d1: DF, d2: DF): DF =
+    f.join(d1, Seq("cust")).join(d2, Seq("nk"))
+      .groupBy("name").agg(count(lit(1)).as("n"), sum("v").as("v"))
+
+  private def refreshStar(of: DF, nf: DF, od1: DF, nd1: DF, od2: DF, nd2: DF) =
+    IncrementalAgg.refreshJoinSumCount(starAgg(of, od1, od2),
+        Snapshot.changeDataFeed(of, nf, "k", Seq("cust", "v")), of, nf,
+        Seq(
+          DimFeed(Snapshot.changeDataFeed(od1, nd1, "cust", Seq("nk")),
+            od1, nd1, "cust", "cust"),
+          DimFeed(Snapshot.changeDataFeed(od2, nd2, "nk", Seq("name")),
+            od2, nd2, "nk", "nk")),
+        "inner", Seq("name"), "n", Seq("v"))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+
+  test("refreshJoinSumCount inner: snowflake chain == recompute under churn in all three inputs") {
+    // fact churn, a customer reassigned to another nation (weight moves
+    // via the D1 term), a nation RENAMED (the group key changes under
+    // the view — weight moves via the D2 term over OLD fact and OLD
+    // customers), and a customer delete cascading its orders out.
     val oldF = Seq((1L, 10L, 5L), (2L, 10L, 7L), (3L, 20L, 11L),
       (4L, 30L, 13L)).toDF("k", "cust", "v")
     val newF = Seq((1L, 10L, 5L), (3L, 20L, 11L),      // k2 deleted
@@ -201,21 +230,8 @@ class IncrementalAggSpec extends SparkSpec {
     val newD1 = Seq((10L, 200L), (20L, 100L)).toDF("cust", "nk") // 10 moves, 30 deleted
     val oldD2 = Seq((100L, "alpha"), (200L, "beta")).toDF("nk", "name")
     val newD2 = Seq((100L, "alpha2"), (200L, "beta")).toDF("nk", "name") // rename
-    def agg(f: org.apache.spark.sql.DataFrame, d1: org.apache.spark.sql.DataFrame,
-        d2: org.apache.spark.sql.DataFrame) =
-      f.join(d1, Seq("cust")).join(d2, Seq("nk"))
-        .groupBy("name").agg(count(lit(1)).as("n"), sum("v").as("v"))
-    val prev = agg(oldF, oldD1, oldD2)
-    val got = IncrementalAgg.refreshStarSumCount(prev,
-        Snapshot.changeDataFeed(oldF, newF, "k", Seq("cust", "v")), oldF,
-        Seq(
-          DimFeed(Snapshot.changeDataFeed(oldD1, newD1, "cust", Seq("nk")),
-            oldD1, newD1, "cust", "cust"),
-          DimFeed(Snapshot.changeDataFeed(oldD2, newD2, "nk", Seq("name")),
-            oldD2, newD2, "nk", "nk")),
-        Seq("name"), "n", Seq("v"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val want = agg(newF, newD1, newD2)
+    val got = refreshStar(oldF, newF, oldD1, newD1, oldD2, newD2)
+    val want = starAgg(newF, newD1, newD2)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got === want)
     // the fixture exercises what it claims: alpha renamed away, beta
@@ -224,8 +240,7 @@ class IncrementalAggSpec extends SparkSpec {
       want.contains("beta"), want.toString)
   }
 
-  test("refreshStarSumCount: maintained == recompute under seeded random 3-level churn") {
-    import graft.operators.IncrementalAgg.DimFeed
+  test("refreshJoinSumCount inner: maintained == recompute under seeded random 3-level churn") {
     val rnd = new scala.util.Random(211)
     for (trial <- 1 to 8) {
       def randF() = (1 to 30).flatMap { k =>
@@ -247,85 +262,35 @@ class IncrementalAggSpec extends SparkSpec {
       val ofD = of.toDF("k", "cust", "v"); val nfD = nf.toDF("k", "cust", "v")
       val od1D = od1.toDF("cust", "nk"); val nd1D = nd1.toDF("cust", "nk")
       val od2D = od2.toDF("nk", "name"); val nd2D = nd2.toDF("nk", "name")
-      def agg(f: org.apache.spark.sql.DataFrame, d1: org.apache.spark.sql.DataFrame,
-          d2: org.apache.spark.sql.DataFrame) =
-        f.join(d1, Seq("cust")).join(d2, Seq("nk"))
-          .groupBy("name").agg(count(lit(1)).as("n"), sum("v").as("v"))
-      val got = IncrementalAgg.refreshStarSumCount(agg(ofD, od1D, od2D),
-          Snapshot.changeDataFeed(ofD, nfD, "k", Seq("cust", "v")), ofD,
-          Seq(
-            DimFeed(Snapshot.changeDataFeed(od1D, nd1D, "cust", Seq("nk")),
-              od1D, nd1D, "cust", "cust"),
-            DimFeed(Snapshot.changeDataFeed(od2D, nd2D, "nk", Seq("name")),
-              od2D, nd2D, "nk", "nk")),
-          Seq("name"), "n", Seq("v"))
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val want = agg(nfD, nd1D, nd2D)
+      val got = refreshStar(ofD, nfD, od1D, nd1D, od2D, nd2D)
+      val want = starAgg(nfD, nd1D, nd2D)
         .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       assert(got === want,
         s"trial $trial: F $of -> $nf; D1 $od1 -> $nd1; D2 $od2 -> $nd2")
     }
   }
 
-  test("refreshLeftJoinSumCount: null group births, deaths, and migrations == recompute") {
-    // oldR matches every left key; churn then deletes cust 30 entirely
-    // (its rows must MIGRATE to the null group), births cust 40 (whose
-    // rows must LEAVE it), and deletes a left row that lived in the
-    // null group at old state — every movement the telescoping claims.
+  test("refreshJoinSumCount left: null group births, deaths, and migrations == recompute") {
+    // oldR matches every left key but 40; churn then deletes cust 30
+    // entirely (its rows must MIGRATE to the null group), births cust 40
+    // (whose rows must LEAVE it), and deletes a left row that lived in
+    // the null group at old state — every movement the telescoping claims.
     val oldL = Seq((1L, 10L, 5L), (2L, 30L, 7L), (3L, 30L, 11L),
       (4L, 40L, 13L)).toDF("k", "cust", "v")
     val newL = Seq((1L, 10L, 5L), (2L, 30L, 7L), (3L, 30L, 11L),
       (5L, 40L, 17L)).toDF("k", "cust", "v") // k4 (anti at old) deleted, k5 new
     val oldR = Seq((10L, "a"), (30L, "b")).toDF("cust", "seg") // 40 unmatched
     val newR = Seq((10L, "a"), (40L, "c")).toDF("cust", "seg") // 30 dies, 40 born
-    def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-      l.join(r, Seq("cust"), "left")
-        .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-    val got = IncrementalAgg.refreshLeftJoinSumCount(agg(oldL, oldR),
-        Snapshot.changeDataFeed(oldL, newL, "k", Seq("cust", "v")), oldL,
-        Snapshot.changeDataFeed(oldR, newR, "cust", Seq("seg")), oldR, newR,
-        "cust", "cust", Seq("seg"), "n", Seq("v"))
-      .collect().map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val want = agg(newL, newR)
-      .collect().map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = present(refreshJoin(oldL, newL, oldR, newR, "left"))
+    val want = present(joinAgg(newL, newR, "left"))
     assert(got === want)
-    assert(want(None) === ((2L, 18L)), // cust 30's two rows, null group
+    assert(want(None) === ((2L, Some(18L))), // cust 30's two rows, null group
       s"cust-30 rows must migrate to the null group: $want")
-    assert(want(Some("c")) === ((1L, 17L)), "born key's row must leave the null group")
+    assert(want(Some("c")) === ((1L, Some(17L))), "born key's row must leave the null group")
   }
 
-  test("refreshLeftJoinSumCount: maintained == recompute under seeded random churn") {
-    val rnd = new scala.util.Random(307)
-    for (trial <- 1 to 10) {
-      def randL() = (1 to 40).flatMap { k =>
-        if (rnd.nextDouble() < 0.7)
-          Some((k.toLong, (rnd.nextInt(8) + 1).toLong, rnd.nextInt(100).toLong))
-        else None
-      }
-      def randR() = (1 to 8).flatMap { c =>
-        if (rnd.nextDouble() < 0.6) Some((c.toLong, s"g${rnd.nextInt(4)}"))
-        else None
-      }
-      val (ol, nl) = (randL(), randL())
-      val (or_, nr) = (randR(), randR())
-      val olD = ol.toDF("k", "cust", "v"); val nlD = nl.toDF("k", "cust", "v")
-      val orD = or_.toDF("cust", "seg"); val nrD = nr.toDF("cust", "seg")
-      def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-        l.join(r, Seq("cust"), "left")
-          .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
-      val got = IncrementalAgg.refreshLeftJoinSumCount(agg(olD, orD),
-          Snapshot.changeDataFeed(olD, nlD, "k", Seq("cust", "v")), olD,
-          Snapshot.changeDataFeed(orD, nrD, "cust", Seq("seg")), orD, nrD,
-          "cust", "cust", Seq("seg"), "n", Seq("v"))
-        .collect().map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val want = agg(nlD, nrD)
-        .collect().map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(got === want, s"trial $trial: L $ol -> $nl; R ${or_} -> $nr")
-    }
-  }
-
-  test("refreshFullJoinSumCount: both anti directions, null-sum groups == recompute") {
-    // right-anti movements the LEFT algebra never sees: an unmatched R
+  test("refreshJoinSumCount full: both anti directions, null-sum groups == recompute") {
+    // right-anti movements the left-anti terms never see: an unmatched R
     // row renamed (group c→c2 with NULL measures), an unmatched R row
     // deleted, an L row arriving for a key R just dropped (lands
     // left-anti), and SQL's sum-of-all-null = NULL restored from the
@@ -334,19 +299,8 @@ class IncrementalAggSpec extends SparkSpec {
     val newL = Seq((1L, 10L, 5L), (2L, 20L, 7L)).toDF("k", "cust", "v")
     val oldR = Seq((10L, "a"), (20L, "b"), (30L, "c")).toDF("cust", "seg")
     val newR = Seq((10L, "a"), (30L, "c2"), (40L, "d")).toDF("cust", "seg")
-    def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-      l.join(r, Seq("cust"), "full")
-        .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"),
-          count(col("v")).as("v_nn"))
-    def present(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("seg"), col("n"), when(col("v_nn") > 0, col("v")).as("v"))
-      .collect().map(r => Option(r.getString(0)) ->
-        ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-    val got = present(IncrementalAgg.refreshFullJoinSumCount(agg(oldL, oldR),
-      Snapshot.changeDataFeed(oldL, newL, "k", Seq("cust", "v")), oldL, newL,
-      Snapshot.changeDataFeed(oldR, newR, "cust", Seq("seg")), oldR, newR,
-      "cust", "cust", Seq("seg"), "n", Seq("v")))
-    val want = present(agg(newL, newR))
+    val got = present(refreshJoin(oldL, newL, oldR, newR, "full"))
+    val want = present(joinAgg(newL, newR, "full"))
     assert(got === want)
     assert(want === Map(
       Some("a") -> ((1L, Some(5L))),
@@ -356,61 +310,17 @@ class IncrementalAggSpec extends SparkSpec {
       want.toString)
   }
 
-  test("refreshFullJoinSumCount: maintained == recompute under seeded random churn") {
-    val rnd = new scala.util.Random(409)
-    for (trial <- 1 to 10) {
-      def randL() = (1 to 30).flatMap { k =>
-        if (rnd.nextDouble() < 0.6)
-          Some((k.toLong, (rnd.nextInt(9) + 1).toLong, rnd.nextInt(100).toLong))
-        else None
-      }
-      def randR() = (1 to 9).flatMap { c =>
-        if (rnd.nextDouble() < 0.55) Some((c.toLong, s"g${rnd.nextInt(4)}"))
-        else None
-      }
-      val (ol, nl) = (randL(), randL())
-      val (or_, nr) = (randR(), randR())
-      val olD = ol.toDF("k", "cust", "v"); val nlD = nl.toDF("k", "cust", "v")
-      val orD = or_.toDF("cust", "seg"); val nrD = nr.toDF("cust", "seg")
-      def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-        l.join(r, Seq("cust"), "full")
-          .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"),
-            count(col("v")).as("v_nn"))
-      def present(d: org.apache.spark.sql.DataFrame) = d
-        .select(col("seg"), col("n"), when(col("v_nn") > 0, col("v")).as("v"))
-        .collect().map(r => Option(r.getString(0)) ->
-          ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-      val got = present(IncrementalAgg.refreshFullJoinSumCount(agg(olD, orD),
-        Snapshot.changeDataFeed(olD, nlD, "k", Seq("cust", "v")), olD, nlD,
-        Snapshot.changeDataFeed(orD, nrD, "cust", Seq("seg")), orD, nrD,
-        "cust", "cust", Seq("seg"), "n", Seq("v")))
-      val want = present(agg(nlD, nrD))
-      assert(got === want, s"trial $trial: L $ol -> $nl; R ${or_} -> $nr")
-    }
-  }
-
-  test("refreshRightJoinSumCount: orphan R rows count with NULL sums == recompute") {
+  test("refreshJoinSumCount right: orphan R rows count with NULL sums == recompute") {
     // the right-outer view: R rows are always preserved; L rows only
     // when matched. cust 20's order arrives for a key R dropped — it
-    // must VANISH from the view (no left-anti part here), and orphan R
+    // must VANISH from the view (no left-anti terms here), and orphan R
     // rows rename/born with NULL sums via the maintained counter.
     val oldL = Seq((1L, 10L, 5L)).toDF("k", "cust", "v")
     val newL = Seq((1L, 10L, 5L), (2L, 20L, 7L)).toDF("k", "cust", "v")
     val oldR = Seq((10L, "a"), (20L, "b"), (30L, "c")).toDF("cust", "seg")
     val newR = Seq((10L, "a"), (30L, "c2"), (40L, "d")).toDF("cust", "seg")
-    def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-      l.join(r, Seq("cust"), "right")
-        .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"),
-          count(col("v")).as("v_nn"))
-    def present(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("seg"), col("n"), when(col("v_nn") > 0, col("v")).as("v"))
-      .collect().map(r => Option(r.getString(0)) ->
-        ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-    val got = present(IncrementalAgg.refreshRightJoinSumCount(agg(oldL, oldR),
-      Snapshot.changeDataFeed(oldL, newL, "k", Seq("cust", "v")), oldL, newL,
-      Snapshot.changeDataFeed(oldR, newR, "cust", Seq("seg")), oldR, newR,
-      "cust", "cust", Seq("seg"), "n", Seq("v")))
-    val want = present(agg(newL, newR))
+    val got = present(refreshJoin(oldL, newL, oldR, newR, "right"))
+    val want = present(joinAgg(newL, newR, "right"))
     assert(got === want)
     assert(want === Map(
       Some("a") -> ((1L, Some(5L))),
@@ -418,90 +328,67 @@ class IncrementalAggSpec extends SparkSpec {
       Some("d") -> ((1L, None))), want.toString)
   }
 
-  test("refreshRightJoinSumCount: maintained == recompute under seeded random churn") {
-    val rnd = new scala.util.Random(811)
-    for (trial <- 1 to 10) {
-      def randL() = (1 to 30).flatMap { k =>
-        if (rnd.nextDouble() < 0.6)
-          Some((k.toLong, (rnd.nextInt(9) + 1).toLong, rnd.nextInt(100).toLong))
-        else None
-      }
-      def randR() = (1 to 9).flatMap { c =>
-        if (rnd.nextDouble() < 0.55) Some((c.toLong, s"g${rnd.nextInt(4)}"))
-        else None
-      }
-      val (ol, nl) = (randL(), randL())
-      val (or_, nr) = (randR(), randR())
-      val olD = ol.toDF("k", "cust", "v"); val nlD = nl.toDF("k", "cust", "v")
-      val orD = or_.toDF("cust", "seg"); val nrD = nr.toDF("cust", "seg")
-      def agg(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
-        l.join(r, Seq("cust"), "right")
-          .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"),
-            count(col("v")).as("v_nn"))
-      def present(d: org.apache.spark.sql.DataFrame) = d
-        .select(col("seg"), col("n"), when(col("v_nn") > 0, col("v")).as("v"))
-        .collect().map(r => Option(r.getString(0)) ->
-          ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-      val got = present(IncrementalAgg.refreshRightJoinSumCount(agg(olD, orD),
-        Snapshot.changeDataFeed(olD, nlD, "k", Seq("cust", "v")), olD, nlD,
-        Snapshot.changeDataFeed(orD, nrD, "cust", Seq("seg")), orD, nrD,
-        "cust", "cust", Seq("seg"), "n", Seq("v")))
-      val want = present(agg(nlD, nrD))
-      assert(got === want, s"trial $trial: L $ol -> $nl; R ${or_} -> $nr")
-    }
-  }
-
-  test("refreshStarSumCount: zero dims and change_type-carrying snapshots are refused") {
-    import graft.operators.IncrementalAgg.DimFeed
+  test("refreshJoinSumCount: zero dims, outer chains, bad join types, fan-out refused") {
     val f = Seq((1L, 10L, 5L)).toDF("k", "cust", "v")
     val d1 = Seq((10L, 100L)).toDF("cust", "nk")
     val prev = f.join(d1, Seq("cust"))
       .groupBy("nk").agg(count(lit(1)).as("n"), sum("v").as("v"))
-    val e0 = intercept[IllegalArgumentException](
-      IncrementalAgg.refreshStarSumCount(prev,
-        Snapshot.changeDataFeed(f, f, "k", Seq("cust", "v")), f,
-        Nil, Seq("nk"), "n", Seq("v")))
-    assert(e0.getMessage.contains("at least one dimension"), e0.getMessage)
-    val bad = d1.withColumn("change_type", lit("insert"))
-    val e1 = intercept[IllegalArgumentException](
-      IncrementalAgg.refreshStarSumCount(prev,
-        Snapshot.changeDataFeed(f, f, "k", Seq("cust", "v")), f,
-        Seq(DimFeed(Snapshot.changeDataFeed(d1, d1, "cust", Seq("nk")),
-          d1, bad, "cust", "cust")),
-        Seq("nk"), "n", Seq("v")))
-    assert(e1.getMessage.contains("change_type"), e1.getMessage)
-    // a dimension-carried measure multiplies by join fan-out: refused
-    val e2 = intercept[IllegalArgumentException](
-      IncrementalAgg.refreshStarSumCount(prev,
-        Snapshot.changeDataFeed(f, f, "k", Seq("cust", "v")), f,
-        Seq(DimFeed(Snapshot.changeDataFeed(d1, d1, "cust", Seq("nk")),
-          d1, d1, "cust", "cust")),
-        Seq("cust"), "n", Seq("nk")))
-    assert(e2.getMessage.contains("fan-out"), e2.getMessage)
-    val l = Seq((1L, 10L, 5L)).toDF("k", "cust", "v")
-    val r = Seq((10L, 7L)).toDF("cust", "w")
-    val prevLr = l.join(r, Seq("cust"))
-      .groupBy("cust").agg(count(lit(1)).as("n"), sum("w").as("w"))
-    val e3 = intercept[IllegalArgumentException](
-      IncrementalAgg.refreshJoinSumCount(prevLr,
-        Snapshot.changeDataFeed(l, l, "k", Seq("cust", "v")), l,
-        Snapshot.changeDataFeed(r, r, "cust", Seq("w")), r,
-        "cust", "cust", Seq("cust"), "n", Seq("w")))
-    assert(e3.getMessage.contains("fan-out"), e3.getMessage)
+    val dim = DimFeed(Snapshot.changeDataFeed(d1, d1, "cust", Seq("nk")),
+      d1, d1, "cust", "cust")
+    def refused(dims: Seq[DimFeed], how: String, group: String = "nk",
+        measure: String = "v") = intercept[IllegalArgumentException](
+      IncrementalAgg.refreshJoinSumCount(prev,
+        Snapshot.changeDataFeed(f, f, "k", Seq("cust", "v")), f, f, dims, how,
+        Seq(group), "n", Seq(measure))).getMessage
+    assert(refused(Nil, "inner").contains("at least one dimension"))
+    // an outer view takes exactly one dimension; join types are spelled out
+    assert(refused(Seq(dim, dim), "left").contains("exactly one dimension"))
+    assert(refused(Seq(dim), "outer").contains("join type"))
+    // a dimension-carried measure multiplies by join fan-out
+    assert(refused(Seq(dim), "inner", group = "cust", measure = "nk")
+      .contains("fan-out"))
   }
 
   test("refreshJoinSumCount: a snapshot carrying change_type is refused") {
     val l = Seq((1L, 10L, 5L)).toDF("k", "cust", "v")
     val r = Seq((10L, "x")).toDF("cust", "seg")
     val bad = r.withColumn("change_type", lit("insert"))
-    val prev = l.join(r, Seq("cust"))
-      .groupBy("seg").agg(count(lit(1)).as("n"), sum("v").as("v"))
     val e = intercept[IllegalArgumentException](
-      IncrementalAgg.refreshJoinSumCount(prev,
-        Snapshot.changeDataFeed(l, l, "k", Seq("cust", "v")), l,
-        Snapshot.changeDataFeed(r, r, "cust", Seq("seg")), bad,
-        "cust", "cust", Seq("seg"), "n", Seq("v")))
+      IncrementalAgg.refreshJoinSumCount(joinAgg(l, r, "inner"),
+        Snapshot.changeDataFeed(l, l, "k", Seq("cust", "v")), l, l,
+        Seq(DimFeed(Snapshot.changeDataFeed(r, r, "cust", Seq("seg")),
+          r, bad, "cust", "cust")), "inner", Seq("seg"), "n", Seq("v")))
     assert(e.getMessage.contains("change_type"), e.getMessage)
+  }
+
+  // one fixture with a NULL group in both the state and the feed: the
+  // feed deletes 20 from the NULL group and inserts 40 into it
+  private def nullOld = Seq[(Long, Option[String], Long)](
+    (1L, None, 10L), (2L, None, 20L), (3L, Some("a"), 30L)).toDF("k", "g", "v")
+  private def nullNew = Seq[(Long, Option[String], Long)](
+    (1L, None, 10L), (3L, Some("a"), 30L), (4L, None, 40L)).toDF("k", "g", "v")
+
+  test("refreshSumCount/refreshMoments: a NULL group meets its own delta") {
+    val prev = nullOld.groupBy("g").agg(count(lit(1)).as("n"), sum("v").as("v"),
+      sum(col("v") * col("v")).as("v_sq"))
+    val cdf = Snapshot.changeDataFeed(nullOld, nullNew, "k")
+    def rows(d: DF) = d.select("g", "n", "v").as[(Option[String], Long, Long)]
+      .collect().sortBy(_.toString).toSeq
+    val want = rows(nullNew.groupBy("g").agg(count(lit(1)).as("n"), sum("v").as("v")))
+    assert(want.contains((None, 2L, 50L)), want.toString)
+    assert(rows(IncrementalAgg.refreshSumCount(prev.drop("v_sq"), cdf, Seq("g"),
+      "n", Seq("v"))) === want)
+    assert(rows(IncrementalAgg.refreshMoments(prev, cdf, Seq("g"), "n", "v")) === want)
+  }
+
+  test("refreshSupport: a NULL group's support merges with its own delta") {
+    val prev = nullOld.groupBy("g", "v").agg(count(lit(1)).as("support"))
+    val got = IncrementalAgg.refreshSupport(prev,
+        Snapshot.changeDataFeed(nullOld, nullNew, "k"), Seq("g"), "v")
+      .as[(Option[String], Long, Long)].collect().sortBy(_.toString).toSeq
+    val want = nullNew.groupBy("g", "v").agg(count(lit(1)).as("support"))
+      .as[(Option[String], Long, Long)].collect().sortBy(_.toString).toSeq
+    assert(got === want)
   }
 
   test("a malformed change_type fails loudly instead of dropping weight") {

@@ -6,7 +6,8 @@ import graft.operators.LinearAlgebra
   * second moments, dominance on axis-aligned and oblique data, and the
   * loud degenerate/overflow arms.
   */
-class LinearAlgebraSpec extends SparkSpec {
+class LinearAlgebraSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("secondMoment: exact integer cells on a hand case") {
@@ -62,6 +63,40 @@ class LinearAlgebraSpec extends SparkSpec {
     val capped = LinearAlgebra.dominantDirection(vecs, "embedding", rounds = 5,
       maxDriverDim = 0).as[(Long, Long)].collect().toMap
     assert(capped == dist)
+  }
+
+  test("dominantDirectionDistributed: no round broadcasts the Gramian side") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val vecs = (1 to 16).map(c =>
+      Seq(0.3f * (c % 5), 0.4f * (c % 3), 0.1f * c, -0.2f * (c % 7)))
+      .toDF("embedding")
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      LinearAlgebra.dominantDirectionDistributed(vecs, "embedding", rounds = 2)
+        .collect()
+      // a sentinel execution bounds the asynchronous listener events
+      spark.range(1).select($"id".as("la_sentinel")).collect()
+      val deadline = System.currentTimeMillis() + 20000L
+      while (!plans.asScala.exists(_.output.exists(_.name == "la_sentinel")) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val broadcasts = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+      case b: BroadcastExchangeExec => b.output.map(_.name)
+    })
+    // the matvec ran and broadcast its vector side...
+    assert(broadcasts.exists(_.contains("v")), s"broadcast sides: $broadcasts")
+    // ...and never the dim² Gramian (i, j, m)
+    assert(!broadcasts.exists(_.contains("m")), s"broadcast sides: $broadcasts")
   }
 
   test("degenerate input refuses loudly; quantScale must be a power of two") {

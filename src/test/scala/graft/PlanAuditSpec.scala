@@ -681,12 +681,12 @@ class PlanAuditSpec extends SparkSpec {
       case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
         if j.joinType.toString == "FullOuter" => j
     }
-    // two by construction: the q220 fixture DERIVES its CDF from an
-    // old-vs-new snapshot diff (one full-outer), and the refresh merges
-    // state with deltas (the second). A production refresh reads the
-    // CDF from the table log and pays only the second.
-    assert(fullOuters.size == 2,
-      s"CDF diff + state merge = exactly two full-outers, got ${fullOuters.size}:\n$sp")
+    // one by construction: the q220 fixture DERIVES its CDF from an
+    // old-vs-new snapshot diff (the full-outer); the refresh merges state
+    // with deltas by re-aggregating their union, no join. A production
+    // refresh reads the CDF from the table log and pays no full-outer.
+    assert(fullOuters.size == 1,
+      s"CDF diff = exactly one full-outer, state merge none, got ${fullOuters.size}:\n$sp")
     val p = plan("q220_incremental_distinct")
     assert(p.contains("partial_sum"),
       s"signed deltas must combine map-side (one row per affected (group, value)):\n$p")

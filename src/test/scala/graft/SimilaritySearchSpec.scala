@@ -172,6 +172,23 @@ class SimilaritySearchSpec extends SparkSpec {
     adm.close(); adm2.close()
   }
 
+  test("semDedupAdmit reads the saved centroids once per admission") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-semadmit1").toString
+    val (cents, assigned) = SimilaritySearch.ivfBuildIndex(
+      corpus, "vec_id", "embedding", nCells = 4, iters = 1)
+    SimilaritySearch.ivfSaveIndex(dir, cents, assigned)
+    // one index load reads the centroids (a parquet schema job at its
+    // own call site), then the lists (another)
+    val (_, loadSites) = jobSitesOf(SimilaritySearch.ivfLoadIndex(spark, dir))
+    val own = loadSites.filter(_.contains(" at SimilaritySearch.scala:")).distinct
+    assert(own.size === 2, s"index load sites: $loadSites")
+    val batch = Seq((500L, vec(3)), (501L, vec(104))).toDF("vec_id", "embedding")
+    val (_, sites) = jobSitesOf(SimilaritySearch.semDedupAdmit(
+      spark, dir, batch, "vec_id", "embedding", threshold = 0.999).close())
+    assert(sites.count(_ == own.head) === 1, s"centroid reads: $sites")
+    assert(sites.count(_ == own(1)) === 1, s"lists reads: $sites")
+  }
+
   test("ivfTopK achieves high recall@5 against brute force on clustered data") {
     val queries = corpus.filter(col("vec_id") % 20 === 0)
     val exact = SimilaritySearch.bruteForceTopK(corpus, queries, "vec_id", "embedding", 5)
