@@ -165,20 +165,20 @@ class IncrementalAggSpec extends SparkSpec {
     assert(present(state) === Map(Some("x") -> ((1L, Some(9L)))))
   }
 
-  test("refreshJoinSumCount: maintained == recompute under seeded random churn") {
-    // the algebra's edge cases are combinatorial (which side changed,
-    // insert vs delete vs update, key present on the other side or not,
-    // group births/deaths, null-padded groups) — a seeded random sweep
-    // per join type covers combinations no hand fixture enumerates. 10
-    // trials per join type, each a fresh (L, R, ΔL, ΔR), checked against
-    // L′.join(R′, how) recomputed. Columns: join type, seed, fact keys,
-    // P(fact row), customers, P(customer row).
-    val cases = Seq(
+  // the algebra's edge cases are combinatorial (which side changed,
+  // insert vs delete vs update, key present on the other side or not,
+  // group births/deaths, null-padded groups) — a seeded random sweep
+  // per join type covers combinations no hand fixture enumerates. 10
+  // trials per join type, each a fresh (L, R, ΔL, ΔR), checked against
+  // L′.join(R′, how) recomputed. Columns: join type, seed, fact keys,
+  // P(fact row), customers, P(customer row).
+  for ((how, seed, nKeys, pL, nCust, pR) <- Seq(
       ("inner", 101, 40, 0.7, 6, 0.8),
       ("left", 307, 40, 0.7, 8, 0.6),
       ("full", 409, 30, 0.6, 9, 0.55),
-      ("right", 811, 30, 0.6, 9, 0.55))
-    for ((how, seed, nKeys, pL, nCust, pR) <- cases) {
+      ("right", 811, 30, 0.6, 9, 0.55))) {
+    val label = if (how == "inner") "refreshJoinSumCount" else s"refreshJoinSumCount $how"
+    test(s"$label: maintained == recompute under seeded random churn") {
       val rnd = new scala.util.Random(seed)
       for (trial <- 1 to 10) {
         def randL() = (1 to nKeys).flatMap { k =>
