@@ -17,7 +17,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * of the given prefixes twice to the noop sink and prints, per query,
   * the formatted executed plan of the second (warm) pass and one JSON
   * [[Prof.Record]]: both pass times, the warm time (their min, -1 when a
-  * pass failed) and the warm pass's Spark jobs with their call sites.
+  * pass failed) and the warm pass's Spark jobs. A job that runs under a
+  * SQL execution carries that execution's id and is named by the
+  * operators its final stage runs (the RDD operation scopes, such as
+  * `Scan parquet, WholeStageCodegen (1), Exchange`): under AQE every
+  * stage job shares one call site inside `CompletableFuture`. Any other
+  * job is named by its call site.
   * The last line is `{"sf":…,"queries":{name: warm_s}}`; run once per SF
   * dir and divide for a scale step. Cached relations, persisted RDDs and
   * garbage are cleared between queries, as in `Bench`.
@@ -25,7 +30,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   sbt "runMain graft.Prof <sfDir> q251_txtable_join_view q02_"
   */
 object Prof {
-  final case class Job(id: Int, s: Double, site: String)
+  final case class Job(id: Int, s: Double, exec: Long, site: String)
   final case class Record(query: String, passes_s: Seq[Double], warm_s: Double, jobs: Seq[Job])
 
   val json: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
@@ -43,21 +48,26 @@ object Prof {
 
   /** Profiles on `spark`, printing to `Console.out`. */
   def run(spark: SparkSession, sfDir: String, prefixes: Seq[String]): Unit = {
-    val open = new ConcurrentHashMap[Int, (Long, String)]()
+    val open = new ConcurrentHashMap[Int, (Long, Long, String)]()
     val done = new ConcurrentLinkedQueue[Job]()
     val plan = new AtomicReference[QueryExecution]()
-    // a job's call site is the name of its last stage, plus its
-    // description when one is set
+    // a job's name: its final stage's operators under a SQL execution,
+    // else that stage's call site; plus its description when one is set
     val jobs = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        open.put(j.jobId, (j.time, if (desc.nonEmpty) s"$site | $desc" else site))
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        val exec = prop("spark.sql.execution.id").map(_.toLong).getOrElse(-1L)
+        val last = j.stageInfos.maxByOption(_.stageId)
+        val site = last.fold("?") { st =>
+          val ops = st.rddInfos.sortBy(_.id).flatMap(_.scope).map(_.name).distinct
+          if (exec >= 0 && ops.nonEmpty) ops.mkString(", ") else st.name
+        }
+        val desc = prop("spark.job.description").getOrElse("")
+        open.put(j.jobId, (j.time, exec, if (desc.nonEmpty) s"$site | $desc" else site))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        Option(open.remove(e.jobId)).foreach { case (t, site) =>
-          done.add(Job(e.jobId, (e.time - t) / 1e3, site))
+        Option(open.remove(e.jobId)).foreach { case (t, exec, site) =>
+          done.add(Job(e.jobId, (e.time - t) / 1e3, exec, site))
         }
     }
     val plans = new QueryExecutionListener {

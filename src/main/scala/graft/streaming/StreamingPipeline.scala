@@ -61,7 +61,11 @@ object StreamingPipeline extends Serializable {
       tablePath: String,
       checkpointDir: String,
       trigger: Trigger,
-      historyPath: Option[String] = None): DataStreamWriter[Row] =
+      historyPath: Option[String] = None): DataStreamWriter[Row] = {
+    // the partitions the previous micro-batch touched: each commit's
+    // expected set, so a steady stream commits in two Spark jobs (the
+    // first batch, with none, discovers its partitions in a third)
+    var touched: Seq[String] = Nil
     normalized.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
@@ -73,10 +77,13 @@ object StreamingPipeline extends Serializable {
         historyPath.foreach { h =>
           batch.write.mode("append").partitionBy("serverName").parquet(h)
         }
-        TxTable.mergeLatest(batch.sparkSession, batch, tablePath)
+        touched = TxTable.mergeLatestTouched(batch.sparkSession, batch, tablePath,
+          "serverName", Seq("serverName", "tag"), Seq("serverTimestamp", "sourceTimestamp"),
+          TxTable.AutoStats, touched)._2
         if (historyPath.isDefined) batch.unpersist()
         ()
       }
+  }
 
   /** Per-server query fan-out: one `currentValueSink` query per configured
     * server, each at its own poll cadence and into its own table at

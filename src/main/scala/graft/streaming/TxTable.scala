@@ -1456,7 +1456,7 @@ object TxTable {
     * be one of `keys`' prefixes in spirit — here it is the physical
     * pruning unit (the reference's collection-per-server).
     *
-    * One commit is three Spark jobs and no sort:
+    * A commit discovers its partitions in three Spark jobs and no sort:
     *   1. the affected partitions, from one narrow per-task distinct
     *      over the persisted batch (this job also fills the cache);
     *   2. the exchange of `current ∪ batch` on `keys`
@@ -1467,6 +1467,20 @@ object TxTable {
     *   3. the write: one partition goes to a single directory with no
     *      `partitionBy` (no sort before the writer), several fan out
     *      through one `partitionBy` write.
+    *
+    * A stream sink passes `expected`, the partitions its previous
+    * micro-batch touched; the commit then runs jobs 2 and 3 only, with
+    * no persist. It reads the expected partitions' files, and the merged
+    * rows carry a batch-origin marker that the write's own
+    * `Observation` reads before the marker is dropped: a merged row
+    * outside `expected` means the guess missed, so the attempt drops
+    * its data dirs and the commit discovers its partitions as above; an
+    * expected partition with no batch-origin row is neither rewritten
+    * nor listed in the commit. A snapshot with CHECK constraints (the
+    * check reads the batch again) and `keys` without `partitionCol` (a
+    * key could then straddle a partition the guess did not read) take
+    * the discovery path whatever `expected` says.
+    *
     * The commit's `op` line records the rows written ([[history]]
     * `detail`), next to the attempt number and ms every op line carries.
     *
@@ -1479,7 +1493,33 @@ object TxTable {
       partitionCol: String = "serverName",
       keys: Seq[String] = Seq("serverName", "tag"),
       order: Seq[String] = Seq("serverTimestamp", "sourceTimestamp"),
-      statsCols: Seq[String] = AutoStats): Long = {
+      statsCols: Seq[String] = AutoStats,
+      expected: Seq[String] = Nil): Long =
+    mergeLatestTouched(spark, batch, tablePath, partitionCol, keys, order,
+      statsCols, expected)._1
+
+  /** Marks the rows of a guessed [[mergeLatest]] commit that came from
+    * the batch; dropped before the write.
+    */
+  private val FromBatch = "__from_batch"
+
+  /** A guessed [[mergeLatest]] attempt's answer when the commit must
+    * discover its partitions instead; no version is negative.
+    */
+  private val Rediscover = Long.MinValue
+
+  /** [[mergeLatest]], also returning the partitions the commit rewrote:
+    * the `expected` set a stream sink passes with its next micro-batch.
+    */
+  private[streaming] def mergeLatestTouched(
+      spark: SparkSession,
+      batch: DataFrame,
+      tablePath: String,
+      partitionCol: String,
+      keys: Seq[String],
+      order: Seq[String],
+      statsCols: Seq[String],
+      expected: Seq[String]): (Long, Seq[String]) = {
     // null partition keys are unrepresentable under partition pruning
     // (an equi-join/filter on the partition value never matches null) and
     // the canonical schema declares serverName non-null — drop them here
@@ -1490,86 +1530,132 @@ object TxTable {
     // current ∪ batch equals the winner among the batch's winners and
     // the table's row, so one reduction over the union suffices (with
     // order ties the contract is already "caller supplies tie-break
-    // columns"). Persisted because foreachBatch sinks pass micro-batch
-    // frames that are consumed here by the affected-partition pass and
-    // the merge — one evaluation of the batch.
-    val batch0 = batch.filter(col(partitionCol).isNotNull).persist()
-    try {
-      val affected = batch0.select(partitionCol).queryExecution.toRdd
-        .mapPartitions { it =>
-          val seen = scala.collection.mutable.HashSet[String]()
-          it.foreach(r => seen += r.getString(0))
-          seen.iterator
-        }.collect().distinct.sorted.toSeq
-      // constraints come from each attempt's snapshot: a concurrently
-      // added CHECK must gate the retry, not be bypassed by a pre-loop
-      // read (mergeInto re-reads per attempt; here the agg re-runs only
-      // when the constraint set actually changed under a lost race).
-      // The check still sees only the batch's last-value-per-key
-      // SURVIVORS (the rows a commit can land), exactly as before — the
-      // pre-aggregation now runs only on this rare path instead of on
-      // every commit.
-      var enforcedFor: Map[String, String] = null
-      commit(tablePath, "mergeLatest") { snap =>
-        if (affected.nonEmpty && snap.constraints != enforcedFor) {
-          enforceConstraints(LastValue.latestPerKey(batch0, keys, order),
-            snap.constraints, "mergeLatest")
-          enforcedFor = snap.constraints
-        }
-        val removedFiles = affected.flatMap(p => snap.filesByPartition.getOrElse(p, Nil))
-        val current = if (removedFiles.isEmpty) None
-          else Some(snapReader(spark, snap).parquet(removedFiles.map(p => resolveRef(tablePath, p)): _*))
-        // an evolved table may be WIDER than the batch: keep table-only
-        // columns (null for upserted rows — an upsert with a narrower
-        // batch leaves unspecified columns unset); a batch column the
-        // table does not declare is refused (silent undeclared evolution
-        // would make reads file-order-dependent)
-        current.foreach { cur =>
-          val unknown = batch0.columns.filterNot(cur.columns.contains)
-          require(unknown.isEmpty,
-            s"mergeLatest batch has columns ${unknown.mkString(",")} unknown to " +
-              "the table — evolve the schema via mergeInto(mergeSchema = true) first")
-        }
-        val union = current.fold(batch0: DataFrame)(
-          _.unionByName(batch0, allowMissingColumns = true))
-        // the kernel is eager (its exchange runs under AQE when called),
-        // so an empty batch skips it and commits no data, as before
-        def merged = LastValue.latestPerKeyHashed(union, keys, order,
-          graft.operators.Checkpoints.sizedPartitions(union))
-        // data dirs are written before the commit references them
-        // (unique names keep them invisible until, and unless, the
-        // commit lands)
-        val statCols = eligibleStats(union, statsCols)
-        val adds = affected match {
-          case Seq() => Nil
-          case Seq(p) =>
-            val rel = s"data/${UUID.randomUUID()}"
-            writePartition(merged, s"$tablePath/$rel", statCols).toSeq
-              .map { case (st, n) => (p, rel, st, n) }
-          case _ => writePartitions(merged, partitionCol, affected, tablePath, statCols)
-        }
-        // declare the table schema on the first commit that finds none
-        // (r18): an undeclared table pays an eager parquet footer-
-        // inference job on EVERY snapshot read — each commit's
-        // read-modify-write, every time-travel/CDF/keyHistory boundary
-        // state. mergeLatest already refuses undeclared batch columns,
-        // so the merged schema IS the table schema; declared all-nullable
-        // exactly like mergeInto's evolution line (parquet row groups
-        // never prove non-nullability anyway). Value-identical reads:
-        // every data file carries these columns with these types.
-        val schemaLine =
-          if (snap.schemaJson.nonEmpty) Nil
-          else {
-            val nullable = org.apache.spark.sql.types.StructType(
-              union.schema.fields.map(_.copy(nullable = true)))
-            Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
-          }
-        Right(Attempt(Seq("rows" -> adds.map(_._4).sum),
-          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
-            removedFiles.map(f => s"remove\t$f") ++ schemaLine,
-          topDirs(adds.map(_._2))))
+    // columns").
+    val batch0 = batch.filter(col(partitionCol).isNotNull)
+    var touched: Seq[String] = Nil
+
+    // The one attempt body: merge `in` into the partitions `parts` of
+    // `snap`. With `guess`, `parts` is the caller's expected set.
+    def merge(snap: Snapshot, in: DataFrame, parts: Seq[String],
+        guess: Boolean): Either[Long, Attempt] = {
+      val current = parts.flatMap(p => snap.filesByPartition.getOrElse(p, Nil)) match {
+        case Seq() => None
+        case files => Some(snapReader(spark, snap).parquet(files.map(resolveRef(tablePath, _)): _*))
       }
-    } finally batch0.unpersist(blocking = false)
+      // an evolved table may be WIDER than the batch: keep table-only
+      // columns (null for upserted rows — an upsert with a narrower
+      // batch leaves unspecified columns unset); a batch column the
+      // table does not declare is refused (silent undeclared evolution
+      // would make reads file-order-dependent)
+      current.foreach { cur =>
+        val unknown = in.columns.filterNot(cur.columns.contains)
+        require(unknown.isEmpty,
+          s"mergeLatest batch has columns ${unknown.mkString(",")} unknown to " +
+            "the table — evolve the schema via mergeInto(mergeSchema = true) first")
+      }
+      def mark(df: DataFrame, fromBatch: Boolean) =
+        if (guess) df.withColumn(FromBatch, lit(fromBatch)) else df
+      val union = current.fold(mark(in, true))(cur =>
+        mark(cur, false).unionByName(mark(in, true), allowMissingColumns = true))
+      val check = org.apache.spark.sql.Observation()
+      // the kernel is eager (its exchange runs under AQE when called),
+      // so an empty discovered set skips it and commits no data, as before
+      def merged = {
+        val m = LastValue.latestPerKeyHashed(union, keys, order,
+          graft.operators.Checkpoints.sizedPartitions(union))
+        if (!guess) m
+        else m.observe(check,
+          collect_set(when(col(FromBatch), col(partitionCol))).as("reached"),
+          count(when(!col(partitionCol).isin(parts: _*), 1)).as("outside"))
+          .drop(FromBatch)
+      }
+      // data dirs are written before the commit references them
+      // (unique names keep them invisible until, and unless, the
+      // commit lands)
+      val statCols = eligibleStats(union, statsCols).filterNot(_._1 == FromBatch)
+      val written = parts match {
+        case Seq() => Nil
+        case Seq(p) =>
+          val rel = s"data/${UUID.randomUUID()}"
+          writePartition(merged, s"$tablePath/$rel", statCols).toSeq
+            .map { case (st, n) => (p, rel, st, n) }
+        case _ => writePartitions(merged, partitionCol, parts, tablePath, statCols)
+      }
+      def drop(rels: Seq[String]): Unit = rels.foreach(r => dropDir(spark, s"$tablePath/$r"))
+      val reached: Option[Set[String]] =
+        if (!guess) Some(parts.toSet)
+        else if (check.get("outside") != 0L) None
+        else Some(check.get("reached").asInstanceOf[Iterable[String]].toSet)
+      reached match {
+        case None =>
+          drop(topDirs(written.map(_._2)))
+          Left(Rediscover)
+        case Some(r) =>
+          val (adds, unreached) = written.partition(a => r(a._1))
+          if (adds.isEmpty) drop(topDirs(unreached.map(_._2))) else drop(unreached.map(_._2))
+          touched = parts.filter(r)
+          // declare the table schema on the first commit that finds none
+          // (r18): an undeclared table pays an eager parquet footer-
+          // inference job on EVERY snapshot read — each commit's
+          // read-modify-write, every time-travel/CDF/keyHistory boundary
+          // state. mergeLatest already refuses undeclared batch columns,
+          // so the merged schema IS the table schema; declared all-nullable
+          // exactly like mergeInto's evolution line (parquet row groups
+          // never prove non-nullability anyway). Value-identical reads:
+          // every data file carries these columns with these types.
+          val schemaLine =
+            if (snap.schemaJson.nonEmpty) Nil
+            else {
+              val nullable = StructType(union.schema.fields
+                .filterNot(_.name == FromBatch).map(_.copy(nullable = true)))
+              Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
+            }
+          Right(Attempt(Seq("rows" -> adds.map(_._4).sum),
+            adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
+              touched.flatMap(p => snap.filesByPartition.getOrElse(p, Nil)).map(f => s"remove\t$f") ++
+              schemaLine,
+            topDirs(adds.map(_._2))))
+      }
+    }
+
+    val guessed =
+      if (expected.isEmpty || !keys.contains(partitionCol)) Rediscover
+      else commit(tablePath, "mergeLatest") { snap =>
+        if (snap.constraints.nonEmpty) Left(Rediscover)
+        else merge(snap, batch0, expected.distinct.sorted, guess = true)
+      }
+    if (guessed != Rediscover) (guessed, touched)
+    else {
+      // persisted: the affected-partition pass and the merge read the
+      // batch (foreachBatch sinks pass micro-batch frames), one
+      // evaluation of it
+      val cached = batch0.persist()
+      try {
+        val affected = cached.select(partitionCol).queryExecution.toRdd
+          .mapPartitions { it =>
+            val seen = scala.collection.mutable.HashSet[String]()
+            it.foreach(r => seen += r.getString(0))
+            seen.iterator
+          }.collect().distinct.sorted.toSeq
+        // constraints come from each attempt's snapshot: a concurrently
+        // added CHECK must gate the retry, not be bypassed by a pre-loop
+        // read (mergeInto re-reads per attempt; here the agg re-runs only
+        // when the constraint set actually changed under a lost race).
+        // The check sees only the batch's last-value-per-key SURVIVORS
+        // (the rows a commit can land), and its frame is built only for
+        // a snapshot that has constraints.
+        var enforcedFor = Map.empty[String, String]
+        val version = commit(tablePath, "mergeLatest") { snap =>
+          if (affected.nonEmpty && snap.constraints.nonEmpty && snap.constraints != enforcedFor) {
+            enforceConstraints(LastValue.latestPerKey(cached, keys, order),
+              snap.constraints, "mergeLatest")
+            enforcedFor = snap.constraints
+          }
+          merge(snap, cached, affected, guess = false)
+        }
+        (version, touched)
+      } finally { cached.unpersist(blocking = false); () }
+    }
   }
 
   /** Keyed DELETE — the right-to-be-forgotten surface (GDPR erasure;

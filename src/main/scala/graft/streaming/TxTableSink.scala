@@ -41,11 +41,15 @@ import org.apache.spark.sql.streaming.OutputMode
   * key-only stats; that path stays on
   * [[TxTable.currentValueSinkTxDelta]].)
   *
-  * Cost per micro-batch: [[TxTable.mergeLatest]]'s three jobs, no sort,
-  * and no session-config change — the commit passes its partition count
-  * to its own plan, so other queries sharing the session keep their
-  * settings while a batch commits. Each commit's `op` line carries the
-  * rows written and the commit attempt's ms ([[TxTable.history]]).
+  * Cost per micro-batch: two Spark jobs (exchange and write), no sort,
+  * no persist and no session-config change — the commit passes its
+  * partition count to its own plan, so other queries sharing the session
+  * keep their settings while a batch commits. Each batch passes the
+  * partitions the previous one touched as [[TxTable.mergeLatest]]'s
+  * `expected` set; the first batch of a query run, and a batch that
+  * reaches a partition outside the set, pay the third job that
+  * discovers them. Each commit's `op` line carries the rows written and
+  * the commit attempt's ms ([[TxTable.history]]).
   */
 class TxTableSinkProvider extends StreamSinkProvider with DataSourceRegister {
   override def shortName(): String = "txtable"
@@ -78,12 +82,16 @@ class TxTableSink(
     keys: Seq[String],
     order: Seq[String]) extends Sink with Logging {
 
+  /** The partitions the previous batch of this query run touched. */
+  private var touched: Seq[String] = Nil
+
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine hands a streaming-flagged frame; re-root it as a batch
     // frame (the ForeachBatchSink pattern) before deriving merge plans
     val batch = org.apache.spark.sql.graftshim.StreamingShim.asBatchDataFrame(data)
-    val version = TxTable.mergeLatest(data.sparkSession, batch, path,
-      partitionCol, keys, order)
+    val (version, parts) = TxTable.mergeLatestTouched(data.sparkSession, batch, path,
+      partitionCol, keys, order, TxTable.AutoStats, touched)
+    touched = parts
     logInfo(s"txtable sink: batch $batchId committed as version $version of $path")
   }
 

@@ -32,4 +32,18 @@ class ProfSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
+
+  test("Prof: AQE stage jobs are named by their operators and SQL execution, not a call site") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val out = new ByteArrayOutputStream()
+    Console.withOut(out)(Prof.run(spark, sf, Seq("q29_")))
+    val record = Prof.json.readTree(out.toString("UTF-8").linesIterator
+      .find(_.startsWith("{\"query\"")).get)
+    val jobs = (0 until record.get("jobs").size).map(record.get("jobs").get(_))
+    val sites = jobs.map(_.get("site").asText)
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_.contains("CompletableFuture")), sites)
+    assert(sites.exists(_.contains("Exchange")), sites)
+    assert(jobs.forall(_.get("exec").asLong >= 0), sites)
+  }
 }

@@ -1482,6 +1482,9 @@ class StreamingSpec extends SparkSpec {
       memU.toDF().toDF("vec_id", "embedding"), diskCents, diskLists,
       "vec_id", "embedding", nProbe = 3, cacheIndex = false)
     val gotU = scala.collection.mutable.Set.empty[(Long, Long, Long)]
+    // data before start: an AvailableNow query fixes its end offset as it
+    // starts, so rows added after `start()` can miss the drain
+    memU.addData(queryIds.map(i => (i, vec(i.toInt))))
     val qU = uncached.output.writeStream.outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -1492,7 +1495,6 @@ class StreamingSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation", tmp("graft-annprobe-u-ckpt")).start()
-    memU.addData(queryIds.map(i => (i, vec(i.toInt))))
     qU.awaitTermination()
     assert(gotU.toSet == batch, s"uncached stream ${gotU.toSet} != batch $batch")
     uncached.close() // no-op storage-wise: nothing was cached
@@ -1506,6 +1508,7 @@ class StreamingSpec extends SparkSpec {
       memPq.toDF().toDF("vec_id", "embedding"), pc, pb, coded,
       "vec_id", "embedding", nProbe = 3)
     val cand = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    memPq.addData(queryIds.map(i => (i, vec(i.toInt))))
     val q2 = pqProbe.output.writeStream.outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -1516,7 +1519,6 @@ class StreamingSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation", tmp("graft-annpq-ckpt")).start()
-    memPq.addData(queryIds.map(i => (i, vec(i.toInt))))
     q2.awaitTermination()
     val candDf = cand.toSeq.toDF("query_id", "neighbor_id", "cosine")
     val shortlist = SimilaritySearch.rankTopK(candDf, 5 * 4)

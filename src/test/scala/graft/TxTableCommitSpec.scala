@@ -14,10 +14,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.streaming.TxTable
+import graft.streaming.{StreamingPipeline, TxTable, TxTableSinkProvider}
 
 /** The per-commit plan of [[TxTable.mergeLatest]]: a one-partition
   * commit runs at most three Spark jobs with no sort anywhere, never
@@ -190,5 +192,116 @@ class TxTableCommitSpec extends SparkSpec {
       assert(c.detail("ms").toLong >= 0L)
     }
     assert(table(path) == expected(2, "srv", "srv2"))
+  }
+
+  /** The sink a `format("txtable")` stream writes through, fed here on
+    * the test thread so [[observed]] sees each batch's jobs.
+    */
+  private def txSink(path: String) =
+    new TxTableSinkProvider().createSink(spark.sqlContext, Map("path" -> path), Nil,
+      OutputMode.Update())
+
+  /** Top-level `data/` dirs no version of the table references. */
+  private def unreferencedDirs(path: String): Set[String] = {
+    val live = (0L to TxTable.snapshot(path).version)
+      .flatMap(v => TxTable.snapshotAt(path, v).allFiles)
+      .map(_.split('/').take(2).mkString("/")).toSet
+    val onDisk = Option(new java.io.File(path, "data").list()).toSet.flatten.map("data/" + _)
+    onDisk -- live
+  }
+
+  test("txtable sink: the second and later micro-batches commit in 2 jobs with no cached batch") {
+    val path = tmp("txc-sink")
+    val sink = txSink(path)
+    val (first, _) = observed(sink.addBatch(0, cycle(1)))
+    assert(first == 3, s"the first batch discovers its partition: $first jobs")
+    (1 to 3).foreach { b =>
+      val (jobs, plans) = observed(sink.addBatch(b, cycle(b + 1)))
+      assert(jobs == 2, s"batch $b: $jobs jobs")
+      assert(plans.nonEmpty, s"batch $b reported no plan")
+      val cached = plans.flatMap(nodes).collect { case m: InMemoryTableScanExec => m }
+      assert(cached.isEmpty, s"batch $b read a cached batch")
+    }
+    assert(table(path) == expected(4, "srv"))
+    assert(TxTable.history(path).map(_.detail("rows")) == Seq.fill(4)("64"))
+  }
+
+  test("txtable sink: a batch outside the expected partitions commits what discovery commits") {
+    val (streamed, merged) = (tmp("txc-miss-sink"), tmp("txc-miss-batch"))
+    val sink = txSink(streamed)
+    val batches = Seq(cycle(1), cycle(2), cycle(3).unionByName(cycle(3, "srv2")), cycle(4))
+    val jobs = batches.zipWithIndex.map { case (b, i) =>
+      TxTable.mergeLatest(spark, b, merged)
+      observed(sink.addBatch(i, b))._1
+    }
+    // the miss: the guessed attempt's 2 jobs, then discovery's 3
+    assert(jobs == Seq(3, 2, 5, 2), jobs)
+    assert(table(streamed) == table(merged))
+    assert(table(streamed) == expected(4, "srv") ++ expected(3, "srv2"))
+    assert(TxTable.snapshot(streamed).filesByPartition.keySet == Set("srv", "srv2"))
+    assert(TxTable.history(streamed).map(_.detail("rows")) ==
+      TxTable.history(merged).map(_.detail("rows")))
+    // the missed attempt dropped its data dir: every dir on disk is one
+    // some version lists, the live files or superseded ones
+    assert(unreferencedDirs(streamed).isEmpty, unreferencedDirs(streamed))
+  }
+
+  test("txtable sink: an expected partition the batch does not reach gets no add or remove line") {
+    val path = tmp("txc-unreached")
+    val sink = txSink(path)
+    sink.addBatch(0, cycle(1).unionByName(cycle(1, "srv2")))
+    val before = TxTable.snapshot(path)
+    val (jobs, _) = observed(sink.addBatch(1, cycle(2)))
+    assert(jobs == 2, s"the guess {srv, srv2} held: $jobs jobs")
+    val after = TxTable.snapshot(path)
+    assert(after.version == before.version + 1)
+    assert(after.filesByPartition("srv2") == before.filesByPartition("srv2"))
+    assert(after.filesByPartition("srv") != before.filesByPartition("srv"))
+    val lines = Files.readAllLines(java.nio.file.Paths.get(path, "_log",
+      f"${after.version}%020d.commit")).asScala
+    val srv2Files = before.filesByPartition("srv2").toSet
+    assert(!lines.exists(l => l.startsWith("add\tsrv2\t")), lines)
+    assert(!lines.exists(l => l.startsWith("remove\t") && srv2Files(l.stripPrefix("remove\t"))), lines)
+    assert(unreferencedDirs(path).isEmpty, unreferencedDirs(path))
+    assert(table(path) == expected(2, "srv") ++ expected(1, "srv2"))
+  }
+
+  test("txtable sink: a stream batch that violates a CHECK constraint is refused") {
+    val path = tmp("txc-check")
+    val sink = txSink(path)
+    sink.addBatch(0, cycle(1))
+    sink.addBatch(1, cycle(2))
+    TxTable.addConstraint(spark, path, "bounded", "doubleValue < 1000")
+    val v = TxTable.snapshot(path).version
+    val e = intercept[IllegalStateException](sink.addBatch(2, cycle(20)))
+    assert(e.getMessage.contains("bounded"), e.getMessage)
+    assert(TxTable.snapshot(path).version == v)
+    sink.addBatch(3, cycle(3))
+    assert(table(path) == expected(3, "srv"))
+  }
+
+  test("the stream sinks leave no cached relation or persisted RDD behind, a miss included") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    def drain(start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      val mem = MemoryStream[(String, String, Double, java.sql.Timestamp, java.sql.Timestamp)]
+      val q = start(mem.toDF().toDF(cycle(1).columns.toIndexedSeq: _*))
+      try Seq(cycle(1), cycle(2), cycle(3).unionByName(cycle(3, "srv2"))).foreach { b =>
+        mem.addData(b.as[(String, String, Double, java.sql.Timestamp, java.sql.Timestamp)].collect().toIndexedSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val (viaFormat, viaForeach) = (tmp("txc-clean-format"), tmp("txc-clean-foreach"))
+    drain(_.writeStream.format("txtable").option("path", viaFormat)
+      .option("checkpointLocation", tmp("txc-clean-ckpt1")).start())
+    drain(StreamingPipeline.currentValueSink(_, viaForeach, tmp("txc-clean-ckpt2"),
+      Trigger.ProcessingTime(0)).start())
+    Seq(viaFormat, viaForeach).foreach { p =>
+      assert(table(p) == expected(3, "srv", "srv2"))
+      assert(TxTable.history(p).size == 3)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a sink left a cached relation")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "a sink left a persisted RDD")
   }
 }
