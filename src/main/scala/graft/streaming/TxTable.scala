@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -1456,7 +1458,7 @@ object TxTable {
     * be one of `keys`' prefixes in spirit — here it is the physical
     * pruning unit (the reference's collection-per-server).
     *
-    * A commit discovers its partitions in three Spark jobs and no sort:
+    * One commit is three Spark jobs and no sort:
     *   1. the affected partitions, from one narrow per-task distinct
     *      over the persisted batch (this job also fills the cache);
     *   2. the exchange of `current ∪ batch` on `keys`
@@ -1467,19 +1469,7 @@ object TxTable {
     *   3. the write: one partition goes to a single directory with no
     *      `partitionBy` (no sort before the writer), several fan out
     *      through one `partitionBy` write.
-    *
-    * A stream sink passes `expected`, the partitions its previous
-    * micro-batch touched; the commit then runs jobs 2 and 3 only, with
-    * no persist. It reads the expected partitions' files, and the merged
-    * rows carry a batch-origin marker that the write's own
-    * `Observation` reads before the marker is dropped: a merged row
-    * outside `expected` means the guess missed, so the attempt drops
-    * its data dirs and the commit discovers its partitions as above; an
-    * expected partition with no batch-origin row is neither rewritten
-    * nor listed in the commit. A snapshot with CHECK constraints (the
-    * check reads the batch again) and `keys` without `partitionCol` (a
-    * key could then straddle a partition the guess did not read) take
-    * the discovery path whatever `expected` says.
+    * A stream sink skips job 1 ([[mergeLatestTouched]]).
     *
     * The commit's `op` line records the rows written ([[history]]
     * `detail`), next to the attempt number and ms every op line carries.
@@ -1493,23 +1483,33 @@ object TxTable {
       partitionCol: String = "serverName",
       keys: Seq[String] = Seq("serverName", "tag"),
       order: Seq[String] = Seq("serverTimestamp", "sourceTimestamp"),
-      statsCols: Seq[String] = AutoStats,
-      expected: Seq[String] = Nil): Long =
+      statsCols: Seq[String] = AutoStats): Long =
     mergeLatestTouched(spark, batch, tablePath, partitionCol, keys, order,
-      statsCols, expected)._1
+      statsCols, Nil)._1
 
-  /** Marks the rows of a guessed [[mergeLatest]] commit that came from
-    * the batch; dropped before the write.
-    */
-  private val FromBatch = "__from_batch"
-
-  /** A guessed [[mergeLatest]] attempt's answer when the commit must
-    * discover its partitions instead; no version is negative.
+  /** A guessed [[mergeLatestTouched]] attempt's answer when the commit
+    * must discover its partitions instead; no version is negative.
     */
   private val Rediscover = Long.MinValue
 
-  /** [[mergeLatest]], also returning the partitions the commit rewrote:
-    * the `expected` set a stream sink passes with its next micro-batch.
+  /** [[mergeLatest]] for a stream sink: it also returns the partitions
+    * the batch reached, the `expected` set the sink passes with its next
+    * micro-batch.
+    *
+    * With `expected` the commit runs jobs 2 and 3 only, with no
+    * persist: it reads the expected partitions' files, and the exchange
+    * records the partitions the batch's rows carry in an accumulator
+    * that the write's own job completes. A batch row outside `expected`
+    * means the guess missed, so the attempt drops its data dirs and the
+    * commit discovers its partitions as [[mergeLatest]] does; an
+    * expected partition the batch does not reach is neither rewritten
+    * nor listed in the commit. The set is taken from the batch's rows,
+    * not the merged ones, so a partition whose batch rows all lose to
+    * the table's (a late or replayed batch) is rewritten and stays
+    * expected, exactly as discovery would have it. A snapshot with CHECK
+    * constraints (the check reads the batch again) and `keys` without
+    * `partitionCol` (a key could then straddle a partition the guess did
+    * not read) take the discovery path whatever `expected` says.
     */
   private[streaming] def mergeLatestTouched(
       spark: SparkSession,
@@ -1553,26 +1553,17 @@ object TxTable {
           s"mergeLatest batch has columns ${unknown.mkString(",")} unknown to " +
             "the table — evolve the schema via mergeInto(mergeSchema = true) first")
       }
-      def mark(df: DataFrame, fromBatch: Boolean) =
-        if (guess) df.withColumn(FromBatch, lit(fromBatch)) else df
-      val union = current.fold(mark(in, true))(cur =>
-        mark(cur, false).unionByName(mark(in, true), allowMissingColumns = true))
-      val check = org.apache.spark.sql.Observation()
+      val seen = if (guess) Some(spark.sparkContext.collectionAccumulator[String]) else None
+      val input = seen.fold(in)(recordingValues(in, partitionCol, _))
+      val union = current.fold(input)(_.unionByName(input, allowMissingColumns = true))
       // the kernel is eager (its exchange runs under AQE when called),
       // so an empty discovered set skips it and commits no data, as before
-      def merged = {
-        val m = LastValue.latestPerKeyHashed(union, keys, order,
-          graft.operators.Checkpoints.sizedPartitions(union))
-        if (!guess) m
-        else m.observe(check,
-          collect_set(when(col(FromBatch), col(partitionCol))).as("reached"),
-          count(when(!col(partitionCol).isin(parts: _*), 1)).as("outside"))
-          .drop(FromBatch)
-      }
+      def merged = LastValue.latestPerKeyHashed(union, keys, order,
+        graft.operators.Checkpoints.sizedPartitions(union))
       // data dirs are written before the commit references them
       // (unique names keep them invisible until, and unless, the
       // commit lands)
-      val statCols = eligibleStats(union, statsCols).filterNot(_._1 == FromBatch)
+      val statCols = eligibleStats(union, statsCols)
       val written = parts match {
         case Seq() => Nil
         case Seq(p) =>
@@ -1582,39 +1573,36 @@ object TxTable {
         case _ => writePartitions(merged, partitionCol, parts, tablePath, statCols)
       }
       def drop(rels: Seq[String]): Unit = rels.foreach(r => dropDir(spark, s"$tablePath/$r"))
-      val reached: Option[Set[String]] =
-        if (!guess) Some(parts.toSet)
-        else if (check.get("outside") != 0L) None
-        else Some(check.get("reached").asInstanceOf[Iterable[String]].toSet)
-      reached match {
-        case None =>
-          drop(topDirs(written.map(_._2)))
-          Left(Rediscover)
-        case Some(r) =>
-          val (adds, unreached) = written.partition(a => r(a._1))
-          if (adds.isEmpty) drop(topDirs(unreached.map(_._2))) else drop(unreached.map(_._2))
-          touched = parts.filter(r)
-          // declare the table schema on the first commit that finds none
-          // (r18): an undeclared table pays an eager parquet footer-
-          // inference job on EVERY snapshot read — each commit's
-          // read-modify-write, every time-travel/CDF/keyHistory boundary
-          // state. mergeLatest already refuses undeclared batch columns,
-          // so the merged schema IS the table schema; declared all-nullable
-          // exactly like mergeInto's evolution line (parquet row groups
-          // never prove non-nullability anyway). Value-identical reads:
-          // every data file carries these columns with these types.
-          val schemaLine =
-            if (snap.schemaJson.nonEmpty) Nil
-            else {
-              val nullable = StructType(union.schema.fields
-                .filterNot(_.name == FromBatch).map(_.copy(nullable = true)))
-              Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
-            }
-          Right(Attempt(Seq("rows" -> adds.map(_._4).sum),
-            adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
-              touched.flatMap(p => snap.filesByPartition.getOrElse(p, Nil)).map(f => s"remove\t$f") ++
-              schemaLine,
-            topDirs(adds.map(_._2))))
+      // the write ran the exchange that read the batch, so `seen` holds
+      // every partition the batch's rows carry
+      val reached = seen.fold(parts.toSet)(_.value.asScala.toSet)
+      if (!reached.subsetOf(parts.toSet)) {
+        drop(topDirs(written.map(_._2)))
+        Left(Rediscover)
+      } else {
+        val (adds, unreached) = written.partition(a => reached(a._1))
+        if (adds.isEmpty) drop(topDirs(unreached.map(_._2))) else drop(unreached.map(_._2))
+        touched = parts.filter(reached)
+        // declare the table schema on the first commit that finds none
+        // (r18): an undeclared table pays an eager parquet footer-
+        // inference job on EVERY snapshot read — each commit's
+        // read-modify-write, every time-travel/CDF/keyHistory boundary
+        // state. mergeLatest already refuses undeclared batch columns,
+        // so the merged schema IS the table schema; declared all-nullable
+        // exactly like mergeInto's evolution line (parquet row groups
+        // never prove non-nullability anyway). Value-identical reads:
+        // every data file carries these columns with these types.
+        val schemaLine =
+          if (snap.schemaJson.nonEmpty) Nil
+          else {
+            val nullable = StructType(union.schema.fields.map(_.copy(nullable = true)))
+            Seq(s"schema\t${StatsCodec.escField(nullable.json)}")
+          }
+        Right(Attempt(Seq("rows" -> adds.map(_._4).sum),
+          adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
+            touched.flatMap(p => snap.filesByPartition.getOrElse(p, Nil)).map(f => s"remove\t$f") ++
+            schemaLine,
+          topDirs(adds.map(_._2))))
       }
     }
 
@@ -1656,6 +1644,24 @@ object TxTable {
         (version, touched)
       } finally { cached.unpersist(blocking = false); () }
     }
+  }
+
+  /** `df` as a frame whose evaluation adds each task's distinct values of
+    * the non-null string column `c` to `acc` — the set of them once the
+    * job that reads it has run.
+    */
+  private def recordingValues(df: DataFrame, c: String,
+      acc: org.apache.spark.util.CollectionAccumulator[String]): DataFrame = {
+    val i = df.schema.fieldIndex(c)
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      val seen = scala.collection.mutable.HashSet[String]()
+      it.map { r =>
+        val v = r.getString(i)
+        if (seen.add(v)) acc.add(v)
+        r
+      }
+    }
+    org.apache.spark.sql.graftshim.StreamingShim.ofInternalRows(df.sparkSession, rows, df.schema)
   }
 
   /** Keyed DELETE — the right-to-be-forgotten surface (GDPR erasure;

@@ -45,7 +45,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * no persist and no session-config change — the commit passes its
   * partition count to its own plan, so other queries sharing the session
   * keep their settings while a batch commits. Each batch passes the
-  * partitions the previous one touched as [[TxTable.mergeLatest]]'s
+  * partitions the previous one reached as [[TxTable.mergeLatestTouched]]'s
   * `expected` set; the first batch of a query run, and a batch that
   * reaches a partition outside the set, pay the third job that
   * discovers them. Each commit's `op` line carries the rows written and

@@ -246,6 +246,23 @@ class TxTableCommitSpec extends SparkSpec {
     assert(unreferencedDirs(streamed).isEmpty, unreferencedDirs(streamed))
   }
 
+  test("txtable sink: a batch whose rows all lose to the table's keeps its partition expected") {
+    val (streamed, merged) = (tmp("txc-stale-sink"), tmp("txc-stale-batch"))
+    val sink = txSink(streamed)
+    // cycle 1 is older than cycle 3 on every key: a late or replayed batch
+    val batches = Seq(cycle(2), cycle(3), cycle(1), cycle(4))
+    val jobs = batches.zipWithIndex.map { case (b, i) =>
+      TxTable.mergeLatest(spark, b, merged)
+      observed(sink.addBatch(i, b))._1
+    }
+    assert(jobs == Seq(3, 2, 2, 2), jobs)
+    assert(table(streamed) == table(merged))
+    assert(table(streamed) == expected(4, "srv"))
+    assert(TxTable.history(streamed).map(_.detail("rows")) ==
+      TxTable.history(merged).map(_.detail("rows")))
+    assert(unreferencedDirs(streamed).isEmpty, unreferencedDirs(streamed))
+  }
+
   test("txtable sink: an expected partition the batch does not reach gets no add or remove line") {
     val path = tmp("txc-unreached")
     val sink = txSink(path)
