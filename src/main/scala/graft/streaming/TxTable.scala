@@ -200,9 +200,11 @@ object TxTable {
   /** Sentinel for "record stats for every eligible top-level column" —
     * the default on every write path, the Delta stance: stats are cheap
     * (they ride the write action's own execution via `Dataset.observe`,
-    * zero extra Spark jobs) and the read-side skipping they enable is the
-    * difference between opening 3 files and 30,000 at 100 TB. Pass `Nil`
-    * to suppress, or an explicit column list to restrict.
+    * zero extra Spark jobs up to [[MaxObservedAggregates]]) and the
+    * read-side skipping they enable is the difference between opening 3
+    * files and 30,000 at 100 TB. Pass `Nil` to suppress (no stats field
+    * at all, the row count included), or an explicit column list to
+    * restrict.
     */
   val AutoStats: Seq[String] = Seq("*")
 
@@ -229,14 +231,6 @@ object TxTable {
     names.flatMap(c => types.get(c).flatMap(typOf).map(c -> _))
   }
 
-  /** Write one data directory and return its encoded column stats. The
-    * min/max aggregates ride the write's own action through
-    * `Dataset.observe` — accumulator-merged task-side partials, ZERO
-    * extra Spark jobs, the reason stats-on-write can default on. Min/max
-    * are computed in the column's NATIVE ordering and only the RESULT is
-    * cast to string (a string-side min would be lexicographic and wrong
-    * for numerics). All-null columns observe null and record no entry.
-    */
   /** Pseudo-column under which a file's ROW COUNT rides its stats entry
     * (typ 'N', min == max == count). '#' is illegal in parquet column
     * names Spark writes, so it can never collide with a real column;
@@ -246,51 +240,6 @@ object TxTable {
     * from the log alone, zero data files opened.
     */
   private[graft] val RowsKey = "#rows"
-
-  /** Write `df` as a parquet data dir, returning its encoded stats line
-    * AND the written row count. The count rides the write's own
-    * Observation in BOTH branches — one Spark job total — so callers
-    * never need a separate emptiness/count pre-scan over the data.
-    */
-  private def writeWithStats(
-      df: DataFrame, absPath: String, cols: Seq[(String, Char)]): (String, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = count(lit(1)).cast("string").as("__nrows") +: cols.flatMap { case (c, _) =>
-      Seq(min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c"))
-    }
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(absPath)
-    val row = obs.get
-    val n = row("__nrows").toString
-    val stats =
-      if (cols.isEmpty) ""
-      else StatsCodec.encode(cols.flatMap { case (c, t) =>
-        (Option(row(s"__mn_$c")), Option(row(s"__mx_$c"))) match {
-          case (Some(mn), Some(mx)) =>
-            Some(c -> ColStats(t, mn.toString, mx.toString))
-          case _ => None
-        }
-      }.toMap + (RowsKey -> ColStats('N', n, n)))
-    (stats, n.toLong)
-  }
-
-  /** One partition's data dir for a commit's add list: write it in ONE
-    * Spark job and drop it again if the slice came out EMPTY (the row
-    * count rides the write's Observation and is returned with the
-    * stats). Replaces the
-    * `if (part.isEmpty) None else write` pattern, which cost an extra
-    * job per (partition × commit) on every merge/delete — measured as
-    * the dominant fixture cost of the q251 IVM capstone (VERDICT r16
-    * task #4). Removing the just-written dir is safe: nothing
-    * references it until the commit that would have listed it lands.
-    */
-  private def writePartition(part: DataFrame, absPath: String,
-      statCols: Seq[(String, Char)]): Option[(String, Long)] = {
-    val (stats, n) = writeWithStats(part, absPath, statCols)
-    if (n > 0) Some((stats, n))
-    else { dropDir(part.sparkSession, absPath); None }
-  }
 
   /** Recursively delete a data dir no commit references, through the
     * Hadoop FileSystem for the path's scheme (ADVICE r17): a java.io.File
@@ -309,119 +258,113 @@ object TxTable {
   private def topDirs(rels: Seq[String]): Seq[String] =
     rels.map(_.split('/').take(2).mkString("/")).distinct
 
-  /** Write EVERY affected partition's data dir in ONE Spark job
-    * (VERDICT r17 task #2): the per-partition `writePartition` loop cost
-    * one job per (partition × commit) — fixed job-scheduling overhead
-    * that multiplies on a busy cluster driver, and at a realistic
-    * serverName cardinality turns a commit into hundreds of jobs. Here
-    * the frame fans out through ONE `partitionBy` write on a DUPLICATE
-    * of the partition column (`__p`), so the real column stays inside
-    * the data files and the per-dir layout readers expect is preserved:
-    * each add entry references the `data/<uuid>/__p=<value>` subdir,
-    * which reads exactly like the old flat dir (leaf dirs passed as
-    * roots contribute no inferred partition columns). Per-partition
-    * stats ride the SAME write action as conditional aggregates on one
-    * `Observation` while the expression count stays bounded; past the
-    * bound they come from one read-back aggregation over the written
-    * files (2 jobs total, the [[stageZOrdered]] pattern) instead of
-    * P write jobs. Returns (partition, rel, statsLine, rows) for each
-    * partition that produced rows — empty slices write no dir and get
-    * no add line, exactly like the old empty-slice drop.
-    *
-    * Fallback: hive-style dir naming collapses empty-string and null
-    * partition values into the default-partition token, so an
-    * empty-string partition value routes to the legacy per-partition
-    * writer rather than silently renaming the partition.
+  /** Aggregates one write may observe, n groups × (a count plus a min
+    * and a max per stats column); past it [[writeGroups]] reads its
+    * groups' stats back from the written files.
     */
-  private def writePartitions(
+  private val MaxObservedAggregates = 400
+
+  /** A name for [[writeGroups]]' int group column that none of `df`'s
+    * columns takes.
+    */
+  private def groupName(df: DataFrame): String =
+    Iterator.iterate("__g")(_ + "_").find(g => !df.columns.exists(_.equalsIgnoreCase(g))).get
+
+  /** Write `df` under `tablePath` as one data dir per non-empty group and
+    * return (group, rel, stats, rows) for each, in group order: the one
+    * place TxTable writes data. Each dir is written before any commit
+    * references it; an empty group gets no dir.
+    *
+    * With `n` = 1 the frame is one flat dir `data/<uuid>` (a `group`
+    * column it carries is dropped). With `n` > 1 the frame carries each
+    * row's group, 0 until n, in the int column `group` ([[groupName]]),
+    * and ONE `partitionBy` write on it lands group i at
+    * `data/<uuid>/<group>=i` (the column stays out of the files). Rows
+    * outside 0 until n land in a dir no result names.
+    *
+    * Stats are a count plus a min and a max per eligible column
+    * ([[eligibleStats]]), computed in the column's NATIVE ordering with
+    * only the result cast to string (a string-side min would be
+    * lexicographic and wrong for numerics); an all-null column records
+    * no entry, and no stats columns means no stats field at all. They
+    * ride the write's own action through `Dataset.observe`
+    * (accumulator-merged task-side partials, no extra job) — per group
+    * as conditional aggregates while they number at most
+    * [[MaxObservedAggregates]], else from one aggregate over the written
+    * files grouped by the group column.
+    */
+  private def writeGroups(
       df: DataFrame,
-      partitionCol: String,
-      affected: Seq[String],
+      group: String,
+      n: Int,
       tablePath: String,
-      statCols: Seq[(String, Char)]): Seq[(String, String, String, Long)] = {
-    if (affected.isEmpty) return Nil
-    if (affected.exists(_.isEmpty) || df.columns.contains("__p"))
-      return affected.flatMap { p =>
-        val rel = s"data/${UUID.randomUUID()}"
-        writePartition(df.filter(col(partitionCol) === p),
-          s"$tablePath/$rel", statCols).map { case (st, n) => (p, rel, st, n) }
-      }
+      statsCols: Seq[String]): Seq[(Int, String, String, Long)] = {
+    require(n >= 1, "a write needs at least one group")
     val rel = s"data/${UUID.randomUUID()}"
     val abs = s"$tablePath/$rel"
-    val escaped = affected.map(p =>
-      p -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(p))
-    val nAggs = affected.size * (1 + 2 * statCols.size)
-    val observed: Option[Map[String, (Long, String)]] =
-      if (nAggs > 400) None
-      else {
-        val obs = org.apache.spark.sql.Observation()
-        val aggs = affected.zipWithIndex.flatMap { case (p, i) =>
-          val slice = when(col(partitionCol) === p, lit(1))
-          count(slice).cast("string").as(s"__n_$i") +:
-            statCols.flatMap { case (c, _) =>
-              val v = when(col(partitionCol) === p, col(c))
-              Seq(min(v).cast("string").as(s"__mn_${i}_$c"),
-                max(v).cast("string").as(s"__mx_${i}_$c"))
-            }
-        }
-        df.withColumn("__p", col(partitionCol))
-          .observe(obs, aggs.head, aggs.tail: _*)
-          .write.mode("overwrite").partitionBy("__p").parquet(abs)
+    val data = if (n == 1 && df.columns.contains(group)) df.drop(group) else df
+    val cols = eligibleStats(data, statsCols).filterNot(_._1 == group)
+    // the count and each column's min and max over the rows `in` keeps
+    def aggs(tag: String, in: Column => Column): Seq[Column] =
+      count(in(lit(1))).cast("string").as(s"__n$tag") +: cols.flatMap { case (c, _) =>
+        Seq(min(in(col(c))).cast("string").as(s"__mn${tag}_$c"),
+          max(in(col(c))).cast("string").as(s"__mx${tag}_$c"))
+      }
+    // one group's (rows, stats field) from the aggregates named by `tag`
+    def decode(value: String => Any, tag: String): (Long, String) = {
+      val rows = value(s"__n$tag").toString
+      val stats =
+        if (cols.isEmpty) ""
+        else StatsCodec.encode(cols.flatMap { case (c, t) =>
+          (Option(value(s"__mn${tag}_$c")), Option(value(s"__mx${tag}_$c"))) match {
+            case (Some(mn), Some(mx)) => Some(c -> ColStats(t, mn.toString, mx.toString))
+            case _ => None
+          }
+        }.toMap + (RowsKey -> ColStats('N', rows, rows)))
+      (rows.toLong, stats)
+    }
+    def dir(i: Int) = if (n == 1) rel else s"$rel/$group=$i"
+    val observed = n == 1 || n * (1 + 2 * cols.size) <= MaxObservedAggregates
+    val obs = org.apache.spark.sql.Observation()
+    val metrics =
+      if (!observed) Nil
+      else if (n == 1) aggs("_0", identity)
+      else (0 until n).flatMap(i => aggs(s"_$i", when(col(group) === i, _)))
+    val toWrite = if (observed) data.observe(obs, metrics.head, metrics.tail: _*) else data
+    val writer = toWrite.write.mode("overwrite")
+    (if (n == 1) writer else writer.partitionBy(group)).parquet(abs)
+    val groups =
+      if (observed) {
         val row = obs.get
-        Some(affected.zipWithIndex.map { case (p, i) =>
-          val n = row(s"__n_$i").toString.toLong
-          val stats =
-            if (statCols.isEmpty) ""
-            else StatsCodec.encode(statCols.flatMap { case (c, t) =>
-              (Option(row(s"__mn_${i}_$c")), Option(row(s"__mx_${i}_$c"))) match {
-                case (Some(mn), Some(mx)) =>
-                  Some(c -> ColStats(t, mn.toString, mx.toString))
-                case _ => None
-              }
-            }.toMap + (RowsKey -> ColStats('N', n.toString, n.toString)))
-          p -> (n, stats)
-        }.toMap)
+        (0 until n).map(i => i -> decode(row, s"_$i"))
+      } else {
+        val all = aggs("", identity)
+        df.sparkSession.read.parquet(abs).groupBy(group).agg(all.head, all.tail: _*)
+          .collect() // one row per written group
+          .map(r => r.getAs[Any](group).toString.toInt -> decode(c => r.getAs[Any](c), ""))
+          .filter { case (i, _) => i >= 0 && i < n }.toSeq
       }
-    if (observed.isEmpty)
-      df.withColumn("__p", col(partitionCol))
-        .write.mode("overwrite").partitionBy("__p").parquet(abs)
-    val stats: Map[String, (Long, String)] = observed.getOrElse {
-      // expression-count overflow: one column-pruned aggregation over
-      // the written files (it scans only the stats columns). The cast
-      // pins `__p` to string — partition-type inference would otherwise
-      // read numeric-looking partition values back as ints and break
-      // the map lookup against the raw string values.
-      val back = df.sparkSession.read.parquet(abs)
-      val aggs = count(lit(1)).cast("string").as("__nrows") +:
-        statCols.flatMap { case (c, _) =>
-          Seq(min(col(c)).cast("string").as(s"__mn_$c"),
-            max(col(c)).cast("string").as(s"__mx_$c"))
-        }
-      back.groupBy(col("__p").cast("string").as("__p")).agg(aggs.head, aggs.tail: _*)
-        .collect() // one row per affected partition — bounded
-        .map { r =>
-          val n = r.getAs[String]("__nrows")
-          val m = statCols.flatMap { case (c, t) =>
-            (Option(r.getAs[String](s"__mn_$c")),
-              Option(r.getAs[String](s"__mx_$c"))) match {
-              case (Some(mn), Some(mx)) => Some(c -> ColStats(t, mn, mx))
-              case _ => None
-            }
-          }.toMap + (RowsKey -> ColStats('N', n, n))
-          r.getAs[String]("__p") -> (n.toLong, StatsCodec.encode(m))
-        }.toMap
-    }
-    // only partitions that produced rows have dirs (partitionBy writes
-    // nothing for an empty group) — and only they get add lines; a write
-    // with no rows at all leaves just `abs` and its marker, dropped here
-    val out = escaped.flatMap { case (p, esc) =>
-      stats.get(p).filter(_._1 > 0).map { case (n, st) =>
-        (p, s"$rel/__p=$esc", st, n)
-      }
-    }
+    val out = groups.collect { case (i, (rows, st)) if rows > 0 => (i, dir(i), st, rows) }.sortBy(_._1)
     if (out.isEmpty) dropDir(df.sparkSession, abs)
     out
+  }
+
+  /** [[writeGroups]] with one group per value of the string column `c`
+    * in `values`, returned as (value, rel, stats, rows).
+    */
+  private def writeByValue(
+      df: DataFrame,
+      c: String,
+      values: Seq[String],
+      tablePath: String,
+      statsCols: Seq[String]): Seq[(String, String, String, Long)] = {
+    val g = groupName(df)
+    val grouped =
+      if (values.size == 1) df
+      else df.withColumn(g, (array_position(typedLit(values), col(c)) - 1).cast("int"))
+    writeGroups(grouped, g, values.size, tablePath, statsCols).map { case (i, rel, st, rows) =>
+      (values(i), rel, st, rows)
+    }
   }
 
   /** One `add` log line; stats ride as an optional 4th field so a
@@ -1563,15 +1506,8 @@ object TxTable {
       // data dirs are written before the commit references them
       // (unique names keep them invisible until, and unless, the
       // commit lands)
-      val statCols = eligibleStats(union, statsCols)
-      val written = parts match {
-        case Seq() => Nil
-        case Seq(p) =>
-          val rel = s"data/${UUID.randomUUID()}"
-          writePartition(merged, s"$tablePath/$rel", statCols).toSeq
-            .map { case (st, n) => (p, rel, st, n) }
-        case _ => writePartitions(merged, partitionCol, parts, tablePath, statCols)
-      }
+      val written =
+        if (parts.isEmpty) Nil else writeByValue(merged, partitionCol, parts, tablePath, statsCols)
       def drop(rels: Seq[String]): Unit = rels.foreach(r => dropDir(spark, s"$tablePath/$r"))
       // the write ran the exchange that read the batch, so `seen` holds
       // every partition the batch's rows carry
@@ -1619,12 +1555,7 @@ object TxTable {
       // evaluation of it
       val cached = batch0.persist()
       try {
-        val affected = cached.select(partitionCol).queryExecution.toRdd
-          .mapPartitions { it =>
-            val seen = scala.collection.mutable.HashSet[String]()
-            it.foreach(r => seen += r.getString(0))
-            seen.iterator
-          }.collect().distinct.sorted.toSeq
+        val affected = distinctValues(cached, partitionCol)
         // constraints come from each attempt's snapshot: a concurrently
         // added CHECK must gate the retry, not be bypassed by a pre-loop
         // read (mergeInto re-reads per attempt; here the agg re-runs only
@@ -1645,6 +1576,16 @@ object TxTable {
       } finally { cached.unpersist(blocking = false); () }
     }
   }
+
+  /** The distinct values of the non-null string column `c` of `df`,
+    * sorted: one job, each task's distinct values with no exchange.
+    */
+  private def distinctValues(df: DataFrame, c: String): Seq[String] =
+    df.select(c).queryExecution.toRdd.mapPartitions { it =>
+      val seen = scala.collection.mutable.HashSet[String]()
+      it.foreach(r => seen += r.getString(0))
+      seen.iterator
+    }.collect().distinct.sorted.toSeq
 
   /** `df` as a frame whose evaluation adds each task's distinct values of
     * the non-null string column `c` to `acc` — the set of them once the
@@ -1699,8 +1640,7 @@ object TxTable {
     val del = keysDf.select(keys.map(col): _*)
       .filter(col(partitionCol).isNotNull).distinct().persist()
     try {
-      val affected = del.select(partitionCol).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+      val affected = distinctValues(del, partitionCol)
       // a lost race recomputes from the fresh snapshot: a concurrent
       // writer may have added new rows for the affected partitions, and
       // the delete must never erase or resurrect a racer's rows
@@ -1714,11 +1654,10 @@ object TxTable {
           Left(snap.version)
         else {
           val kept = current.join(del, keys, "left_anti")
-          val statCols = eligibleStats(kept, statsCols)
           // sized rewrite on a fork of the shared session (Checkpoints.sizedLoop)
           val adds = graft.operators.Checkpoints.sizedLoop(kept) { loop =>
-            writePartitions(graft.operators.Checkpoints.rebind(loop, kept),
-              partitionCol, affected, tablePath, statCols)
+            writeByValue(graft.operators.Checkpoints.rebind(loop, kept),
+              partitionCol, affected, tablePath, statsCols)
           }
           Right(Attempt(Nil,
             adds.map { case (p, rel, st, _) => addLine(p, rel, st) } ++
@@ -1866,9 +1805,7 @@ object TxTable {
         }
         val materialized = newData.persist()
         enforceConstraints(materialized, snap.constraints, "mergeInto")
-        val statCols = eligibleStats(materialized, statsCols)
-        val adds = writePartitions(materialized, partitionCol, affected,
-          tablePath, statCols)
+        val adds = writeByValue(materialized, partitionCol, affected, tablePath, statsCols)
         materialized.unpersist(blocking = false)
         // an evolving merge declares the widened schema (all-nullable —
         // pre-evolution files must read with nulls, and parquet row
@@ -2398,8 +2335,7 @@ object TxTable {
     val batchLatest = LastValue.latestPerKey(
       batch.filter(col(partitionCol).isNotNull), keys, order).persist()
     try {
-      val affected = batchLatest.select(partitionCol).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+      val affected = distinctValues(batchLatest, partitionCol)
       if (affected.isEmpty) return snapshot(tablePath).version
       // enforced again inside the commit loop iff the constraint set
       // changed under a lost race — a concurrently added CHECK must gate
@@ -2407,13 +2343,7 @@ object TxTable {
       // here leaks only vacuumable orphans)
       var enforcedFor = snapshot(tablePath).constraints
       enforceConstraints(batchLatest, enforcedFor, "upsertDelta")
-      // no isEmpty guard (unlike mergeLatest): `affected` IS the distinct
-      // partition set of batchLatest, so every filtered slice is
-      // non-empty by construction — the check would cost one extra Spark
-      // job per partition on the hot O(batch) commit path
-      val statCols = eligibleStats(batchLatest, statsCols)
-      val adds = writePartitions(batchLatest, partitionCol, affected,
-        tablePath, statCols)
+      val adds = writeByValue(batchLatest, partitionCol, affected, tablePath, statsCols)
       commit(tablePath, "upsertDelta") { snap =>
         if (snap.constraints != enforcedFor) {
           enforceConstraints(batchLatest, snap.constraints, "upsertDelta")
@@ -2475,26 +2405,55 @@ object TxTable {
       statsCols: Seq[String] = AutoStats): Long = {
     require(minFiles >= 2, "compacting below 2 directories is a no-op")
     commit(tablePath, "compact") { snap =>
-      val victims = snap.filesByPartition.filter(_._2.size >= minFiles)
-      // rewrites land BEFORE the commit references them (invisible until
-      // the publish wins). Stats are RECOMPUTED on the collapsed data
-      // (not merged from the victims' entries): superseded rows drop
-      // out, so recomputed ranges are tighter — merging would only widen
-      // them.
-      val adds = victims.toSeq.sortBy(_._1).map { case (p, files) =>
-        val rel = s"data/${UUID.randomUUID()}"
-        val folded = LastValue.latestPerKey(
-            snapReader(spark, snap).parquet(files.map(f => resolveRef(tablePath, f)): _*), keys, order)
-          .coalesce(1) // one server's live keys: bounded by tag cardinality
-        (p, rel, files,
-          writeWithStats(folded, s"$tablePath/$rel", eligibleStats(folded, statsCols))._1)
+      val victims = snap.filesByPartition.filter(_._2.size >= minFiles).toSeq.sortBy(_._1)
+      if (victims.isEmpty) Left(-1L)
+      else {
+        // one write for every victim, one group each: a victim's rows
+        // carry its index, which keys the fold and sends the victim to one
+        // task (one server's live keys: bounded by tag cardinality), so
+        // its dir holds one file. Rewrites land BEFORE the commit
+        // references them (invisible until the publish wins). Stats are
+        // RECOMPUTED on the collapsed data (not merged from the victims'
+        // entries): superseded rows drop out, so recomputed ranges are
+        // tighter — merging would only widen them.
+        val reads = victims.map { case (_, files) =>
+          snapReader(spark, snap).parquet(files.map(f => resolveRef(tablePath, f)): _*)
+        }
+        val g = groupName(reads.head)
+        val tagged = reads.zipWithIndex.map { case (r, i) => r.withColumn(g, lit(i)) }
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+          .repartition(victims.size, col(g))
+        val adds = writeGroups(LastValue.latestPerKey(tagged, keys :+ g, order), g,
+          victims.size, tablePath, statsCols)
+        Right(Attempt(Nil,
+          adds.map { case (i, rel, st, _) => addLine(victims(i)._1, rel, st) } ++
+            victims.flatMap(_._2).map(f => s"remove\t$f"),
+          topDirs(adds.map(_._2))))
       }
-      if (adds.isEmpty) Left(-1L)
-      else Right(Attempt(Nil,
-        adds.map { case (p, rel, _, st) => addLine(p, rel, st) } ++
-          adds.flatMap(_._3).map(f => s"remove\t$f"),
-        adds.map(_._2)))
     }
+  }
+
+  /** Stage one z-ordered write under `tablePath`: `buckets` groups,
+    * each a contiguous Morton-code range of (xCol, yCol), returned as
+    * [[writeGroups]] returns them — shared by [[ingestZOrdered]] (new
+    * data) and [[optimizeZOrder]] (re-clustering live files). The
+    * staged directories are invisible until a commit references them.
+    */
+  private def stageZOrdered(
+      df: DataFrame,
+      tablePath: String,
+      xCol: String,
+      yCol: String,
+      buckets: Int,
+      statsCols: Seq[String]): Seq[(Int, String, String, Long)] = {
+    require(buckets >= 1, "buckets must be >= 1")
+    val sorted = df.withColumn("__z", graft.operators.Layout.zorder16(col(xCol), col(yCol)))
+      .repartitionByRange(buckets, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+    // each range partition is one bucket; an empty one writes no dir
+    val g = groupName(sorted)
+    writeGroups(sorted.withColumn(g, spark_partition_id()), g, buckets, tablePath, statsCols)
   }
 
   /** Z-order bulk ingest — the write side of multi-dimension data
@@ -2507,70 +2466,12 @@ object TxTable {
     *
     * Scale shape (one pass over the batch, no global sort):
     * `repartitionByRange` on the z-value (sampled bounds), sort within
-    * partitions, and ONE fanned `partitionBy` write — each task writes
-    * exactly its own bucket directory. Stats are computed by one
-    * column-pruned aggregation over the freshly-written files (the
-    * fan-out write's per-task observe streams would interleave buckets,
-    * so read-back is the correct per-bucket aggregation; it scans only
-    * the stats columns). Publication is a normal optimistic commit —
-    * z-ordered ingests compose with deltas, compaction, vacuum and time
-    * travel like any other writer.
+    * partitions, and ONE fanned `partitionBy` write on the bucket — each
+    * task writes exactly its own bucket directory. Each bucket's stats
+    * ride that write ([[writeGroups]]). Publication is a normal
+    * optimistic commit — z-ordered ingests compose with deltas,
+    * compaction, vacuum and time travel like any other writer.
     */
-  /** Stage one z-ordered write under `tablePath` and return
-    * (bucket, rel, encodedStats) — shared by [[ingestZOrdered]] (new
-    * data) and [[optimizeZOrder]] (re-clustering live files). The
-    * staged directories are invisible until a commit references them.
-    */
-  private def stageZOrdered(
-      spark: SparkSession,
-      df: DataFrame,
-      tablePath: String,
-      xCol: String,
-      yCol: String,
-      buckets: Int,
-      statsCols: Seq[String]): Seq[(Int, String, String)] = {
-    require(buckets >= 1, "buckets must be >= 1")
-    val staged = s"data/${UUID.randomUUID()}"
-    val abs = s"$tablePath/$staged"
-    df.withColumn("__z", graft.operators.Layout.zorder16(col(xCol), col(yCol)))
-      .repartitionByRange(buckets, col("__z"))
-      .sortWithinPartitions("__z")
-      .withColumn("__b", spark_partition_id())
-      .drop("__z")
-      .write.partitionBy("__b").mode("overwrite").parquet(abs)
-    // bucket dirs actually written (range partitions can be empty when
-    // distinct z-values < buckets)
-    val bucketDirs = Option(new File(abs).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("__b="))
-      .map(f => f.getName.stripPrefix("__b=").toInt -> s"$staged/${f.getName}")
-      .sortBy(_._1)
-    val back = spark.read.parquet(abs)
-    val cols = eligibleStats(back.drop("__b"), statsCols)
-    val statsByBucket: Map[Int, String] =
-      if (cols.isEmpty) Map.empty
-      else {
-        val aggs = count(lit(1)).cast("string").as("__nrows") +:
-          cols.flatMap { case (c, _) =>
-            Seq(min(col(c)).cast("string").as(s"__mn_$c"),
-              max(col(c)).cast("string").as(s"__mx_$c"))
-          }
-        back.groupBy(col("__b")).agg(aggs.head, aggs.tail: _*)
-          .collect() // one row per bucket — bounded by `buckets`
-          .map { r =>
-            val n = r.getAs[String]("__nrows")
-            val m = cols.flatMap { case (c, t) =>
-              (Option(r.getAs[String](s"__mn_$c")),
-                Option(r.getAs[String](s"__mx_$c"))) match {
-                case (Some(mn), Some(mx)) => Some(c -> ColStats(t, mn, mx))
-                case _ => None
-              }
-            }.toMap + (RowsKey -> ColStats('N', n, n))
-            r.getAs[Number]("__b").intValue() -> StatsCodec.encode(m)
-          }.toMap
-      }
-    bucketDirs.map { case (b, rel) => (b, rel, statsByBucket.getOrElse(b, "")) }
-  }
-
   def ingestZOrdered(
       spark: SparkSession,
       df: DataFrame,
@@ -2583,13 +2484,13 @@ object TxTable {
     // re-enforced in the commit loop iff the set changes under a race
     var enforcedFor = snapshot(tablePath).constraints
     enforceConstraints(df, enforcedFor, "ingestZOrdered")
-    val bucketDirs = stageZOrdered(spark, df, tablePath, xCol, yCol, buckets, statsCols)
+    val bucketDirs = stageZOrdered(df, tablePath, xCol, yCol, buckets, statsCols)
     commit(tablePath, "ingestZOrdered") { snap =>
       if (snap.constraints != enforcedFor) {
         enforceConstraints(df, snap.constraints, "ingestZOrdered")
         enforcedFor = snap.constraints
       }
-      Right(Attempt(Nil, bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) }))
+      Right(Attempt(Nil, bucketDirs.map { case (_, rel, st, _) => addLine(partition, rel, st) }))
     }
   }
 
@@ -2621,9 +2522,9 @@ object TxTable {
       else {
         val df = snapReader(spark, snap)
           .parquet(victims.map(f => resolveRef(tablePath, f)): _*)
-        val bucketDirs = stageZOrdered(spark, df, tablePath, xCol, yCol, buckets, statsCols)
+        val bucketDirs = stageZOrdered(df, tablePath, xCol, yCol, buckets, statsCols)
         Right(Attempt(Nil,
-          bucketDirs.map { case (_, rel, st) => addLine(partition, rel, st) } ++
+          bucketDirs.map { case (_, rel, st, _) => addLine(partition, rel, st) } ++
             victims.map(f => s"remove\t$f"),
           topDirs(bucketDirs.map(_._2))))
       }
@@ -2643,12 +2544,12 @@ object TxTable {
       f.delete()
     }
     // an add entry may reference a WHOLE top-level dir (`data/<uuid>`,
-    // the flat layout) or a SUBDIR of one (`data/<uuid>/__p=<v>` from
-    // the fanned partitionBy write, `data/<uuid>/__b=<n>` from z-order
-    // staging — both predate-safe: a top-level dir is live while ANY
-    // nested reference survives). The old top-level-only membership
-    // check deleted a z-ordered table's entire uuid dir out from under
-    // its live nested references. Fully-dead top dirs go whole;
+    // a one-group write) or a SUBDIR of one (`data/<uuid>/__g=<i>`, one
+    // group of a fanned write; older tables also hold `__p=<value>` and
+    // `__b=<bucket>` subdirs): a top-level dir is live while ANY nested
+    // reference survives. The old top-level-only membership check
+    // deleted a z-ordered table's entire uuid dir out from under its
+    // live nested references. Fully-dead top dirs go whole;
     // partially-dead ones shed exactly their unreferenced subdirs.
     val dataGone = Option(dataRoot.listFiles()).toSeq.flatten
       .filter(d => d.isDirectory)

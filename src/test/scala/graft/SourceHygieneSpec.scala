@@ -112,6 +112,24 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(knobs.isEmpty, s"maxRetries parameters declared:\n" + knobs.mkString("\n"))
   }
 
+  test("TxTable writes data directories at one site") {
+    // data dirs and their stats come from TxTable.writeGroups alone; a
+    // second writer would bring back its own stats builder and decoder.
+    // A DataFrameWriter is `.write` followed by a dot or a line break
+    // (`Files.write(`, `.writeTo(` and `.writeStream` are not)
+    val writerCall = """\.write(\.|\s*$)""".r
+    val site = "val writer = toWrite.write.mode(\"overwrite\")"
+    val f = Paths.get("src/main/scala/graft/streaming/TxTable.scala")
+    val hits = Files.readAllLines(f).asScala.zipWithIndex.collect {
+      case (line, i) if writerCall.findFirstIn(line).isDefined => (line.trim, s"$f:${i + 1}: ${line.trim}")
+    }
+    assert(hits.count(_._1 == site) == 1, "the scan no longer finds writeGroups' write")
+    val offenders = hits.filter(_._1 != site).map(_._2)
+    assert(offenders.isEmpty,
+      s"data written outside TxTable.writeGroups (route the write through it):\n" +
+        offenders.mkString("\n"))
+  }
+
   test("engine code builds graft expressions directly, never through the session registry") {
     // a helper that resolves by name fails on any session where nobody
     // registered it first; only the one function table and its SQL

@@ -321,4 +321,42 @@ class TxTableCommitSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "a sink left a cached relation")
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "a sink left a persisted RDD")
   }
+
+  test("an empty-string partition value commits like any other: one write per commit, same reads and stats") {
+    // mergeLatest, deleteKeys and mergeInto on partitions `v` and "srv":
+    // the table's path and each op's job sites
+    def run(v: String): (String, Seq[Seq[String]]) = {
+      val path = tmp("txc-empty")
+      val ops: Seq[() => Long] = Seq(
+        () => TxTable.mergeLatest(spark, cycle(1, v).unionByName(cycle(1)), path),
+        () => TxTable.mergeLatest(spark, cycle(2, v).unionByName(cycle(2)), path),
+        () => TxTable.deleteKeys(spark, Seq((v, "tag1"), ("srv", "tag2")).toDF("serverName", "tag"), path),
+        () => TxTable.mergeInto(spark, cycle(3, v).filter(col("tag") === "tag3")
+          .unionByName(cycle(3, v).filter(col("tag") === "tag4").withColumn("tag", lit("extra")))
+          .unionByName(cycle(3).filter(col("tag") === "tag5")),
+          path, updateExprs = Map("doubleValue" -> col("s.doubleValue"))))
+      val sites = ops.zipWithIndex.map { case (op, i) =>
+        val (version, s) = jobSitesOf(op())
+        assert(version == i.toLong)
+        // every add line of the commit names a dir of one write
+        val adds = Files.readAllLines(java.nio.file.Paths.get(path, "_log", f"$version%020d.commit"))
+          .asScala.filter(_.startsWith("add\t")).map(_.split("\t")(2))
+        assert(adds.size == 2 && adds.map(_.split('/').take(2).mkString("/")).distinct.size == 1,
+          s"op $i with '$v': $adds")
+        s.sorted
+      }
+      (path, sites)
+    }
+    val ((empty, emptySites), (named, namedSites)) = (run(""), run("a"))
+    assert(emptySites == namedSites)
+    def renamed(df: DataFrame, c: String) =
+      df.withColumn(c, when(col(c) === "", "a").otherwise(col(c))).collect().toSet
+    (0L to 3L).foreach { v =>
+      assert(renamed(TxTable.readAt(spark, empty, v).get, "serverName") ==
+        TxTable.readAt(spark, named, v).get.collect().toSet, s"version $v")
+      def census(p: String) = TxTable.statsAggregateByPartition(spark, p, Seq("tag", "doubleValue"), v)
+      assert(renamed(census(empty), "partition") == census(named).collect().toSet, s"version $v")
+    }
+    assert(TxTable.read(spark, empty).get.filter(col("serverName") === "").count() == 64)
+  }
 }

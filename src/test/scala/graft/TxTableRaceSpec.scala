@@ -93,7 +93,7 @@ class TxTableRaceSpec extends SparkSpec {
     // race is real, prove it removed something the old snapshot used
     val gone = TxTable.vacuum(path, minAgeMs = 0L).filter(_.startsWith("data/"))
     // a gone entry may be a whole top-level dir SUBSUMING nested add
-    // refs (`data/<uuid>` covering `data/<uuid>/__p=<v>` from the fanned
+    // refs (`data/<uuid>` covering `data/<uuid>/__g=<i>` from the fanned
     // partitionBy write) — vacuum reports the dir it deleted, the old
     // references live one level below it
     assert(gone.nonEmpty && gone.forall(g =>

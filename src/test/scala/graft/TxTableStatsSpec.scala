@@ -499,4 +499,120 @@ class TxTableStatsSpec extends SparkSpec {
     assert(TxTable.read(spark, table,
       pruneBy = Seq(ColRange("doubleValue", Some(6.0), Some(9.0)))).get.count() === 2)
   }
+
+  // ======================= the data-directory writer =======================
+
+  /** Every live file's recorded stats against a plain read of its ref:
+    * the row count, and the min/max of each column of a stats-eligible
+    * type that holds a non-null value; no entry for any other column.
+    */
+  private def assertStatsMatchData(dir: String, op: String): Unit = {
+    import org.apache.spark.sql.types._
+    val snap = TxTable.snapshot(dir)
+    assert(snap.allFiles.nonEmpty, s"$op left no files")
+    snap.allFiles.foreach { f =>
+      val st = snap.statsOf(f)
+      val df = spark.read.parquet(s"$dir/$f")
+      val eligible = df.schema.fields.toSeq.filter(f => f.dataType match {
+        case _: NumericType => true
+        case StringType | BooleanType | DateType | TimestampType | TimestampNTZType => true
+        case _ => false
+      }).map(_.name)
+      val row = df.agg(count(lit(1)).cast("string"), eligible.flatMap(c =>
+        Seq(min(col(c)).cast("string"), max(col(c)).cast("string"))): _*).head()
+      val n = row.getString(0)
+      assert(st.get(TxTable.RowsKey) === Some(ColStats('N', n, n)), s"$op: row count of $f")
+      val want = eligible.zipWithIndex.flatMap { case (c, i) =>
+        Option(row.getString(1 + 2 * i)).map(mn => c -> (mn, row.getString(2 + 2 * i)))
+      }.toMap
+      assert((st - TxTable.RowsKey).map { case (c, cs) => c -> (cs.min, cs.max) } === want,
+        s"$op: stats of $f")
+    }
+  }
+
+  test("every write op's add lines carry the count/min/max of the data they reference") {
+    val base = tmp("tx-stats-ops")
+    val merged = s"$base/merge"
+    // the value column is null in all of srvB's first rows: no entry there
+    val b1 = txBatch(("srvA", "t1", "2024-01-01 10:00:00", 1.5),
+      ("srvA", "t2", "2024-01-01 10:00:01", -4.0))
+    TxTable.mergeLatest(spark, b1, merged)
+    assertStatsMatchData(merged, "mergeLatest, one partition")
+    TxTable.mergeLatest(spark, txBatch(("srvA", "t1", "2024-01-02 10:00:00", 8.0),
+      ("srvB", "t3", "2024-01-02 10:00:00", 2.0), ("srvB", "t4", "2024-01-02 10:00:05", 3.0))
+      .withColumn("doubleValue", when(col("serverName") === "srvB", lit(null)).otherwise(col("doubleValue"))),
+      merged)
+    assertStatsMatchData(merged, "mergeLatest, two partitions")
+    TxTable.deleteKeys(spark, Seq(("srvA", "t2"), ("srvB", "t4")).toDF("serverName", "tag"), merged)
+    assertStatsMatchData(merged, "deleteKeys")
+    TxTable.mergeInto(spark, txBatch(("srvA", "t1", "2024-01-03 10:00:00", 11.0),
+      ("srvB", "t5", "2024-01-03 10:00:00", -7.25), ("srvC", "t6", "2024-01-03 10:00:00", 0.5)),
+      merged, updateExprs = Map("doubleValue" -> col("s.doubleValue")))
+    assertStatsMatchData(merged, "mergeInto")
+
+    val delta = s"$base/delta"
+    (1 to 3).foreach { c =>
+      TxTable.upsertDelta(spark, txBatch(("srvA", "t1", f"2024-01-0$c 10:00:00", c * 1.0),
+        ("srvB", s"t$c", f"2024-01-0$c 10:00:00", c * -2.0)), delta)
+      assertStatsMatchData(delta, s"upsertDelta $c")
+    }
+    assert(TxTable.compact(spark, delta) >= 0L)
+    assert(TxTable.snapshot(delta).filesByPartition.values.forall(_.size == 1))
+    assertStatsMatchData(delta, "compact")
+
+    val z = s"$base/z"
+    val grid = spark.range(0, 1024).select((col("id") % 32).as("x"), (col("id") / 32).cast("long").as("y"),
+      (col("id") * 7 % 101).as("v"), concat(lit("s"), col("id") % 13).as("s"))
+    TxTable.ingestZOrdered(spark, grid, z, "x", "y", buckets = 4)
+    assert(TxTable.snapshot(z).allFiles.size == 4)
+    assertStatsMatchData(z, "ingestZOrdered")
+    TxTable.optimizeZOrder(spark, z, "v", "x", buckets = 3)
+    assert(TxTable.snapshot(z).allFiles.size == 3)
+    assertStatsMatchData(z, "optimizeZOrder")
+  }
+
+  /** `servers` opcsim servers' normalized readings, four tags of each
+    * declared type per server, at poll `cycle`.
+    */
+  private def opcsim(servers: Seq[String], cycle: Int) = {
+    val types = Seq("Double", "Int32", "Boolean", "String", "Single", "DateTime")
+    val t = ts(f"2024-01-01 00:00:$cycle%02d")
+    val raw = for {
+      s <- servers; (dt, k) <- types.zipWithIndex; i <- 0 until 4
+    } yield (s, s"tag$k$i", s"ns=2;s=$dt$i", dt,
+      graft.sources.OpcSimSource.rawValue(dt, k * 4 + i, cycle), t, t, 192)
+    graft.functions.Normalize.normalize(raw.toDF("serverName", "tag", "opcPath", "dataType",
+      "rawValue", "sourceTimestamp", "serverTimestamp", "quality"))
+  }
+
+  test("a mergeLatest past the observed-aggregate bound records what smaller commits record") {
+    val servers = (1 to 30).map(i => f"srv$i%02d")
+    val base = tmp("tx-stats-bound")
+    val (bulk, chunked, bare) = (s"$base/bulk", s"$base/chunked", s"$base/bare")
+    Seq(1, 2).foreach { c =>
+      TxTable.mergeLatest(spark, opcsim(servers, c), bulk)
+      servers.grouped(4).foreach(g => TxTable.mergeLatest(spark, opcsim(g, c), chunked))
+    }
+    val (b, s) = (TxTable.snapshot(bulk), TxTable.snapshot(chunked))
+    val statCols = b.statsOf(b.allFiles.head).keySet - TxTable.RowsKey
+    // 30 groups of a count plus a min and a max per column: read back
+    assert(servers.size * (1 + 2 * statCols.size) > 400, statCols)
+    assert(TxTable.history(bulk).last.detail("rows") == opcsim(servers, 2).count().toString)
+    def rows(d: String) = TxTable.read(spark, d).get
+    assert(rows(bulk).exceptAll(rows(chunked)).isEmpty && rows(chunked).exceptAll(rows(bulk)).isEmpty)
+    assert(b.filesByPartition.keySet == servers.toSet)
+    servers.foreach { p =>
+      assert(b.statsOf(b.filesByPartition(p).head) === s.statsOf(s.filesByPartition(p).head), p)
+    }
+    val census = (d: String) => TxTable.statsAggregateByPartition(spark, d,
+      Seq("tag", "doubleValue", "serverTimestamp")).collect().toSeq
+    assert(census(bulk) === census(chunked))
+    assertStatsMatchData(bulk, "mergeLatest past the bound")
+    // statsCols = Nil: no stats field at all, the row count included
+    TxTable.mergeLatest(spark, opcsim(servers, 1), bare, statsCols = Nil)
+    val adds = Files.readAllLines(java.nio.file.Paths.get(bare, "_log", f"${0}%020d.commit"))
+      .toArray.map(_.toString).filter(_.startsWith("add\t"))
+    assert(adds.length == servers.size)
+    adds.foreach(l => assert(l.split("\t", -1).length == 3, l))
+  }
 }
