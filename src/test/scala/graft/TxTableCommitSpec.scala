@@ -324,8 +324,9 @@ class TxTableCommitSpec extends SparkSpec {
 
   test("an empty-string partition value commits like any other: one write per commit, same reads and stats") {
     // mergeLatest, deleteKeys and mergeInto on partitions `v` and "srv":
-    // the table's path and each op's job sites
-    def run(v: String): (String, Seq[Seq[String]]) = {
+    // the table's path and each op's job count (counts, not call sites:
+    // a job started from an AQE stage thread is named by that thread)
+    def run(v: String): (String, Seq[Int]) = {
       val path = tmp("txc-empty")
       val ops: Seq[() => Long] = Seq(
         () => TxTable.mergeLatest(spark, cycle(1, v).unionByName(cycle(1)), path),
@@ -335,7 +336,7 @@ class TxTableCommitSpec extends SparkSpec {
           .unionByName(cycle(3, v).filter(col("tag") === "tag4").withColumn("tag", lit("extra")))
           .unionByName(cycle(3).filter(col("tag") === "tag5")),
           path, updateExprs = Map("doubleValue" -> col("s.doubleValue"))))
-      val sites = ops.zipWithIndex.map { case (op, i) =>
+      val jobs = ops.zipWithIndex.map { case (op, i) =>
         val (version, s) = jobSitesOf(op())
         assert(version == i.toLong)
         // every add line of the commit names a dir of one write
@@ -343,12 +344,12 @@ class TxTableCommitSpec extends SparkSpec {
           .asScala.filter(_.startsWith("add\t")).map(_.split("\t")(2))
         assert(adds.size == 2 && adds.map(_.split('/').take(2).mkString("/")).distinct.size == 1,
           s"op $i with '$v': $adds")
-        s.sorted
+        s.size
       }
-      (path, sites)
+      (path, jobs)
     }
-    val ((empty, emptySites), (named, namedSites)) = (run(""), run("a"))
-    assert(emptySites == namedSites)
+    val ((empty, emptyJobs), (named, namedJobs)) = (run(""), run("a"))
+    assert(emptyJobs == namedJobs)
     def renamed(df: DataFrame, c: String) =
       df.withColumn(c, when(col(c) === "", "a").otherwise(col(c))).collect().toSet
     (0L to 3L).foreach { v =>
